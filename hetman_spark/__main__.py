@@ -49,8 +49,6 @@ def main(argv: list[str] | None = None) -> int:
     r.add_argument("--payloads", default=None,
                    help="aggregator mode from raw Loki-style payload files (.json/.json.gz): "
                         "decode + adapt, then union as the labeled source")
-    r.add_argument("--jvm-parse", action="store_true",
-                   help="use pure-JVM regex extraction instead of the pandas UDF")
     r.add_argument("--dedup", action="store_true",
                    help="exact content-dedup stage after parse (keep the min-url "
                         "record per distinct text; corpus-build mode)")
@@ -220,7 +218,6 @@ def main(argv: list[str] | None = None) -> int:
                 salt_buckets=salt_buckets,
                 splits_per_commit=splits_per_commit,
                 max_splits=args.max_splits,
-                use_pandas_udf=not args.jvm_parse,
                 presalt=args.presalt,
                 labeled_input_path=labeled_input,
                 config_reload_path=args.config if args.reload_config and args.config else None,

@@ -189,15 +189,14 @@ def main() -> None:
             from pyspark.sql import functions as F
 
             from hetman_spark.plans.pipeline import build_parsed, build_routed, tags_disjoint
-            from hetman_spark.sources.lookup import DEFAULT_SINKS, lang_lookup, routes_df
+            from hetman_spark.sources.lookup import DEFAULT_SINKS, lang_lookup
 
             src = spark.read.parquet(args.input)
             lookup = lang_lookup(spark)
-            routes = routes_df(spark)
 
             def flow(frame):
                 reb = build_parsed(frame).drop("html").hint("rebalance", "split_id")
-                return build_routed(reb.join(F.broadcast(lookup), "lang", "left"), routes,
+                return build_routed(reb.join(F.broadcast(lookup), "lang", "left"),
                                     disjoint_tags=tags_disjoint(DEFAULT_SINKS),
                                     sinks=DEFAULT_SINKS)
 
@@ -229,13 +228,12 @@ def main() -> None:
             from pyspark.sql import functions as F
 
             from hetman_spark.plans.pipeline import build_parsed, build_routed, tags_disjoint
-            from hetman_spark.sources.lookup import DEFAULT_SINKS, lang_lookup, routes_df
+            from hetman_spark.sources.lookup import DEFAULT_SINKS, lang_lookup
 
-            _lk, _rt = lang_lookup(spark), routes_df(spark)
             build_routed(
                 build_parsed(spark.read.parquet(args.input)).drop("html")
-                .hint("rebalance", "split_id").join(F.broadcast(_lk), "lang", "left"),
-                _rt, disjoint_tags=tags_disjoint(DEFAULT_SINKS), sinks=DEFAULT_SINKS,
+                .hint("rebalance", "split_id").join(F.broadcast(lang_lookup(spark)), "lang", "left"),
+                disjoint_tags=tags_disjoint(DEFAULT_SINKS), sinks=DEFAULT_SINKS,
             ).write.format("noop").mode("overwrite").save()
 
         t0 = time.time()

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from hetman_spark.operators.multiline import stitch_multiline
 from hetman_spark.operators.parse import parse_grok
 from hetman_spark.operators.route import route_explode
+from hetman_spark.sources.lookup import local_table
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -174,7 +175,8 @@ GROUP BY r_name
 
 def q_route_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
-    routes = spark.createDataFrame(
+    routes = local_table(
+        spark,
         [
             ("sink_all", "*", "*"),
             ("sink_urgent", "o_orderpriority", "1-URGENT"),
@@ -472,7 +474,8 @@ FROM fan GROUP BY 1
 
 def q_route_fanout_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
-    routes = spark.createDataFrame(
+    routes = local_table(
+        spark,
         [
             ("sink_all", "*", "*"),
             ("sink_urgent", "o_orderpriority", "1-URGENT"),

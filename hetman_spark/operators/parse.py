@@ -10,9 +10,9 @@ Here each format is a vectorized column transform:
 
 - nginx/grok: the $var pattern is translated to a regex once on the
   driver; extraction happens JVM-side with one regexp_extract per
-  field (whole-stage codegen, no Python), or in one pass per Arrow
-  batch via a pandas UDF (pd.Series.str.extract) — both produce the
-  same struct.
+  field (whole-stage codegen, no Python).  The webtext pipeline splices
+  the same regex into its Arrow/RE2 html kernel
+  (operators/html.py:make_full_extract_udf).
 - JSON: from_json with an explicit all-string schema (production
   path — the "strings only" rule enforced by schema choice), plus a
   pandas UDF replicating the reference's dynamic strings-only filter
@@ -89,9 +89,11 @@ def _grok_type(fields: list[str]) -> T.StructType:
 
 
 def make_grok_pandas_udf(pattern: str):
-    """Arrow-batched grok parse: one ``pd.Series.str.extract`` per
-    batch (the north-star "vectorized pandas/Arrow UDF" path — no
-    per-row Python; pandas runs the regex over the whole batch in C).
+    """Grok parse as a pandas UDF: one ``pd.Series.str.extract`` per
+    Arrow batch.  Batched at the UDF boundary only — pandas 2.2 applies
+    the compiled regex with a Python loop over the rows, so this is
+    per-row Python; the pipeline uses the Arrow/RE2 kernel in
+    operators/html.py instead.
 
     Returns (udf, field_names); udf(line) yields the same struct as
     :func:`parse_grok`.

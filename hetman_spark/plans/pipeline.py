@@ -10,8 +10,8 @@ append manifest entry".
 
 Stages and their reference analogs:
   read parquet (pruned by manifest anti-join) . tailer + offset seek
-  extract_html_fields (pandas UDF)            . Parser.Run (P1)
-  grok parse of the embedded log line         . Parser.Run (P1)
+  make_full_extract_udf (Arrow UDF: utf-8     . Parser.Run (P1)
+    cast + RE2 html/grok regex, per batch)
   apply_modifier                              . Modifier.Run (M1-M3)
   enrich_with_lookup (salted + broadcast)     . add-fields w/ lookup
   route_explode + with_sink_tags              . Modifier fan-out + Loki
@@ -39,9 +39,8 @@ from pyspark.sql import functions as F
 
 from hetman_spark.config import ModifierConfig, SinkConfig
 from hetman_spark.operators.enrich import enrich_with_lookup
-from hetman_spark.operators.html import make_full_extract_udf, with_html_fields
+from hetman_spark.operators.html import make_full_extract_udf
 from hetman_spark.operators.modify import apply_modifier
-from hetman_spark.operators.parse import parse_grok
 from hetman_spark.operators.route import (
     route_explode,
     route_explode_static,
@@ -52,7 +51,7 @@ from hetman_spark.plans.checkpoint import (
     commit_split,
     committed_splits,
 )
-from hetman_spark.sources.lookup import DEFAULT_SINKS, lang_lookup, routes_df
+from hetman_spark.sources.lookup import DEFAULT_SINKS, lang_lookup
 
 # nginx combined-log pattern for the embedded access-log line
 # (reference pattern: /root/reference/internal/parser/parser_test.go:94)
@@ -83,7 +82,6 @@ class PipelineResult:
 def build_parsed(
     df: DataFrame,
     modifier: ModifierConfig | None = None,
-    use_pandas_udf: bool = True,
     keep_aux: bool = False,
 ) -> DataFrame:
     """parse + modify (narrow stages only — no shuffle).
@@ -91,37 +89,30 @@ def build_parsed(
     Produces columns: url, warc_ts, lang, split_id, extracted_text,
     parsed (map), parse_ok, status_class — plus title and log_line
     when keep_aux=True.  The pipeline row shape (FIXTURES §5) never
-    includes title/log_line, and a pandas UDF pays Arrow serialization
-    for every returned field whether or not Catalyst prunes it later,
-    so the default skips them (~210 B/row of Arrow traffic saved).
+    includes title/log_line, and an Arrow UDF pays serialization for
+    every returned field whether or not Catalyst prunes it later, so
+    the default skips them (~210 B/row of Arrow traffic saved).
     """
-    # --- parse stage (vectorized; no per-row Python) ---
+    # --- parse stage: one Arrow round-trip, html -> text [+aux] + grok
+    # fields in one combined RE2 pass per batch (make_full_extract_udf)
     log_fields = LOG_FIELDS
-    if use_pandas_udf:
-        # single Arrow round-trip: html -> text [+aux] + grok fields
-        # in one combined regex pass (see make_full_extract_udf)
-        full_udf, _ = make_full_extract_udf(NGINX_PATTERN, include_aux=keep_aux)
-        df = df.withColumn("_x", full_udf(F.col("html")))
-        if keep_aux:
-            df = df.withColumn("title", F.col("_x.title")).withColumn(
-                "log_line", F.col("_x.log_line")
-            )
-        df = (
-            df.withColumn("extracted_text", F.col("_x.text"))
-            .withColumn(
-                "_log",
-                F.when(
-                    F.col("_x.status").isNotNull(),
-                    F.struct(*[F.col(f"_x.{f}").alias(f) for f in log_fields]),
-                ),
-            )
-            .drop("_x")
+    full_udf, _ = make_full_extract_udf(NGINX_PATTERN, include_aux=keep_aux)
+    df = df.withColumn("_x", full_udf(F.col("html")))
+    if keep_aux:
+        df = df.withColumn("title", F.col("_x.title")).withColumn(
+            "log_line", F.col("_x.log_line")
         )
-    else:
-        df = with_html_fields(df, "html", jvm=True)
-        df = df.withColumn("_log", parse_grok(F.col("log_line"), NGINX_PATTERN))
-        if not keep_aux:
-            df = df.drop("title", "log_line")
+    df = (
+        df.withColumn("extracted_text", F.col("_x.text"))
+        .withColumn(
+            "_log",
+            F.when(
+                F.col("_x.status").isNotNull(),
+                F.struct(*[F.col(f"_x.{f}").alias(f) for f in log_fields]),
+            ),
+        )
+        .drop("_x")
+    )
     # parsed map (hetman's Parsed map[string]string); null-safe (P6)
     df = (
         df.withColumn(
@@ -153,24 +144,6 @@ def build_parsed(
     return df
 
 
-def build_enriched(
-    df: DataFrame,
-    lookup: DataFrame,
-    modifier: ModifierConfig | None = None,
-    salt_buckets: int = 8,
-    use_pandas_udf: bool = True,
-) -> DataFrame:
-    """parse + modify + enrich with the literal pre-enrich salted
-    repartition (north_rule wording).  The scale-optimal default path
-    in run_pipeline instead does the broadcast enrich narrow and lets
-    the single write-side REBALANCE handle skew (AQE splits oversized
-    partitions — salting, chosen at runtime); this variant stays for
-    the non-broadcastable-lookup case and is exercised by tests and
-    the --presalt CLI flag."""
-    parsed = build_parsed(df, modifier=modifier, use_pandas_udf=use_pandas_udf)
-    return enrich_with_lookup(parsed, lookup, on="lang", salt_buckets=salt_buckets, salt_from="url")
-
-
 LOG_FIELDS = ["remote_addr", "remote_user", "time_local", "request",
               "status", "bytes_sent", "referrer", "user_agent"]
 
@@ -192,7 +165,7 @@ def tags_disjoint(
 
 def build_routed(
     enriched: DataFrame,
-    routes: DataFrame | None,
+    routes: DataFrame | None = None,
     disjoint_tags: bool = False,
     sinks: tuple[SinkConfig, ...] | None = None,
 ) -> DataFrame:
@@ -357,7 +330,6 @@ def run_pipeline(
     salt_buckets: int = 8,
     splits_per_commit: int = 64,
     max_splits: int | None = None,
-    use_pandas_udf: bool = True,
     presalt: bool = False,
     labeled_input_path: str | None = None,
     config_reload_path: str | None = None,
@@ -447,7 +419,6 @@ def run_pipeline(
         todo = todo[:max_splits]
 
     lookup = lang_lookup(spark)
-    routes = routes_df(spark, sinks)
     result = PipelineResult()
 
     for i in range(0, len(todo), splits_per_commit):
@@ -477,7 +448,6 @@ def run_pipeline(
                 else:
                     if spec.sinks:
                         sinks = spec.sinks
-                        routes = routes_df(spark, sinks)
                     modifier = spec.modifier
             except Exception:
                 # keep the previous config, as the reference does — but
@@ -508,7 +478,7 @@ def run_pipeline(
         # cores (measured: cache materialization dominated the
         # non-scaling fraction).  The parse is recomputed for the one
         # lineage agg job instead — CPU that scales linearly.
-        parsed = build_parsed(df, modifier=modifier, use_pandas_udf=use_pandas_udf).drop("html")
+        parsed = build_parsed(df, modifier=modifier).drop("html")
 
         # A3/A4 per-stage counters: observations ride the write job
         # (map-side aggregated by the executor metrics system, zero
@@ -559,7 +529,7 @@ def run_pipeline(
             # LSH band build and BOTH shingle sides of the Jaccard
             # verify reference it, and each DataFrame reference
             # re-executes its plan (no cross-reference CSE) — without
-            # the checkpoint the pandas-UDF parse ran ~3 extra times
+            # the checkpoint the Arrow-UDF parse ran ~3 extra times
             # per batch.  Production analog: persist the batch's doc
             # projection before the dedup pass.  CC then shuffles only
             # (id, label) pairs, never text.
@@ -646,7 +616,7 @@ def run_pipeline(
         # labels from a push source are data-dependent -> the
         # driver-validated disjoint fast path is off in that mode
         routed = build_routed(
-            enrich(rebalanced), routes,
+            enrich(rebalanced),
             disjoint_tags=not labeled_input_path and tags_disjoint(sinks, modifier),
             sinks=sinks,
         )

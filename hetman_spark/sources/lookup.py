@@ -10,9 +10,30 @@ reference behavior).
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from hetman_spark.config import SinkConfig
+
+
+def local_table(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """Driver-side rows as a JVM-local relation.
+
+    `createDataFrame(list_of_rows)` plans as a Python-backed
+    LogicalRDD: every query that reads it (each broadcast of a lookup,
+    once per pipeline batch and per streaming micro-batch) runs a job
+    in a Python worker pool just to re-serialize the rows.  Going
+    through an Arrow table yields a LocalRelation with the same schema,
+    nullability included, that the JVM scans on its own.
+    """
+    schema = StructType.fromDDL(ddl)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, row)) for row in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)
+
 
 _LOOKUP_ROWS = [
     # lang, lang_label, region, redact_pattern, drop_cols
@@ -30,7 +51,8 @@ _LOOKUP_ROWS = [
 
 def lang_lookup(spark: SparkSession) -> DataFrame:
     """Small broadcast-side dimension: lang -> label/region/rules."""
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         _LOOKUP_ROWS,
         "lang string, lang_label string, region string, "
         "redact_pattern string, drop_cols array<string>",
@@ -68,7 +90,8 @@ def routes_df(spark: SparkSession, sinks: tuple[SinkConfig, ...] = DEFAULT_SINKS
         (s.signature(), s.predicate_col, s.predicate_val, s.add_tags, s.format)
         for s in sinks
     ]
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         rows,
         "sink_id string, predicate_col string, predicate_val string, "
         "add_tags map<string,string>, format string",

@@ -128,10 +128,9 @@ def streaming_pipeline(
     the streaming twin of the batch manifest.
     """
     from hetman_spark.plans.pipeline import build_parsed, build_routed, tags_disjoint
-    from hetman_spark.sources.lookup import DEFAULT_SINKS, lang_lookup, routes_df
+    from hetman_spark.sources.lookup import DEFAULT_SINKS, lang_lookup
 
     lookup = lang_lookup(spark)
-    routes = routes_df(spark)
     disjoint = tags_disjoint(DEFAULT_SINKS)
 
     stream = read_webtext_stream(spark, input_dir, max_files_per_trigger)
@@ -156,7 +155,7 @@ def streaming_pipeline(
             "spark.sql.sources.partitionOverwriteMode", "dynamic"
         )
         routed = build_routed(
-            batch_df.join(F.broadcast(lookup), "lang", "left"), routes,
+            batch_df.join(F.broadcast(lookup), "lang", "left"),
             disjoint_tags=disjoint, sinks=DEFAULT_SINKS,
         )
         (

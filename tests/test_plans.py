@@ -228,3 +228,37 @@ def test_incremental_dedup_is_keyed_anti_join(spark, sf_dir):
     for shape in FORBIDDEN:
         assert shape not in plan
     assert "LeftAnti" in plan
+
+
+def test_lookup_tables_are_jvm_local(spark):
+    """The pipeline's lookup/routing tables must plan as LocalRelation:
+    a Python-built LogicalRDD would run every broadcast of them through
+    a Python worker pool (once per batch and per micro-batch)."""
+    from hetman_spark.sources.lookup import lang_lookup, routes_df
+
+    for table in (lang_lookup(spark), routes_df(spark)):
+        plan = table._jdf.queryExecution().optimizedPlan().toString()  # noqa: SLF001
+        assert plan.startswith("LocalRelation"), plan
+
+
+def test_pipeline_plan_has_one_python_crossing(spark):
+    """The run_pipeline parse -> broadcast enrich -> route plan crosses
+    into Python exactly once (the Arrow parse kernel) and scans no
+    Python-backed relation."""
+    from hetman_spark.plans.pipeline import build_parsed, build_routed, tags_disjoint
+    from hetman_spark.sources.lookup import DEFAULT_SINKS, lang_lookup
+    from hetman_spark.sources.webtext import generate_webtext
+
+    parsed = build_parsed(generate_webtext(spark, 200, n_splits=2)).drop("html")
+    routed = build_routed(
+        parsed.hint("rebalance", "split_id").join(F.broadcast(lang_lookup(spark)), "lang", "left"),
+        disjoint_tags=tags_disjoint(DEFAULT_SINKS),
+        sinks=DEFAULT_SINKS,
+    )
+    qe = routed._jdf.queryExecution()  # noqa: SLF001
+    physical = routed._sc._jvm.PythonSQLUtils.explainString(qe, "simple")  # noqa: SLF001
+    assert physical.count("ArrowEvalPython") == 1, physical
+    assert "BroadcastHashJoin" in physical
+    optimized = qe.optimizedPlan().toString()
+    for node in ("ExistingRDD", "LogicalRDD"):
+        assert node not in physical and node not in optimized, physical

@@ -1,6 +1,7 @@
 """Streaming-mode tests: the readStream twin of the batch pipeline."""
 
 import os
+import time
 
 from pyspark.sql import functions as F
 
@@ -42,6 +43,19 @@ def test_windowed_counts(spark, tmp_path):
     assert rows[0]["total"] == 500
 
 
+def _drain(query, n_rows: int, limit_s: float = 120) -> None:
+    """Wait until `query` has committed batches covering `n_rows` input
+    rows, then stop it.  Neither awaitTermination nor
+    processAllAvailable can end this query on its own: with a
+    processing-time timeout registered in state, availableNow keeps
+    running no-data batches until the timeout fires."""
+    deadline = time.monotonic() + limit_s
+    while sum(p.numInputRows for p in query.recentProgress) < n_rows:
+        assert time.monotonic() < deadline, "stream did not drain"
+        time.sleep(0.1)
+    query.stop()
+
+
 def test_stateful_multiline_stream(spark, tmp_path):
     """P5 streaming twin: anchors flush on next anchor; the pending
     tail flushes when more data (or timeout) arrives."""
@@ -73,7 +87,7 @@ def test_stateful_multiline_stream(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _drain(q, len(rows1))
     got = {
         (r["file_id"], r["line_no"]): r["line"]
         for r in spark.sql("SELECT * FROM stitched").collect()
@@ -93,7 +107,7 @@ def test_stateful_multiline_stream(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q2.awaitTermination(120)
+    _drain(q2, len(rows1) + len(rows2))
     got2 = {
         (r["file_id"], r["line_no"]): r["line"]
         for r in spark.sql("SELECT * FROM stitched2").collect()
