@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 import time
 
@@ -145,8 +146,6 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "run":
-        import os
-
         from hetman_spark.plans.pipeline import run_pipeline
         from hetman_spark.sources.lookup import DEFAULT_SINKS
 
@@ -302,12 +301,12 @@ def main(argv: list[str] | None = None) -> int:
             "pages_per_sec_processing": (
                 round(rows_in / proc_sec, 1) if proc_sec > 0 else None
             ),
+            "cpus": sorted(os.sched_getaffinity(0)),
         }))
         return 0
 
     if args.cmd == "compact":
         import glob as _glob
-        import os
         import shutil
 
         from pyspark.sql import functions as F

@@ -3,16 +3,43 @@ parallelism in a FRESH JVM, with a warmup pass so JIT/codegen/Python
 worker startup does not pollute the throughput measurement (the
 north_rule scaling-efficiency comparison needs steady-state numbers).
 
-Prints one JSON line: {"master":..., "sec":..., "pages_per_sec":...}.
+Prints one JSON line: {"master":..., "sec":..., "pages_per_sec":...,
+"cpus": [the CPUs this process was granted]}.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
 import shutil
 import tempfile
 import time
+
+
+def _emit(record: dict) -> None:
+    """Print the one JSON result line, with the CPUs actually granted
+    (taskset narrows a mask to existing CPUs without an error)."""
+    print(json.dumps({**record, "cpus": sorted(os.sched_getaffinity(0))}))
+
+
+def _routed(spark, frame):
+    """The pipeline's compute path without its sink write and commit:
+    parse -> rebalance(split_id) -> broadcast enrich -> route."""
+    from pyspark.sql import functions as F
+
+    from hetman_spark.plans.pipeline import build_parsed, build_routed, tags_disjoint
+    from hetman_spark.sources.lookup import DEFAULT_SINKS, lang_lookup
+
+    reb = build_parsed(frame).drop("html").hint("rebalance", "split_id")
+    return build_routed(reb.join(F.broadcast(lang_lookup(spark)), "lang", "left"),
+                        disjoint_tags=tags_disjoint(DEFAULT_SINKS), sinks=DEFAULT_SINKS)
+
+
+def noop_write(df) -> None:
+    """Run the full plan into a noop sink: every row is computed, none
+    is written or collected (count() would let Catalyst prune UDFs)."""
+    df.write.format("noop").mode("overwrite").save()
 
 
 def _stitch_bench(spark, master: str, rows: int, scratch: str) -> None:
@@ -72,7 +99,7 @@ def _stitch_bench(spark, master: str, rows: int, scratch: str) -> None:
     proc_sec = sum(
         (p.get("durationMs") or {}).get("triggerExecution", 0) for p in progress
     ) / 1000.0
-    print(json.dumps({
+    _emit({
         "master": master, "mode": "stitch",
         "rows_in": rows_in,
         "epochs": sum(1 for p in progress if int(p["numInputRows"]) > 0),
@@ -83,7 +110,7 @@ def _stitch_bench(spark, master: str, rows: int, scratch: str) -> None:
         "lines_per_sec_processing": (
             round(rows_in / proc_sec, 1) if proc_sec > 0 else None
         ),
-    }))
+    })
 
 
 def _dedup_bench(spark, master: str, rows: int, scratch: str, reps: int = 3) -> None:
@@ -131,7 +158,7 @@ def _dedup_bench(spark, master: str, rows: int, scratch: str, reps: int = 3) -> 
         )
         n_nodes = cc.count()
         cc_secs.append(time.time() - t0)
-    print(json.dumps({
+    _emit({
         "master": master, "mode": "dedup",
         "rows": rows, "n_pairs": n_pairs, "n_nodes": n_nodes,
         "cc_rounds": cc_stats.get("rounds"),
@@ -140,7 +167,7 @@ def _dedup_bench(spark, master: str, rows: int, scratch: str, reps: int = 3) -> 
         "cc_secs": [round(s, 2) for s in cc_secs],
         "lsh_sec": round(min(lsh_secs), 2),
         "cc_sec": round(min(cc_secs), 2),
-    }))
+    })
 
 
 def main() -> None:
@@ -185,36 +212,22 @@ def main() -> None:
         if args.stitch:
             _stitch_bench(spark, args.master, args.stitch, scratch)
             return
+        src = spark.read.parquet(args.input)
         if args.noop:
-            from pyspark.sql import functions as F
-
-            from hetman_spark.plans.pipeline import build_parsed, build_routed, tags_disjoint
-            from hetman_spark.sources.lookup import DEFAULT_SINKS, lang_lookup
-
-            src = spark.read.parquet(args.input)
-            lookup = lang_lookup(spark)
-
-            def flow(frame):
-                reb = build_parsed(frame).drop("html").hint("rebalance", "split_id")
-                return build_routed(reb.join(F.broadcast(lookup), "lang", "left"),
-                                    disjoint_tags=tags_disjoint(DEFAULT_SINKS),
-                                    sinks=DEFAULT_SINKS)
-
             # two warmup passes: small table, then the REAL input once —
             # one small pass leaves JIT cold and timings 2x noisy
-            warm = spark.read.parquet(args.warmup_input)
-            flow(warm).write.format("noop").mode("overwrite").save()
+            noop_write(_routed(spark, spark.read.parquet(args.warmup_input)))
             if not args.light_warmup:
-                flow(src).write.format("noop").mode("overwrite").save()
+                noop_write(_routed(spark, src))
             n_rows = src.count()
             t0 = time.time()
-            flow(src).write.format("noop").mode("overwrite").save()
+            noop_write(_routed(spark, src))
             sec = time.time() - t0
-            print(json.dumps({
+            _emit({
                 "master": args.master, "mode": "noop",
                 "sec": round(sec, 2), "rows": n_rows,
                 "pages_per_sec": round(n_rows / sec, 1),
-            }))
+            })
             return
 
         from hetman_spark.plans.pipeline import run_pipeline
@@ -225,30 +238,21 @@ def main() -> None:
                      salt_buckets=args.salt_buckets, splits_per_commit=1024,
                      presalt=args.presalt, neardup=args.neardup)
         if not args.light_warmup:
-            from pyspark.sql import functions as F
-
-            from hetman_spark.plans.pipeline import build_parsed, build_routed, tags_disjoint
-            from hetman_spark.sources.lookup import DEFAULT_SINKS, lang_lookup
-
-            build_routed(
-                build_parsed(spark.read.parquet(args.input)).drop("html")
-                .hint("rebalance", "split_id").join(F.broadcast(lang_lookup(spark)), "lang", "left"),
-                disjoint_tags=tags_disjoint(DEFAULT_SINKS), sinks=DEFAULT_SINKS,
-            ).write.format("noop").mode("overwrite").save()
+            noop_write(_routed(spark, src))
 
         t0 = time.time()
         res = run_pipeline(spark, args.input, f"{scratch}/out",
                            salt_buckets=args.salt_buckets, splits_per_commit=1024,
                            presalt=args.presalt, neardup=args.neardup)
         sec = time.time() - t0
-        print(json.dumps({
+        _emit({
             "master": args.master,
             "sec": round(sec, 2),
             "rows": res.rows_in,
             "pages_per_sec": round(res.rows_in / sec, 1),
             "sink_counts": dict(sorted(res.sink_counts.items())),
             "phase_secs": {k: round(v, 2) for k, v in res.phase_secs.items()},
-        }))
+        })
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 

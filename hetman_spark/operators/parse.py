@@ -28,7 +28,7 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -221,12 +221,3 @@ def parse_line(line: Column, fmt: str, pattern: str = "", json_fields: list[str]
     if fmt == "syslog-rfc3164":
         return parse_syslog_rfc3164(line)
     raise ValueError(f"unknown parser format: {fmt!r}")
-
-
-def with_parsed(df: DataFrame, line_col: str, fmt: str, pattern: str = "",
-                json_fields: list[str] | None = None) -> DataFrame:
-    """Attach ``parsed`` + ``parse_ok`` columns; never drops rows (P6)."""
-    parsed = parse_line(F.col(line_col), fmt, pattern, json_fields)
-    return df.withColumn("parsed", parsed).withColumn(
-        "parse_ok", F.col("parsed").isNotNull()
-    )

@@ -193,12 +193,3 @@ def with_sink_tags(
         F.create_map(F.lit("source"), F.col(source_col)),
     )
     return routed.withColumn("tags", merge_tags(add_with_source, parsed, labels))
-
-
-def sink_counts(routed: DataFrame) -> DataFrame:
-    """A2: per-sink forwarded-record counts
-    (plays forwardedLogCount,
-    /root/reference/internal/forwarder/forwarder.go:155-157).
-    Partial aggregation (map-side combine) makes this one lightweight
-    shuffle of pre-aggregated (sink_id, n) pairs."""
-    return routed.groupBy("sink_id").agg(F.count(F.lit(1)).alias("n"))

@@ -641,37 +641,29 @@ def run_pipeline(
             .parquet(data_dir)
         )
         _t1 = _time.time()
-        result.phase_secs["write_job"] = result.phase_secs.get("write_job", 0.0) + (_t1 - _t0)
-        p_metrics = obs_parse.get
-        r_metrics = obs_route.get
-        stage_pairs = [
-            ("source.rows_in", p_metrics["rows_in"]),
-            ("parse.rows_parsed", p_metrics["rows_parsed"]),
-            ("parse.errors", p_metrics["rows_in"] - p_metrics["rows_parsed"]),
-            ("route.rows_routed", r_metrics["rows_routed"]),
-        ]
+        # one counter record per batch: summed into the result and
+        # written verbatim to the _metrics feed below
+        rows_in = int(obs_parse.get["rows_in"] or 0)
+        rows_parsed = int(obs_parse.get["rows_parsed"] or 0)
+        batch_counts = {
+            "source.rows_in": rows_in,
+            "parse.rows_parsed": rows_parsed,
+            "parse.errors": rows_in - rows_parsed,
+            "route.rows_routed": int(obs_route.get["rows_routed"] or 0),
+        }
+        dedup_kept = rows_in
         if obs_dedup is not None:
-            stage_pairs.append(
-                ("dedup.dropped",
-                 (p_metrics["rows_in"] or 0) - (obs_dedup.get["rows_kept"] or 0))
-            )
+            dedup_kept = int(obs_dedup.get["rows_kept"] or 0)
+            batch_counts["dedup.dropped"] = rows_in - dedup_kept
         if obs_neardup is not None:
             # input to the near-dup stage = exact-dedup survivors when
             # both stages run, else the raw parse output
-            nd_in = (
-                (obs_dedup.get["rows_kept"] or 0)
-                if obs_dedup is not None
-                else (p_metrics["rows_in"] or 0)
-            )
-            stage_pairs.append(
-                ("neardup.dropped", nd_in - (obs_neardup.get["rows_kept"] or 0))
-            )
+            batch_counts["neardup.dropped"] = (
+                dedup_kept - int(obs_neardup.get["rows_kept"] or 0))
         if obs_pii is not None:
-            stage_pairs.append(
-                ("pii.docs_masked", obs_pii.get["docs_masked"] or 0)
-            )
-        for key, val in stage_pairs:
-            result.stage_counts[key] = result.stage_counts.get(key, 0) + int(val or 0)
+            batch_counts["pii.docs_masked"] = int(obs_pii.get["docs_masked"] or 0)
+        for key, val in batch_counts.items():
+            result.stage_counts[key] = result.stage_counts.get(key, 0) + val
 
         # lineage (A1/A2): per-split in/parsed/routed counts.  With a
         # match-all sink (the common config — hetman forwarders each
@@ -711,7 +703,6 @@ def run_pipeline(
                 in_counts[s] = (rows_in_tmp.get(s, 0), rows_p_tmp.get(s, 0))
 
         _t2 = _time.time()
-        result.phase_secs["lineage"] = result.phase_secs.get("lineage", 0.0) + (_t2 - _t1)
         _write_lineage(lineage_dir, batch, in_counts, per_split_routes)
 
         # manifest commit — strictly after all sink writes (A5).
@@ -730,7 +721,9 @@ def run_pipeline(
             )
 
         _t3 = _time.time()
-        result.phase_secs["commit"] = result.phase_secs.get("commit", 0.0) + (_t3 - _t2)
+        batch_secs = {"write_job": _t1 - _t0, "lineage": _t2 - _t1, "commit": _t3 - _t2}
+        for key, val in batch_secs.items():
+            result.phase_secs[key] = result.phase_secs.get(key, 0.0) + val
 
         # A3/A4 live feed: one JSONL line per commit batch (the batch
         # analog of the reference's per-scrape OTel counter export),
@@ -743,34 +736,9 @@ def run_pipeline(
             os.path.join(out_dir, "_metrics"),
             {
                 "splits": batch,
-                "stage_counts": {
-                    "source.rows_in": int(p_metrics["rows_in"] or 0),
-                    "parse.rows_parsed": int(p_metrics["rows_parsed"] or 0),
-                    "parse.errors": int(
-                        (p_metrics["rows_in"] or 0) - (p_metrics["rows_parsed"] or 0)
-                    ),
-                    "route.rows_routed": int(r_metrics["rows_routed"] or 0),
-                    **(
-                        {"dedup.dropped": int(
-                            (p_metrics["rows_in"] or 0)
-                            - (obs_dedup.get["rows_kept"] or 0))}
-                        if obs_dedup is not None else {}
-                    ),
-                    **(
-                        {"neardup.dropped": int(
-                            ((obs_dedup.get["rows_kept"] or 0)
-                             if obs_dedup is not None
-                             else (p_metrics["rows_in"] or 0))
-                            - (obs_neardup.get["rows_kept"] or 0))}
-                        if obs_neardup is not None else {}
-                    ),
-                },
+                "stage_counts": batch_counts,
                 "sink_counts": dict(sorted(batch_routes.items())),
-                "phase_secs": {
-                    "write_job": round(_t1 - _t0, 3),
-                    "lineage": round(_t2 - _t1, 3),
-                    "commit": round(_t3 - _t2, 3),
-                },
+                "phase_secs": {k: round(v, 3) for k, v in batch_secs.items()},
                 "committed_at": _t3,
             },
         )
@@ -784,10 +752,3 @@ def run_pipeline(
 
     return result
 
-
-def read_sink(spark: SparkSession, out_dir: str, sink_id: str) -> DataFrame:
-    """Read one logical sink's delivered rows."""
-    return (
-        spark.read.parquet(os.path.join(out_dir, "data"))
-        .filter(F.col("sink_id") == sink_id)
-    )

@@ -1,13 +1,13 @@
-"""Table readers: parquet (default) with Iceberg gated behind an
+"""Table reader: parquet (default) with Iceberg gated behind an
 import/classpath check.
 
 The north_star names an Iceberg webtext table; this container has no
 Iceberg runtime jars, so parquet is the storage engine here and the
-Iceberg path activates when the jar + catalog conf exist (documented,
-not stubbed with fakes).  Both return the same DataFrame shape, and
-everything downstream (manifest resume, partition pruning on
-split_id) is storage-agnostic: with Iceberg the manifest anti-join is
-served by table metadata, with parquet by hive-style dirs.
+Iceberg read path activates when the jar + catalog conf exist
+(documented, not stubbed with fakes).  Both branches return the same
+DataFrame shape.  The pipeline's sinks are always hive-style parquet
+dirs (plans/pipeline.py), so manifest resume and split_id partition
+pruning do not depend on the input's storage engine.
 """
 
 from __future__ import annotations
@@ -37,22 +37,3 @@ def read_webtext(spark: SparkSession, location: str) -> DataFrame:
     if "/" not in location and iceberg_available(spark):
         return spark.read.format("iceberg").load(location)
     return spark.read.parquet(location)
-
-
-def write_sink_iceberg_or_parquet(
-    df: DataFrame, location: str, partition_cols: tuple[str, ...] = ("sink_id", "split_id")
-) -> None:
-    """Sink writer with the same duality.  On Iceberg the per-split
-    idempotence comes from `overwritePartitions()` snapshots instead of
-    dynamic partition overwrite; semantics (exactly-once observable
-    output per split) are identical."""
-    spark = df.sparkSession
-    if "/" not in location and iceberg_available(spark):
-        df.writeTo(location).overwritePartitions()
-        return
-    (
-        df.write.mode("overwrite")
-        .option("compression", "zstd")
-        .partitionBy(*partition_cols)
-        .parquet(location)
-    )

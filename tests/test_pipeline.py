@@ -120,14 +120,21 @@ def test_resume_idempotent(spark, webtext_path, tmp_path):
 def test_counts_identical_across_parallelism(spark, webtext_path, tmp_path):
     # north_rule: identical per-sink counts at N and 4N parallelism.
     # Same session, different shuffle widths emulate the two sizes.
+    # salt_buckets only shapes the plan under presalt=True (the salted
+    # (lang, salt) repartition before the enrich join), so both
+    # physical shapes run, and must agree with each other as well.
     outs = {}
-    for tag, parts in (("n", 2), ("4n", 8)):
-        out = str(tmp_path / tag)
-        spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-        res = run_pipeline(spark, webtext_path, out, splits_per_commit=8, salt_buckets=parts)
-        outs[tag] = res.sink_counts
+    for presalt in (False, True):
+        for tag, parts in (("n", 2), ("4n", 8)):
+            out = str(tmp_path / f"{tag}_{presalt}")
+            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+            res = run_pipeline(spark, webtext_path, out, splits_per_commit=8,
+                               salt_buckets=parts, presalt=presalt)
+            outs[tag, presalt] = res.sink_counts
     spark.conf.set("spark.sql.shuffle.partitions", "8")
-    assert outs["n"] == outs["4n"]
+    assert outs["n", False] == outs["4n", False]
+    assert outs["n", True] == outs["4n", True]
+    assert outs["n", False] == outs["n", True]
 
 
 def test_aggregator_mode_labeled_union(spark, tmp_path):
@@ -391,6 +398,13 @@ def test_pipeline_redact_pii_stage(spark, tmp_path):
     ).DEFAULT_SINKS if s.predicate_col == "*"][0]
     assert res.sink_counts[matchall] == 300  # scrub never drops rows
     assert res.stage_counts["pii.docs_masked"] == 50
+
+    # the per-batch metrics feed carries every stage counter, pii too
+    from hetman_spark.plans.checkpoint import read_batch_metrics
+
+    batches = read_batch_metrics(str(tmp_path / "out_pii" / "_metrics"))
+    for key, want in res.stage_counts.items():
+        assert sum(b["stage_counts"][key] for b in batches) == want
 
     out = spark.read.parquet(str(tmp_path / "out_pii" / "data"))
     assert out.filter(F.col("text").contains("@example.com")).count() == 0
