@@ -12,8 +12,8 @@ Spark pipeline over a Common-Crawl-style webtext table:
       + per-partition lineage + checkpoint-manifest resume.
 
 Everything relational is stock Catalyst; custom code is confined to the
-vectorized parse UDFs, the manifest/commit protocol, and the lineage
-side-output (SURVEY.md §7).
+html slicing and grok parse (JVM column expressions), the
+manifest/commit protocol, and the lineage side-output (SURVEY.md §7).
 """
 
 __version__ = "0.1.0"

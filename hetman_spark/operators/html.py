@@ -7,83 +7,92 @@ pulls Parsed fields from LogLine.
 
 Correctness invariant (BASELINE.json input_hint): the extracted text
 must be BYTE-IDENTICAL per url to the table's golden `text` column.
-To make that achievable, decoding is pinned: utf-8, strict (an invalid
-page fails the task instead of being silently repaired; generation
-writes valid utf-8), and extraction is a fixed DOTALL regex over the
-decoded string.
+To make that achievable, decoding is pinned: utf-8, strict.
+`decode(html, 'UTF-8')` fails the task with MALFORMED_CHARACTER_CODING
+on an invalid page; `cast(html AS string)` would silently write U+FFFD
+instead, so it is not used.  Generation writes valid utf-8.
 
-One implementation: an Arrow UDF over pyarrow.compute.  Decode is a
-binary->string cast and the regex is RE2 `extract_regex`; both run in
-C++ over the whole Arrow batch, so no Python object is built per row.
+One implementation, JVM column expressions only.  The page template is
+fixed (sources/webtext.py HTML_*), so the kernel slices the decoded
+page at its markers with locate/substring instead of running a regex
+over it; only the embedded log line goes through a regex
+(operators/parse.py parse_grok).  The slices equal the regex
+``^PREFIX(title.*?)MID_1(text.*?)MID_2(log_line) SUFFIX\\n?$`` (DOTALL,
+lazy groups, grok on log_line, the template alone when grok misses):
+
+- title ends at the first MID_1;
+- log_line runs to the page's final SUFFIX, which may be followed by
+  one newline;
+- text ends at the first MID_2 whose log line parses, or at the first
+  MID_2 when none parses.  A later MID_2 can only sit inside the
+  first-sliced log line, so the regex search for it runs only on the
+  rare rows whose sliced line misses grok and contains the marker.
 """
 
 from __future__ import annotations
 
-import pyarrow as pa
-import pyarrow.compute as pc
+import re
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-# The page template is defined by the generator
-# (hetman_spark/sources/webtext.py); these patterns are its inverse.
-# `\n?$`: Python's `$` also matches before one final newline and RE2's
-# does not; the optional newline keeps the accepted pages identical to
-# the Python-regex kernel's (a page ending in "\n" parses, "\n\n" not).
-_HEAD = r"(?s)^<html><head><title>(?P<title>.*?)</title></head><body><p>(?P<text>.*?)</p><!--log: "
-_TAIL = r" --></body></html>\n?$"
-_TEMPLATE_RE = _HEAD + r"(?P<log_line>.*?)" + _TAIL
-_TEMPLATE_FIELDS = ["title", "text", "log_line"]
+from hetman_spark.operators.parse import grok_to_regex, parse_grok
+from hetman_spark.sources.webtext import HTML_MID_1, HTML_MID_2, HTML_PREFIX, HTML_SUFFIX
 
 
-def make_full_extract_udf(grok_pattern: str, include_aux: bool = True):
-    """ONE Arrow-batched UDF doing the whole parse stage: decode html,
-    extract title/text/log_line AND the grok fields of the embedded
-    access-log line in a single combined regex pass per batch.
+def extract_page(df: DataFrame, grok_pattern: str, out: str) -> DataFrame:
+    """Add column ``out``: struct<title, text, log_line, *grok fields>
+    parsed from the binary ``html`` column (the whole parse stage).
 
-    Motivation (measured at 100k rows, local[32]): two chained UDFs
-    (html fields, then grok on log_line) cost ~70s vs ~17s for the
-    pure-JVM path — the html payload crossed the Arrow boundary twice
-    and the regex scanned each page twice.  The combined UDF crosses
-    once and scans once; a second pass over only the rows whose
-    embedded line did NOT match the grok pattern (template matches,
-    log doesn't) recovers title/text/log_line so P6 passthrough holds.
+    A page that matches no template (or null html) gives a non-null
+    struct of null fields; a template page whose log line misses grok
+    keeps title/text/log_line with null grok fields (P6).
 
-    include_aux=False drops title and log_line from the RETURNED
-    struct (they are still captured by the same regex pass).  Spark
-    does not push struct-field pruning into a Python UDF, so an unused
-    field still pays Arrow serialization for every row — ~210
-    bytes/row here.  The pipeline never emits title/log_line
-    (FIXTURES §5 row shape), so it uses the slim variant.
-
-    Rows that match no template (or are null) come back as a non-null
-    struct of null fields.  Returns (udf, field_names) where the struct
-    is [title, log_line,] text + the grok fields.
+    Three projections, each reading the previous one's fields: a
+    column expression has no variable binding, so as one expression
+    the slicing tree would repeat in every later use of the log line
+    (backtracking, then grok's nine regex calls): a 186k-character
+    plan and about 4 s of analysis and planning per query (local[4],
+    4 CPUs).
     """
-    from hetman_spark.operators.parse import grok_to_regex
+    s = F.decode(F.col("html"), "UTF-8")
+    title_at = len(HTML_PREFIX) + 1  # substring/locate positions are 1-based
+    mid_1 = F.position(F.lit(HTML_MID_1), s, F.lit(title_at))
+    text_at = mid_1 + len(HTML_MID_1)
+    mid_2 = F.position(F.lit(HTML_MID_2), s, text_at)
+    log_at = mid_2 + len(HTML_MID_2)
+    newline = s.endswith(HTML_SUFFIX + "\n")
+    suffix_at = F.length(s) - len(HTML_SUFFIX) + 1 - newline.cast("int")
+    hit = (
+        s.startswith(HTML_PREFIX)
+        & (mid_1 > 0)
+        & (mid_2 > 0)
+        & (s.endswith(HTML_SUFFIX) | newline)
+        & (suffix_at >= log_at)
+    )
+    # a null start position makes every slice of a missed page null
+    df = df.withColumn(
+        out,
+        F.struct(
+            s.substr(F.when(hit, title_at), mid_1 - title_at).alias("title"),
+            s.substr(F.when(hit, text_at), mid_2 - text_at).alias("text"),
+            s.substr(F.when(hit, log_at), suffix_at - log_at).alias("log_line"),
+        ),
+    )
 
-    grok_named, grok_fields = grok_to_regex(grok_pattern, named=True)
-    # inner grok regex, de-anchored, spliced where the template has
-    # log_line; RE2 accepts grok_to_regex's Python syntax unchanged
-    inner = grok_named.removeprefix("^").removesuffix("$")
-    combined = _HEAD + r"(?P<log_line>" + inner + r")" + _TAIL
-    aux = ["title", "log_line"] if include_aux else []
-    all_fields = [*aux, "text", *grok_fields]
-    ret_type = T.StructType([T.StructField(f, T.StringType()) for f in all_fields])
+    # the regex's text group would backtrack to the first later marker
+    # whose remainder parses; `later` finds it with a lazy prefix
+    text, line = F.col(f"{out}.text"), F.col(f"{out}.log_line")
+    grok_re, grok_fields = grok_to_regex(grok_pattern)
+    later = "(?s)^(.*?)" + re.escape(HTML_MID_2) + "(" + grok_re.removeprefix("^") + ")"
+    backtrack = line.contains(HTML_MID_2) & ~line.rlike(grok_re) & line.rlike(later)
+    moved = F.concat(text, F.lit(HTML_MID_2), F.regexp_extract(line, later, 1))
+    df = df.withColumn(
+        out,
+        F.col(out)
+        .withField("text", F.when(backtrack, moved).otherwise(text))
+        .withField("log_line", F.when(backtrack, F.regexp_extract(line, later, 2)).otherwise(line)),
+    )
 
-    @F.arrow_udf(ret_type)
-    def full_extract(html: pa.Array) -> pa.Array:
-        decoded = pc.cast(html, pa.string())
-        # flatten() folds the match struct's validity into its fields:
-        # a page that does not match gives null in every field
-        out = dict(zip([*_TEMPLATE_FIELDS, *grok_fields],
-                       pc.extract_regex(decoded, combined).flatten()))
-        missed = pc.is_null(out["text"])
-        if pc.any(missed).as_py():
-            # template may match even when the log line does not parse
-            # (P6: keep title/text, null grok fields)
-            fallback = pc.extract_regex(decoded.filter(missed), _TEMPLATE_RE).flatten()
-            for name, col in zip(_TEMPLATE_FIELDS, fallback):
-                out[name] = pc.replace_with_mask(out[name], missed, col)
-        return pa.StructArray.from_arrays([out[f] for f in all_fields], names=all_fields)
-
-    return full_extract, all_fields
+    log = parse_grok(line, grok_pattern)
+    return df.withColumn(out, F.struct(F.col(f"{out}.*"), *[log[f].alias(f) for f in grok_fields]))

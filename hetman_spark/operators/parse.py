@@ -10,9 +10,9 @@ Here each format is a vectorized column transform:
 
 - nginx/grok: the $var pattern is translated to a regex once on the
   driver; extraction happens JVM-side with one regexp_extract per
-  field (whole-stage codegen, no Python).  The webtext pipeline splices
-  the same regex into its Arrow/RE2 html kernel
-  (operators/html.py:make_full_extract_udf).
+  field (whole-stage codegen, no Python).  The webtext pipeline runs
+  the same parse_grok on the log line it slices out of each page
+  (operators/html.py:extract_page).
 - JSON: from_json with an explicit all-string schema (production
   path — the "strings only" rule enforced by schema choice), plus a
   pandas UDF replicating the reference's dynamic strings-only filter
@@ -37,9 +37,9 @@ from pyspark.sql import types as T
 # ---------------------------------------------------------------------------
 
 
-def grok_to_regex(pattern: str, named: bool = False) -> tuple[str, list[str]]:
-    """Translate an nginx-style ``$var`` pattern into an anchored regex
-    with one positional capture group per variable.
+def grok_to_regex(pattern: str) -> tuple[str, list[str]]:
+    """Translate an nginx-style ``$var`` pattern into an anchored Java
+    regex with one positional capture group per variable.
 
     Semantics match gonx (used at
     /root/reference/internal/parser/parser.go:76-77): a variable
@@ -48,6 +48,10 @@ def grok_to_regex(pattern: str, named: bool = False) -> tuple[str, list[str]]:
     ``[^"]*``, ``[$time_local]`` -> ``[^\\]]*``); a trailing variable
     matches to end of line.  Golden case:
     /root/reference/internal/parser/parser_test.go:92-106.
+
+    The end anchor is ``\\z`` (end of text), as Go's ``$`` without
+    ``(?m)``; Java's ``$`` would also match before a final line
+    terminator and accept a line ending in "\\n" or "\\r\\n".
 
     Returns (regex, field_names) — group i+1 captures field i.
     """
@@ -58,15 +62,14 @@ def grok_to_regex(pattern: str, named: bool = False) -> tuple[str, list[str]]:
     for m in token.finditer(pattern):
         out.append(re.escape(pattern[pos : m.start()]))
         fields.append(m.group(1))
-        grp = f"?P<{m.group(1)}>" if named else ""
         nxt = pattern[m.end() : m.end() + 1]
         if nxt:
-            out.append(f"({grp}[^{re.escape(nxt)}]*)")
+            out.append(f"([^{re.escape(nxt)}]*)")
         else:
-            out.append(f"({grp}.*)")
+            out.append("(.*)")
         pos = m.end()
     out.append(re.escape(pattern[pos:]))
-    out.append("$")
+    out.append(r"\z")
     return "".join(out), fields
 
 
@@ -86,26 +89,6 @@ def parse_grok(line: Column, pattern: str) -> Column:
 
 def _grok_type(fields: list[str]) -> T.StructType:
     return T.StructType([T.StructField(f, T.StringType()) for f in fields])
-
-
-def make_grok_pandas_udf(pattern: str):
-    """Grok parse as a pandas UDF: one ``pd.Series.str.extract`` per
-    Arrow batch.  Batched at the UDF boundary only — pandas 2.2 applies
-    the compiled regex with a Python loop over the rows, so this is
-    per-row Python; the pipeline uses the Arrow/RE2 kernel in
-    operators/html.py instead.
-
-    Returns (udf, field_names); udf(line) yields the same struct as
-    :func:`parse_grok`.
-    """
-    named, fields = grok_to_regex(pattern, named=True)
-    ret_type = _grok_type(fields)
-
-    @F.pandas_udf(ret_type)
-    def grok_udf(s: pd.Series) -> pd.DataFrame:
-        return s.str.extract(named)
-
-    return grok_udf, fields
 
 
 # ---------------------------------------------------------------------------
@@ -199,25 +182,3 @@ def parse_syslog_rfc3164(line: Column) -> Column:
     return F.when(line.rlike(_RFC3164_RE), struct).otherwise(
         F.lit(None).cast(_grok_type(_RFC3164_FIELDS))
     )
-
-
-# ---------------------------------------------------------------------------
-# Dispatch (plays the format switch at parser.go:145-198)
-# ---------------------------------------------------------------------------
-
-
-def parse_line(line: Column, fmt: str, pattern: str = "", json_fields: list[str] | None = None) -> Column:
-    """Format-dispatched parse -> struct column (or map for dynamic
-    json).  Null result = parse failure; the caller must keep the row
-    (P6, parser.go:201)."""
-    if fmt == "nginx":
-        return parse_grok(line, pattern)
-    if fmt == "json":
-        if json_fields:
-            return parse_json_static(line, json_fields)
-        return parse_json_dynamic(line)
-    if fmt == "syslog-rfc5424":
-        return parse_syslog_rfc5424(line)
-    if fmt == "syslog-rfc3164":
-        return parse_syslog_rfc3164(line)
-    raise ValueError(f"unknown parser format: {fmt!r}")

@@ -10,8 +10,8 @@ append manifest entry".
 
 Stages and their reference analogs:
   read parquet (pruned by manifest anti-join) . tailer + offset seek
-  make_full_extract_udf (Arrow UDF: utf-8     . Parser.Run (P1)
-    cast + RE2 html/grok regex, per batch)
+  extract_page (JVM: strict utf-8 decode,     . Parser.Run (P1)
+    template slicing, grok on the log line)
   apply_modifier                              . Modifier.Run (M1-M3)
   enrich_with_lookup (salted + broadcast)     . add-fields w/ lookup
   route_explode + with_sink_tags              . Modifier fan-out + Loki
@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 
 from hetman_spark.config import ModifierConfig, SinkConfig
 from hetman_spark.operators.enrich import enrich_with_lookup
-from hetman_spark.operators.html import make_full_extract_udf
+from hetman_spark.operators.html import extract_page
 from hetman_spark.operators.modify import apply_modifier
 from hetman_spark.operators.route import (
     route_explode,
@@ -79,49 +79,26 @@ class PipelineResult:
     phase_secs: dict[str, float] = field(default_factory=dict)
 
 
-def build_parsed(
-    df: DataFrame,
-    modifier: ModifierConfig | None = None,
-    keep_aux: bool = False,
-) -> DataFrame:
-    """parse + modify (narrow stages only — no shuffle).
+def build_parsed(df: DataFrame, modifier: ModifierConfig | None = None) -> DataFrame:
+    """parse + modify (narrow stages only — no shuffle; the parse runs
+    in the JVM).
 
     Produces columns: url, warc_ts, lang, split_id, extracted_text,
-    parsed (map), parse_ok, status_class — plus title and log_line
-    when keep_aux=True.  The pipeline row shape (FIXTURES §5) never
-    includes title/log_line, and an Arrow UDF pays serialization for
-    every returned field whether or not Catalyst prunes it later, so
-    the default skips them (~210 B/row of Arrow traffic saved).
+    parsed (map), parse_ok, status_class.
     """
-    # --- parse stage: one Arrow round-trip, html -> text [+aux] + grok
-    # fields in one combined RE2 pass per batch (make_full_extract_udf)
-    log_fields = LOG_FIELDS
-    full_udf, _ = make_full_extract_udf(NGINX_PATTERN, include_aux=keep_aux)
-    df = df.withColumn("_x", full_udf(F.col("html")))
-    if keep_aux:
-        df = df.withColumn("title", F.col("_x.title")).withColumn(
-            "log_line", F.col("_x.log_line")
-        )
+    # --- parse stage: html -> text + grok fields (JVM slicing + grok)
+    status = F.col("_x.status")  # null iff the log line missed grok
     df = (
-        df.withColumn("extracted_text", F.col("_x.text"))
+        extract_page(df, NGINX_PATTERN, "_x")
+        .withColumn("extracted_text", F.col("_x.text"))
+        # parsed map (hetman's Parsed map[string]string); null-safe (P6)
         .withColumn(
-            "_log",
-            F.when(
-                F.col("_x.status").isNotNull(),
-                F.struct(*[F.col(f"_x.{f}").alias(f) for f in log_fields]),
-            ),
-        )
-        .drop("_x")
-    )
-    # parsed map (hetman's Parsed map[string]string); null-safe (P6)
-    df = (
-        df.withColumn(
             "parsed",
             F.when(
-                F.col("_log").isNotNull() & F.col("_log.status").isNotNull(),
+                status.isNotNull(),
                 F.map_from_arrays(
-                    F.array(*[F.lit(f) for f in log_fields]),
-                    F.array(*[F.col(f"_log.{f}") for f in log_fields]),
+                    F.array(*[F.lit(f) for f in LOG_FIELDS]),
+                    F.array(*[F.col(f"_x.{f}") for f in LOG_FIELDS]),
                 ),
             ),
         )
@@ -131,11 +108,11 @@ def build_parsed(
         .withColumn(
             "status_class",
             F.when(
-                F.col("_log.status").isNotNull() & (F.col("_log.status") != ""),
-                F.concat(F.substring(F.col("_log.status"), 1, 1), F.lit("xx")),
+                status.isNotNull() & (status != ""),
+                F.concat(F.substring(status, 1, 1), F.lit("xx")),
             ).otherwise(F.lit("unparsed")),
         )
-        .drop("_log")
+        .drop("_x")
     )
 
     # --- modifier stage (M1-M3, pure Catalyst) ---
@@ -529,8 +506,8 @@ def run_pipeline(
             # LSH band build and BOTH shingle sides of the Jaccard
             # verify reference it, and each DataFrame reference
             # re-executes its plan (no cross-reference CSE) — without
-            # the checkpoint the Arrow-UDF parse ran ~3 extra times
-            # per batch.  Production analog: persist the batch's doc
+            # the checkpoint the page parse ran ~3 extra times per
+            # batch.  Production analog: persist the batch's doc
             # projection before the dedup pass.  CC then shuffles only
             # (id, label) pairs, never text.
             docs = (

@@ -24,9 +24,10 @@ def get_spark(
     Defaults chosen for the webtext workload:
     - AQE on (+ skew join): runtime re-plan is the backstop for
       hot-domain/lang skew the north_rule calls out.
-    - Arrow enabled and batch size capped at 2048: html is a binary
-      column of KB–MB per row; huge Arrow batches would blow executor
-      memory (SURVEY.md §7 "big binary rows vs Arrow batches").
+    - Arrow enabled for the pandas UDFs that remain (dynamic JSON,
+      the modifier's Go-semantics regex fallback, some entry queries
+      and text functions); the html parse runs in the JVM and crosses no Arrow
+      boundary.
     - UTC session TZ so DuckDB-oracle comparisons are stable.
     - shuffle partitions ~ cores for local mode; a real cluster run
       overrides via spark-submit --conf.
@@ -60,10 +61,10 @@ def get_spark(
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # 8192 measured 25% faster than 2048 on ~1KB pages (fewer
-        # Python round-trips); deployments with multi-KB html payloads
-        # should lower this so an Arrow batch stays ~10s of MB
-        # (SURVEY §4 "big binary rows vs Arrow batches").
+        # 8192 rows per Arrow batch: fewer Python round-trips for the
+        # pandas UDFs.  A UDF over a column of multi-KB values should
+        # lower this so a batch stays ~10s of MB (SURVEY §4 "big
+        # binary rows vs Arrow batches").
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "8192")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")

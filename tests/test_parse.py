@@ -5,7 +5,6 @@ from pyspark.sql import functions as F
 
 from hetman_spark.operators.parse import (
     grok_to_regex,
-    make_grok_pandas_udf,
     parse_grok,
     parse_json_dynamic,
     parse_json_static,
@@ -56,13 +55,6 @@ def test_nginx_parse_jvm(spark):
     assert row.asDict() == NGINX_EXPECTED
 
 
-def test_nginx_parse_pandas_udf(spark):
-    udf, fields = make_grok_pandas_udf(NGINX_PATTERN)
-    df = spark.createDataFrame([(NGINX_LINE,)], "line string")
-    row = _one(df.select(udf(F.col("line")).alias("p")))
-    assert row.asDict() == NGINX_EXPECTED
-
-
 def test_nginx_parse_failure_is_null_not_dropped(spark):
     # P6: parse failures forward the record unparsed (parser.go:148-155,201)
     df = spark.createDataFrame([("not an access log",), (NGINX_LINE,)], "line string")
@@ -70,6 +62,15 @@ def test_nginx_parse_failure_is_null_not_dropped(spark):
     assert len(out) == 2
     assert out[0]["p"] is None
     assert out[1]["p"] is not None
+
+
+def test_nginx_parse_anchors_at_end_of_text(spark):
+    # Go's `$` without (?m) is end of text: a trailing line terminator
+    # is not part of the last field and fails the match
+    lines = [NGINX_LINE + "\n", NGINX_LINE + "\r\n"]
+    df = spark.createDataFrame([(x,) for x in lines], "line string")
+    out = df.select(parse_grok(F.col("line"), NGINX_PATTERN).alias("p")).collect()
+    assert [r["p"] for r in out] == [None, None]
 
 
 def test_json_parse_static(spark):

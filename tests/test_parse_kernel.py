@@ -1,15 +1,16 @@
 """Edge fixtures for the html parse kernel (operators/html.py).
 
-The expected values were produced by the earlier pandas
-`Series.str.extract` kernel (Python `re`) and are pinned here as
-literals, so the Arrow/RE2 kernel must reproduce Python-regex
-semantics exactly: `$` before one final newline, lazy groups, DOTALL,
-and code-point (not byte) matching of non-ASCII text.
+The expected values were produced by Python `re` on the earlier
+kernels' combined template+grok pattern (a pandas `Series.str.extract`
+kernel, then an Arrow/RE2 one) and are pinned here as literals, so the
+slicing kernel must reproduce that regex exactly: one final newline
+allowed, lazy groups that backtrack to a later marker when grok needs
+it, DOTALL, and code-point (not byte) positions in non-ASCII text.
 """
 
 import pytest
 
-from hetman_spark.operators.html import make_full_extract_udf
+from hetman_spark.operators.html import extract_page
 from hetman_spark.plans.pipeline import NGINX_PATTERN, build_parsed
 
 LOG = '10.0.0.7 - - [09/Jun/2023:22:42:19 +0000] "GET /a HTTP/1.1" 500 612 "-" "curl/8.0"'
@@ -18,6 +19,7 @@ UNICODE_LOG = (
     '"-" "\u00a0ua\U0001f600"'
 )
 NEWLINE_LOG = '10.0.0.7 - - [d] "GET\n/ HTTP/1.1" 404 0 "-" "u\na"'
+MARKER_LOG = '10.0.0.7 - - [d] "GET /</p><!--log: x HTTP/1.1" 200 1 "-" "u"'
 
 
 def page(text, log=LOG, title="T"):
@@ -39,6 +41,15 @@ CASES = {
     "unicode_text": page("nb\u00a0sp e\u0301 \U0001f600 \u200b"),
     "unicode_log_fields": page("t", log=UNICODE_LOG),
     "newline_in_text_and_field": page("line\nbreak", log=NEWLINE_LOG),
+    # pages where slicing at the first marker and the combined regex
+    # could disagree
+    "log_marker_in_text": page("a</p><!--log: b"),
+    "log_marker_in_text_twice": page("a</p><!--log: b</p><!--log: c"),
+    "log_marker_in_text_grok_miss": page("a</p><!--log: b", log="not an access log"),
+    "log_marker_in_log_field": page("t", log=MARKER_LOG),
+    "body_marker_in_text": page("B</title></head><body><p>x", title="A"),
+    "suffix_in_log_line": page("kept", log=LOG + " --></body></html>x"),
+    "log_line_ends_newline": page("kept", log=LOG + "\n"),
 }
 
 LOG_FIELDS = {
@@ -91,20 +102,49 @@ EXPECTED = {
         "referrer": "-",
         "user_agent": "u\na",
     },
+    # the first log marker leaves a line grok rejects: the regex
+    # backtracks to the next marker whose line parses
+    "log_marker_in_text": {"title": "T", "log_line": LOG, "text": "a</p><!--log: b", **LOG_FIELDS},
+    "log_marker_in_text_twice": {
+        "title": "T", "log_line": LOG, "text": "a</p><!--log: b</p><!--log: c", **LOG_FIELDS,
+    },
+    # no marker gives a parsing line: the first marker splits text/log
+    "log_marker_in_text_grok_miss": {
+        "title": "T", "log_line": "b</p><!--log: not an access log", "text": "a",
+    },
+    # the first marker's line parses, so later markers stay in the log
+    "log_marker_in_log_field": {
+        "title": "T",
+        "log_line": MARKER_LOG,
+        "text": "t",
+        "remote_addr": "10.0.0.7",
+        "remote_user": "-",
+        "time_local": "d",
+        "request": "GET /</p><!--log: x HTTP/1.1",
+        "status": "200",
+        "bytes_sent": "1",
+        "referrer": "-",
+        "user_agent": "u",
+    },
+    "body_marker_in_text": {
+        "title": "A", "log_line": LOG, "text": "B</title></head><body><p>x", **LOG_FIELDS,
+    },
+    # the log line runs to the LAST page suffix
+    "suffix_in_log_line": {"title": "T", "log_line": LOG + " --></body></html>x", "text": "kept"},
+    "log_line_ends_newline": {"title": "T", "log_line": LOG + "\n", "text": "kept"},
 }
 
 
 @pytest.fixture(scope="module")
 def pages(spark):
     df = spark.createDataFrame(list(CASES.items()), "name string, html binary")
-    # several rows per Arrow batch and a mix of hits and misses in one
-    # batch: the fallback pass scatters back by mask
+    # hits and misses in one partition
     return df.coalesce(1)
 
 
 def test_kernel_edge_cases_match_python_regex(pages):
-    udf, fields = make_full_extract_udf(NGINX_PATTERN, include_aux=True)
-    got = {r["name"]: r["x"] for r in pages.select("name", udf("html").alias("x")).collect()}
+    fields = ["title", "text", "log_line", *LOG_FIELDS]
+    got = {r["name"]: r["x"] for r in extract_page(pages, NGINX_PATTERN, "x").collect()}
     assert set(got) == set(CASES)
     for name, want in EXPECTED.items():
         x = got[name]
@@ -113,8 +153,17 @@ def test_kernel_edge_cases_match_python_regex(pages):
         assert list(x.asDict()) == fields
 
 
+def test_invalid_utf8_fails_the_job(spark):
+    """Strict decode: an invalid page fails the task; no row is
+    repaired (a U+FFFD substitution would break byte-identical text)."""
+    html = page("x").replace(b"<p>x</p>", b"<p>\xff</p>")
+    bad = spark.createDataFrame([("bad", html)], "name string, html binary")
+    with pytest.raises(Exception, match="(?i)utf-?8|MALFORMED"):
+        build_parsed(bad).collect()
+
+
 def test_build_parsed_edge_rows(pages):
-    """The pipeline's slim kernel (no title/log_line) on the same pages."""
+    """The pipeline's parse stage on the same pages."""
     rows = {r["name"]: r for r in build_parsed(pages).collect()}
     assert len(rows) == len(CASES)  # P6: no row dropped
     for name, want in EXPECTED.items():

@@ -241,24 +241,32 @@ def test_lookup_tables_are_jvm_local(spark):
         assert plan.startswith("LocalRelation"), plan
 
 
-def test_pipeline_plan_has_one_python_crossing(spark):
-    """The run_pipeline parse -> broadcast enrich -> route plan crosses
-    into Python exactly once (the Arrow parse kernel) and scans no
+def test_pipeline_plan_has_no_python_crossing(spark, tmp_path):
+    """The run_pipeline parse -> broadcast enrich -> route plan and the
+    streaming twin's plan evaluate nothing in Python and scan no
     Python-backed relation."""
     from hetman_spark.plans.pipeline import build_parsed, build_routed, tags_disjoint
     from hetman_spark.sources.lookup import DEFAULT_SINKS, lang_lookup
     from hetman_spark.sources.webtext import generate_webtext
+    from hetman_spark.streaming.stream import read_webtext_stream
 
-    parsed = build_parsed(generate_webtext(spark, 200, n_splits=2)).drop("html")
-    routed = build_routed(
-        parsed.hint("rebalance", "split_id").join(F.broadcast(lang_lookup(spark)), "lang", "left"),
-        disjoint_tags=tags_disjoint(DEFAULT_SINKS),
-        sinks=DEFAULT_SINKS,
-    )
-    qe = routed._jdf.queryExecution()  # noqa: SLF001
-    physical = routed._sc._jvm.PythonSQLUtils.explainString(qe, "simple")  # noqa: SLF001
-    assert physical.count("ArrowEvalPython") == 1, physical
-    assert "BroadcastHashJoin" in physical
-    optimized = qe.optimizedPlan().toString()
-    for node in ("ExistingRDD", "LogicalRDD"):
-        assert node not in physical and node not in optimized, physical
+    def routed(parsed):
+        # the per-batch tail of run_pipeline and of the streaming sink
+        return build_routed(
+            parsed.join(F.broadcast(lang_lookup(spark)), "lang", "left"),
+            disjoint_tags=tags_disjoint(DEFAULT_SINKS),
+            sinks=DEFAULT_SINKS,
+        )
+
+    webtext = generate_webtext(spark, 200, n_splits=2)
+    webtext.write.parquet(str(tmp_path / "wt"))
+    batch = routed(build_parsed(webtext).drop("html").hint("rebalance", "split_id"))
+    stream = routed(build_parsed(read_webtext_stream(spark, str(tmp_path / "wt"))).drop("html"))
+    assert stream.isStreaming
+    for df in (batch, stream):
+        qe = df._jdf.queryExecution()  # noqa: SLF001
+        plans = df._sc._jvm.PythonSQLUtils.explainString(qe, "extended")  # noqa: SLF001
+        python_nodes = ("ArrowEvalPython", "BatchEvalPython", "PythonUDF")
+        for node in (*python_nodes, "ExistingRDD", "LogicalRDD"):
+            assert node not in plans, plans
+        assert "BroadcastHashJoin" in plans
