@@ -311,6 +311,8 @@ def main(argv: list[str] | None = None) -> int:
 
         from pyspark.sql import functions as F
 
+        from hetman_spark.plans.pipeline import write_sinks
+
         data_dir = f"{args.out}/data"
         files_before = len(_glob.glob(f"{data_dir}/*/*/*.parquet"))
         df = spark.read.parquet(data_dir)
@@ -322,12 +324,8 @@ def main(argv: list[str] | None = None) -> int:
         # repartition BY the partition columns: each (sink_id, split_id)
         # lands in exactly one task -> exactly one file per partition
         # dir; compaction is a pure re-layout, no logic re-run
-        (
-            df.repartition(F.col("sink_id"), F.col("split_id"))
-            .write.mode("overwrite")
-            .option("compression", "zstd")
-            .partitionBy("sink_id", "split_id")
-            .parquet(tmp_dir)
+        write_sinks(
+            df.repartition(F.col("sink_id"), F.col("split_id")), tmp_dir, ["sink_id", "split_id"]
         )
         after = {
             r["sink_id"]: r["n"]

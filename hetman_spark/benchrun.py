@@ -31,7 +31,7 @@ def _routed(spark, frame):
     from hetman_spark.plans.pipeline import build_parsed, build_routed, tags_disjoint
     from hetman_spark.sources.lookup import DEFAULT_SINKS, lang_lookup
 
-    reb = build_parsed(frame).drop("html").hint("rebalance", "split_id")
+    reb = build_parsed(frame).hint("rebalance", "split_id")
     return build_routed(reb.join(F.broadcast(lang_lookup(spark)), "lang", "left"),
                         disjoint_tags=tags_disjoint(DEFAULT_SINKS), sinks=DEFAULT_SINKS)
 

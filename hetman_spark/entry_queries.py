@@ -3126,15 +3126,6 @@ def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _gram_md5_factory(words, k: int):
-    """Closure factory (CLAUDE.md: binding loop vars via default args
-    inside higher-order lambdas silently changes semantics)."""
-    def g(i):
-        return F.md5(F.concat_ws(" ", F.slice(words, i + 1, k)))
-
-    return g
-
-
 def _gram_struct_md5_factory(words, k: int):
     """(index) -> struct<h: md5 of gram at index, np: -index> — the
     (hash, negated position) sort key whose lexicographic MIN is
@@ -4127,7 +4118,7 @@ def q_webtext_route_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partitionOverwriteMode suppresses the engine _SUCCESS file.
     df = spark.read.parquet(_ensure_webtext_fixture(spark))
     flow = build_routed(
-        build_parsed(df).drop("html").join(F.broadcast(lang_lookup(spark)), "lang", "left"),
+        build_parsed(df).join(F.broadcast(lang_lookup(spark)), "lang", "left"),
         routes_df(spark),
         disjoint_tags=tags_disjoint(DEFAULT_SINKS),
     )

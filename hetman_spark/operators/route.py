@@ -128,14 +128,9 @@ def route_explode_static(df: DataFrame, sinks, predicate_cols: list[str]) -> Dat
         )
         return F.when(cond, payload)
 
-    arr = F.array_compact(F.array(*[entry(s) for s in sinks]))
-    out = df.withColumn("_route", F.explode(arr))
-    return (
-        out.withColumn("sink_id", F.col("_route.sink_id"))
-        .withColumn("add_tags", F.col("_route.add_tags"))
-        .withColumn("format", F.col("_route.format"))
-        .drop("_route")
-    )
+    # inline = explode + one column per struct field, in one select
+    # (one analysis pass; the same interpreted Generate node)
+    return df.select("*", F.inline(F.array_compact(F.array(*[entry(s) for s in sinks]))))
 
 
 def route_per_sink(df: DataFrame, routes_rows: list[dict], predicate_cols: list[str]) -> dict[str, DataFrame]:

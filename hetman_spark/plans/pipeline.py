@@ -16,7 +16,9 @@ Stages and their reference analogs:
   enrich_with_lookup (salted + broadcast)     . add-fields w/ lookup
   route_explode + with_sink_tags              . Modifier fan-out + Loki
                                                 stream building (M4/F2)
-  write partitionBy(sink_id, split_id)        . Forwarder delivery (F1)
+  write_sinks (partitionBy(sink_id,           . Forwarder delivery (F1)
+    split_id), url-sorted files, zstd, no
+    dictionary for text/url/tag values)
   lineage + sink counts                       . OTel counters (A1/A2)
   commit_split                                . registry persist (A5)
 
@@ -83,36 +85,34 @@ def build_parsed(df: DataFrame, modifier: ModifierConfig | None = None) -> DataF
     """parse + modify (narrow stages only — no shuffle; the parse runs
     in the JVM).
 
-    Produces columns: url, warc_ts, lang, split_id, extracted_text,
-    parsed (map), parse_ok, status_class.
+    Produces the input's columns except html, then extracted_text,
+    parsed (map), parse_ok, status_class.  On the webtext source that
+    is: url, warc_ts, text, lang, split_id, extracted_text, parsed,
+    parse_ok, status_class.
     """
     # --- parse stage: html -> text + grok fields (JVM slicing + grok)
     status = F.col("_x.status")  # null iff the log line missed grok
-    df = (
-        extract_page(df, NGINX_PATTERN, "_x")
-        .withColumn("extracted_text", F.col("_x.text"))
-        # parsed map (hetman's Parsed map[string]string); null-safe (P6)
-        .withColumn(
-            "parsed",
-            F.when(
-                status.isNotNull(),
-                F.map_from_arrays(
-                    F.array(*[F.lit(f) for f in LOG_FIELDS]),
-                    F.array(*[F.col(f"_x.{f}") for f in LOG_FIELDS]),
-                ),
-            ),
-        )
-        .withColumn("parse_ok", F.col("parsed").isNotNull())
+    # parsed map (hetman's Parsed map[string]string); null-safe (P6)
+    parsed = F.when(
+        status.isNotNull(),
+        F.map_from_arrays(
+            F.array(*[F.lit(f) for f in LOG_FIELDS]),
+            F.array(*[F.col(f"_x.{f}") for f in LOG_FIELDS]),
+        ),
+    )
+    # one projection for every output column: each withColumn/drop is
+    # a separate analysis pass on the driver
+    df = extract_page(df, NGINX_PATTERN, "_x").select(
+        *[c for c in df.columns if c != "html"],
+        F.col("_x.text").alias("extracted_text"),
+        parsed.alias("parsed"),
+        status.isNotNull().alias("parse_ok"),
         # status_class routing tag (5xx -> errors sink), from the parse
         # struct before the modifier can rename/drop fields
-        .withColumn(
-            "status_class",
-            F.when(
-                status.isNotNull() & (status != ""),
-                F.concat(F.substring(status, 1, 1), F.lit("xx")),
-            ).otherwise(F.lit("unparsed")),
-        )
-        .drop("_x")
+        F.when(
+            status.isNotNull() & (status != ""),
+            F.concat(F.substring(status, 1, 1), F.lit("xx")),
+        ).otherwise(F.lit("unparsed")).alias("status_class"),
     )
 
     # --- modifier stage (M1-M3, pure Catalyst) ---
@@ -175,6 +175,42 @@ def build_routed(
         # metadata read instead of a second parse pass (A1/A2).
         F.when(F.col("parse_ok"), F.lit(True)).alias("parse_ok"),
     )
+
+
+# Sink columns written without a parquet dictionary.  parquet-mr
+# hashes every value into a dictionary and falls back to plain
+# encoding when the dictionary does not pay: in the 64 sink files of a
+# 60k-page backfill, `text` and `url` had no dictionary page in any
+# file, so hashing every value bought nothing.  `tags.key_value.value`
+# (grok fields and the url-valued `source` tag) kept its dictionary,
+# but written plain under zstd it is 24% smaller (4.14 -> 3.16 MB).
+# Dictionaries stay on for the low-cardinality lang, warc_ts and
+# tags.key_value.key.
+PLAIN_ENCODED_COLUMNS = ("text", "url", "tags.key_value.value")
+
+
+def write_sinks(routed: DataFrame, data_dir: str, partition_cols: list[str]) -> None:
+    """The one sink writer (batch pipeline, streaming twin, compact):
+    overwrite of the partition dirs of `routed`, partitioned by
+    `partition_cols`, url-sorted within each file, zstd, and no
+    dictionary for PLAIN_ENCODED_COLUMNS.  The partition-overwrite
+    mode (dynamic) is the caller's session conf.
+
+    Sorting within each write task on (partition cols, url): the file
+    writer needs rows grouped by the partition columns anyway (it
+    sorts on them when a task spans several dirs), so appending url
+    rides that same local sort for ~free — no extra shuffle — and
+    gives every output file monotone url row groups: parquet min/max
+    footer stats then prune downstream point/range scans on the
+    natural key (BENCH.md 'sorted sink writes')."""
+    writer = (
+        routed.sortWithinPartitions(*partition_cols, "url")
+        .write.mode("overwrite")
+        .option("compression", "zstd")
+    )
+    for col in PLAIN_ENCODED_COLUMNS:
+        writer = writer.option(f"parquet.enable.dictionary#{col}", "false")
+    writer.partitionBy(*partition_cols).parquet(data_dir)
 
 
 def _discover_splits(spark: SparkSession, src: DataFrame, input_path: str) -> list[int]:
@@ -455,7 +491,7 @@ def run_pipeline(
         # cores (measured: cache materialization dominated the
         # non-scaling fraction).  The parse is recomputed for the one
         # lineage agg job instead — CPU that scales linearly.
-        parsed = build_parsed(df, modifier=modifier).drop("html")
+        parsed = build_parsed(df, modifier=modifier)
 
         # A3/A4 per-stage counters: observations ride the write job
         # (map-side aggregated by the executor metrics system, zero
@@ -599,24 +635,10 @@ def run_pipeline(
         )
         obs_route = Observation()
         routed = routed.observe(obs_route, F.count(F.lit(1)).alias("rows_routed"))
-        # Sort within each write task on (partition cols, url): the
-        # file writer needs rows grouped by (sink_id, split_id) anyway
-        # (it sorts on the partition columns when a task spans several
-        # dirs), so appending url rides that same local sort for ~free
-        # — no extra shuffle — and gives every output file monotone
-        # url row groups: parquet min/max footer stats then prune
-        # downstream point/range scans on the natural key
-        # (BENCH.md 'sorted sink writes').
-        routed = routed.sortWithinPartitions("sink_id", "split_id", "url")
         import time as _time
 
         _t0 = _time.time()
-        (
-            routed.write.mode("overwrite")
-            .option("compression", "zstd")
-            .partitionBy("sink_id", "split_id")
-            .parquet(data_dir)
-        )
+        write_sinks(routed, data_dir, ["sink_id", "split_id"])
         _t1 = _time.time()
         # one counter record per batch: summed into the result and
         # written verbatim to the _metrics feed below

@@ -29,6 +29,9 @@ def get_spark(
       and text functions); the html parse runs in the JVM and crosses no Arrow
       boundary.
     - UTC session TZ so DuckDB-oracle comparisons are stable.
+    - PySpark call-site capture off: it costs about 2 ms of driver
+      time per Column operation, serial time in every batch's plan
+      build.
     - shuffle partitions ~ cores for local mode; a real cluster run
       overrides via spark-submit --conf.
     """
@@ -78,6 +81,14 @@ def get_spark(
         # 100-entry window would undercount drains of >100 micro-batches
         .config("spark.sql.streaming.numRecentProgressUpdates", "10000")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
+        # PySpark's call-site capture (_with_origin) walks the Python
+        # stack and retries `import IPython` on every Column and
+        # DataFrame call: `F.col("a") + 1` took 2.8 ms with it and
+        # 0.6 ms without (4-CPU box, mean of 2000 calls).  One
+        # pipeline batch's plan makes about 130 such calls.  Analysis
+        # errors still name the column and show the plan; runtime
+        # errors keep their error class but lose the Python file:line.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if os.environ.get("HETMAN_SPARK_KAFKA_PACKAGES"):
         # S5/F4 last mile: pull the Kafka connector from Maven at

@@ -14,7 +14,8 @@ The transform chain REUSES the batch operators verbatim
 (build_parsed / enrich / route): one definition of the semantics, two
 execution modes — the core argument for rebuilding hetman on Spark.
 
-Sink: foreachBatch -> per-sink partitioned parquet, one partition per
+Sink: foreachBatch -> the batch pipeline's sink writer
+(plans/pipeline.py write_sinks: same file format), one partition per
 epoch_id with dynamic partition overwrite, so a retried micro-batch
 replaces its own partial output instead of duplicating it
 (exactly-once OBSERVABLE output on top of foreachBatch's
@@ -127,14 +128,14 @@ def streaming_pipeline(
     commit log (checkpoint_dir) makes each micro-batch exactly-once —
     the streaming twin of the batch manifest.
     """
-    from hetman_spark.plans.pipeline import build_parsed, build_routed, tags_disjoint
+    from hetman_spark.plans.pipeline import build_parsed, build_routed, tags_disjoint, write_sinks
     from hetman_spark.sources.lookup import DEFAULT_SINKS, lang_lookup
 
     lookup = lang_lookup(spark)
     disjoint = tags_disjoint(DEFAULT_SINKS)
 
     stream = read_webtext_stream(spark, input_dir, max_files_per_trigger)
-    parsed = build_parsed(stream).drop("html")
+    parsed = build_parsed(stream)
 
     def sink_batch(batch_df: DataFrame, epoch_id: int) -> None:
         # Idempotent sink: foreachBatch gives at-least-once delivery (a
@@ -158,11 +159,10 @@ def streaming_pipeline(
             batch_df.join(F.broadcast(lookup), "lang", "left"),
             disjoint_tags=disjoint, sinks=DEFAULT_SINKS,
         )
-        (
-            routed.withColumn("epoch_id", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .partitionBy("epoch_id", "sink_id", "split_id")
-            .parquet(f"{out_dir}/data")
+        write_sinks(
+            routed.withColumn("epoch_id", F.lit(int(epoch_id))),
+            f"{out_dir}/data",
+            ["epoch_id", "sink_id", "split_id"],
         )
 
     writer = (

@@ -38,6 +38,9 @@ def main() -> None:
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
+        # call-site capture costs about 2 ms of driver time per Column
+        # operation (see hetman_spark/session.py)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .getOrCreate()
     )
 

@@ -1315,6 +1315,16 @@ def test_corpus_release_verdict_order_and_masking(spark, sf_dir):
                 assert lo["n_pii"] >= 1 and "<EMAIL>" in lo["masked"]
 
 
+def _gram_md5_factory(words, k: int):
+    """(index) -> md5 of the k-gram at that index; a closure factory,
+    because binding loop vars via default args inside higher-order
+    lambdas silently changes semantics."""
+    def g(i):
+        return F.md5(F.concat_ws(" ", F.slice(words, i + 1, k)))
+
+    return g
+
+
 def test_winnow_array_form_matches_shuffle_first(spark, sf_dir):
     """r6 optimization equivalence pin: the zero-shuffle per-row array
     formulation of q_winnow_fingerprints selects the IDENTICAL
@@ -1325,7 +1335,6 @@ def test_winnow_array_form_matches_shuffle_first(spark, sf_dir):
     from hetman_spark.entry_queries import (
         _WN_K,
         _WN_W,
-        _gram_md5_factory,
         _tp,
         q_winnow_fingerprints,
     )

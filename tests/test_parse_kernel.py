@@ -162,9 +162,19 @@ def test_invalid_utf8_fails_the_job(spark):
         build_parsed(bad).collect()
 
 
-def test_build_parsed_edge_rows(pages):
-    """The pipeline's parse stage on the same pages."""
-    rows = {r["name"]: r for r in build_parsed(pages).collect()}
+def test_build_parsed_edge_rows(spark, pages):
+    """The pipeline's parse stage on the same pages, and its column
+    contract (the build_parsed docstring): the input's columns except
+    html, then the four parse columns."""
+    from hetman_spark.sources.webtext import generate_webtext
+
+    parsed = build_parsed(pages)
+    assert parsed.columns == ["name", "extracted_text", "parsed", "parse_ok", "status_class"]
+    assert build_parsed(generate_webtext(spark, 10, n_splits=2)).columns == [
+        "url", "warc_ts", "text", "lang", "split_id",
+        "extracted_text", "parsed", "parse_ok", "status_class",
+    ]
+    rows = {r["name"]: r for r in parsed.collect()}
     assert len(rows) == len(CASES)  # P6: no row dropped
     for name, want in EXPECTED.items():
         assert rows[name]["extracted_text"] == want.get("text"), name

@@ -205,6 +205,48 @@ def test_output_file_count_is_commit_scale_safe(spark, tmp_path):
         assert st is not None and st.has_min_max  # pruning stats present
 
 
+def _sink_chunk_footers(data_dir: str) -> dict[str, list]:
+    """path_in_schema -> column-chunk metadata of every row group of
+    every sink file under data_dir."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    files = glob.glob(f"{data_dir}/**/*.parquet", recursive=True)
+    assert files
+    chunks: dict[str, list] = {}
+    for f in files:
+        md = pq.read_metadata(f)
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            for i in range(rg.num_columns):
+                chunks.setdefault(rg.column(i).path_in_schema, []).append(rg.column(i))
+    return chunks
+
+
+def test_sink_files_skip_dictionary_on_high_cardinality_columns(spark, webtext_path, tmp_path):
+    """Every sink file, from the batch pipeline and from a streaming
+    drain alike (one writer, plans/pipeline.py write_sinks): text, url
+    and the tag values are written without a parquet dictionary, the
+    low-cardinality lang and tag keys keep theirs, and url min/max
+    statistics stay for pruning."""
+    from hetman_spark.streaming.stream import streaming_pipeline
+
+    out = str(tmp_path / "batch")
+    run_pipeline(spark, webtext_path, out)
+    query = streaming_pipeline(spark, webtext_path, str(tmp_path / "stream"),
+                               str(tmp_path / "ckpt"))
+    query.awaitTermination(120)
+    for data_dir in (f"{out}/data", str(tmp_path / "stream" / "data")):
+        chunks = _sink_chunk_footers(data_dir)
+        for col in ("text", "url", "tags.key_value.value"):
+            assert not any(c.has_dictionary_page for c in chunks[col]), (data_dir, col)
+        for col in ("lang", "tags.key_value.key"):
+            assert all(c.has_dictionary_page for c in chunks[col]), (data_dir, col)
+        assert all(c.statistics is not None and c.statistics.has_min_max
+                   for c in chunks["url"]), data_dir
+
+
 def test_pipeline_dedup_stage(spark, tmp_path):
     """run_pipeline(dedup=True): duplicate texts (planted by copying
     rows under new urls) are dropped deterministically — match-all

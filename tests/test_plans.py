@@ -260,8 +260,8 @@ def test_pipeline_plan_has_no_python_crossing(spark, tmp_path):
 
     webtext = generate_webtext(spark, 200, n_splits=2)
     webtext.write.parquet(str(tmp_path / "wt"))
-    batch = routed(build_parsed(webtext).drop("html").hint("rebalance", "split_id"))
-    stream = routed(build_parsed(read_webtext_stream(spark, str(tmp_path / "wt"))).drop("html"))
+    batch = routed(build_parsed(webtext).hint("rebalance", "split_id"))
+    stream = routed(build_parsed(read_webtext_stream(spark, str(tmp_path / "wt"))))
     assert stream.isStreaming
     for df in (batch, stream):
         qe = df._jdf.queryExecution()  # noqa: SLF001

@@ -12,7 +12,7 @@ from hetman_spark.sources.webtext import generate_webtext
 
 
 def test_static_router_matches_join_router(spark):
-    df = build_parsed(generate_webtext(spark, 2000, n_splits=4)).drop("html").join(
+    df = build_parsed(generate_webtext(spark, 2000, n_splits=4)).join(
         F.broadcast(lang_lookup(spark)), "lang", "left"
     )
     cols = ["lang", "status_class", "region"]
@@ -32,7 +32,7 @@ def test_static_router_matches_join_router(spark):
 
 
 def test_static_router_no_bnlj(spark):
-    df = build_parsed(generate_webtext(spark, 200, n_splits=2)).drop("html").join(
+    df = build_parsed(generate_webtext(spark, 200, n_splits=2)).join(
         F.broadcast(lang_lookup(spark)), "lang", "left"
     )
     out = route_explode_static(df, DEFAULT_SINKS, ["lang", "status_class", "region"])
