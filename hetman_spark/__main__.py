@@ -146,48 +146,15 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "run":
+        from hetman_spark.config_yaml import ConfigError, run_targets
         from hetman_spark.plans.pipeline import run_pipeline
-        from hetman_spark.sources.lookup import DEFAULT_SINKS
 
-        # Every config target runs (the reference runs every workflow,
-        # orchestrator.go runWorkflow loop) — not just specs[0].  A
-        # bare --input/--out run is a single anonymous target.
-        targets: list[tuple[str, str, tuple, object]] = []
-        salt_buckets = args.salt_buckets if args.salt_buckets is not None else 8
-        splits_per_commit = (
-            args.splits_per_commit if args.splits_per_commit is not None else 64
-        )
-        if args.config:
-            from hetman_spark.config_yaml import load_config
-
-            gc, specs = load_config(args.config)
-            # config supplies defaults; an EXPLICIT CLI flag wins
-            if args.salt_buckets is None:
-                salt_buckets = gc.salt_buckets
-            if args.splits_per_commit is None:
-                splits_per_commit = gc.splits_per_commit
-            base_out = args.out or gc.out_dir
-            if not base_out:
-                ap.error("run requires --out or config global.out_dir")
-            for i, spec in enumerate(specs):
-                input_path = args.input or spec.input_path
-                if not input_path:
-                    ap.error(
-                        f"target {spec.id or i} has no input.path and no --input given"
-                    )
-                # each target gets its own manifest/data namespace so
-                # resume state never crosses targets
-                out_dir = (
-                    os.path.join(base_out, spec.id or f"target{i}")
-                    if len(specs) > 1
-                    else base_out
-                )
-                targets.append((input_path, out_dir, spec.sinks or DEFAULT_SINKS,
-                                spec.modifier))
-        else:
-            if not args.input or not args.out:
-                ap.error("run requires --input/--out or --config providing them")
-            targets.append((args.input, args.out, DEFAULT_SINKS, None))
+        try:
+            settings, targets = run_targets(
+                args.config, args.input, args.out, args.salt_buckets, args.splits_per_commit
+            )
+        except ConfigError as e:
+            ap.error(str(e))
 
         labeled_input = args.labeled_input
         if args.payloads:
@@ -207,15 +174,14 @@ def main(argv: list[str] | None = None) -> int:
         tot_in = tot_parsed = 0
         tot_sinks: dict[str, int] = {}
         n_splits_done = 0
-        for input_path, out_dir, sinks, modifier in targets:
+        for input_path, out_dir, spec in targets:
             res = run_pipeline(
                 spark,
                 input_path,
                 out_dir,
-                sinks=sinks,
-                modifier=modifier,
-                salt_buckets=salt_buckets,
-                splits_per_commit=splits_per_commit,
+                spec=spec,
+                salt_buckets=settings.salt_buckets,
+                splits_per_commit=settings.splits_per_commit,
                 max_splits=args.max_splits,
                 presalt=args.presalt,
                 labeled_input_path=labeled_input,

@@ -25,15 +25,12 @@ def _emit(record: dict) -> None:
 
 def _routed(spark, frame):
     """The pipeline's compute path without its sink write and commit:
-    parse -> rebalance(split_id) -> broadcast enrich -> route."""
-    from pyspark.sql import functions as F
+    plan_batch (parse -> rebalance(split_id) -> broadcast enrich ->
+    route) on the default spec."""
+    from hetman_spark.plans.pipeline import DEFAULT_SPEC, plan_batch
+    from hetman_spark.sources.lookup import lang_lookup
 
-    from hetman_spark.plans.pipeline import build_parsed, build_routed, tags_disjoint
-    from hetman_spark.sources.lookup import DEFAULT_SINKS, lang_lookup
-
-    reb = build_parsed(frame).hint("rebalance", "split_id")
-    return build_routed(reb.join(F.broadcast(lang_lookup(spark)), "lang", "left"),
-                        disjoint_tags=tags_disjoint(DEFAULT_SINKS), sinks=DEFAULT_SINKS)
+    return plan_batch(frame, DEFAULT_SPEC, lang_lookup(spark)).routed
 
 
 def noop_write(df) -> None:

@@ -51,8 +51,11 @@ class ParserConfig:
 
     format: one of "nginx" | "json" | "syslog-rfc5424" | "syslog-rfc3164"
     (dispatch at /root/reference/internal/parser/parser.go:145-198);
-    pattern only used by nginx/grok; multiline_pattern marks
-    continuation lines (/root/reference/internal/parser/parser.go:93-128).
+    pattern only used by nginx/grok (empty = the nginx combined-log
+    pattern); multiline_pattern marks continuation lines
+    (/root/reference/internal/parser/parser.go:93-128).  The webtext
+    pipeline runs "" / "nginx" with a single-line pattern only
+    (plans/pipeline.py grok_pattern rejects the rest at plan build).
     """
 
     format: str = ""
@@ -109,10 +112,3 @@ class PipelineSpec:
     parser: ParserConfig = ParserConfig()
     modifier: ModifierConfig = ModifierConfig()
     sinks: tuple[SinkConfig, ...] = ()
-    # number of discrete input splits for checkpoint/resume; a split is
-    # the batch analog of a tailed file's offset range
-    # (/root/reference/internal/registry/registry.go:14-18).
-    n_splits: int = 16
-    # salt buckets for the pre-enrich repartition (north_rule skew
-    # handling); 0 disables salting.
-    salt_buckets: int = 8

@@ -19,7 +19,8 @@ Validation semantics kept from the reference:
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import os
+from dataclasses import dataclass, replace
 
 from hetman_spark.config import (
     ModifierConfig,
@@ -39,7 +40,6 @@ class ConfigError(ValueError):
 @dataclass(frozen=True)
 class GlobalConfig:
     out_dir: str = ""
-    n_splits: int = 16
     salt_buckets: int = 8
     splits_per_commit: int = 64
 
@@ -111,7 +111,6 @@ def load_config(path: str) -> tuple[GlobalConfig, list[PipelineSpec]]:
     g = raw.get("global", {}) or {}
     gc = GlobalConfig(
         out_dir=g.get("out_dir", ""),
-        n_splits=int(g.get("n_splits", 16)),
         salt_buckets=int(g.get("salt_buckets", 8)),
         splits_per_commit=int(g.get("splits_per_commit", 64)),
     )
@@ -127,11 +126,7 @@ def load_config(path: str) -> tuple[GlobalConfig, list[PipelineSpec]]:
         if spec.input_path and spec.input_path in by_path:
             prev = by_path[spec.input_path]
             combined = prev.sinks + tuple(s for s in spec.sinks if s not in prev.sinks)
-            replacement = PipelineSpec(
-                id=prev.id, input_path=prev.input_path, parser=prev.parser,
-                modifier=prev.modifier, sinks=combined,
-                n_splits=prev.n_splits, salt_buckets=prev.salt_buckets,
-            )
+            replacement = replace(prev, sinks=combined)
             by_path[spec.input_path] = replacement
             merged[merged.index(prev)] = replacement
         else:
@@ -139,3 +134,53 @@ def load_config(path: str) -> tuple[GlobalConfig, list[PipelineSpec]]:
                 by_path[spec.input_path] = spec
             merged.append(spec)
     return gc, merged
+
+
+def run_targets(
+    config_path: str | None,
+    input_path: str | None,
+    out_dir: str | None,
+    salt_buckets: int | None,
+    splits_per_commit: int | None,
+    defaults: GlobalConfig = GlobalConfig(),
+) -> tuple[GlobalConfig, list[tuple[str, str, PipelineSpec]]]:
+    """The targets of one `run` (CLI and spark-submit job alike):
+    [(input_path, out_dir, spec)] plus the run's settings.
+
+    Every config target runs (the reference runs every workflow,
+    orchestrator.go runWorkflow loop), each in its own output
+    namespace out/<id> when there are several, so resume state never
+    crosses targets; a bare input/out run is one anonymous target on
+    the default sinks.  Settings: an explicit flag (not None) beats the
+    config's global section, which beats `defaults` (the caller's flag
+    defaults, used only without a config)."""
+    if config_path:
+        settings, specs = load_config(config_path)
+    else:
+        if not input_path or not out_dir:
+            raise ConfigError("run requires --input/--out or --config providing them")
+        from hetman_spark.plans.pipeline import DEFAULT_SPEC
+
+        settings, specs = defaults, [DEFAULT_SPEC]
+    settings = replace(
+        settings,
+        out_dir=out_dir or settings.out_dir,
+        salt_buckets=settings.salt_buckets if salt_buckets is None else salt_buckets,
+        splits_per_commit=(
+            settings.splits_per_commit if splits_per_commit is None else splits_per_commit
+        ),
+    )
+    if not settings.out_dir:
+        raise ConfigError("run requires --out or config global.out_dir")
+    targets = []
+    for i, spec in enumerate(specs):
+        target_input = input_path or spec.input_path
+        if not target_input:
+            raise ConfigError(f"target {spec.id or i} has no input.path and no --input given")
+        target_out = (
+            os.path.join(settings.out_dir, spec.id or f"target{i}")
+            if len(specs) > 1
+            else settings.out_dir
+        )
+        targets.append((target_input, target_out, spec))
+    return settings, targets

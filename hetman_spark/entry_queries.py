@@ -19,8 +19,7 @@ from pyspark.sql import functions as F
 
 from hetman_spark.operators.multiline import stitch_multiline
 from hetman_spark.operators.parse import parse_grok
-from hetman_spark.operators.route import route_explode
-from hetman_spark.sources.lookup import local_table
+from hetman_spark.operators.route import Route, route_explode_static
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -175,17 +174,13 @@ GROUP BY r_name
 
 def q_route_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
-    routes = local_table(
-        spark,
-        [
-            ("sink_all", "*", "*"),
-            ("sink_urgent", "o_orderpriority", "1-URGENT"),
-            ("sink_high", "o_orderpriority", "2-HIGH"),
-            ("sink_finished", "o_orderstatus", "F"),
-        ],
-        "sink_id string, predicate_col string, predicate_val string",
-    )
-    routed = route_explode(o, routes, predicate_cols=["o_orderpriority", "o_orderstatus"])
+    routes = [
+        Route("sink_all"),
+        Route("sink_urgent", "o_orderpriority", "1-URGENT"),
+        Route("sink_high", "o_orderpriority", "2-HIGH"),
+        Route("sink_finished", "o_orderstatus", "F"),
+    ]
+    routed = route_explode_static(o, routes, predicate_cols=["o_orderpriority", "o_orderstatus"])
     return routed.groupBy("sink_id").agg(F.count(F.lit(1)).alias("n"))
 
 
@@ -474,16 +469,12 @@ FROM fan GROUP BY 1
 
 def q_route_fanout_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
-    routes = local_table(
-        spark,
-        [
-            ("sink_all", "*", "*"),
-            ("sink_urgent", "o_orderpriority", "1-URGENT"),
-            ("sink_finished", "o_orderstatus", "F"),
-        ],
-        "sink_id string, predicate_col string, predicate_val string",
-    )
-    routed = route_explode(o, routes, predicate_cols=["o_orderpriority", "o_orderstatus"])
+    routes = [
+        Route("sink_all"),
+        Route("sink_urgent", "o_orderpriority", "1-URGENT"),
+        Route("sink_finished", "o_orderstatus", "F"),
+    ]
+    routed = route_explode_static(o, routes, predicate_cols=["o_orderpriority", "o_orderstatus"])
     return routed.select("sink_id", F.col("o_orderkey").alias("orderkey"))
 
 
@@ -4094,11 +4085,12 @@ FROM canon GROUP BY canonical_url
 
 
 def q_webtext_route_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The actual webtext pipeline (generate -> parse -> enrich ->
-    route) on a fixed deterministic 20k-row table, returning per-sink
-    counts.  The generated table is materialized to parquet at a fixed
-    path so the DuckDB oracle can read the SAME bytes and re-derive the
-    routing independently (regex over the decoded html for the status
+    """The pipeline's batch plan (plan_batch: parse -> rebalance ->
+    enrich -> route, the plan run_pipeline writes) on a fixed
+    deterministic 20k-row table, returning per-sink counts.  The
+    generated table is materialized to parquet at a fixed path so the
+    DuckDB oracle can read the SAME bytes and re-derive the routing
+    independently (regex over the decoded html for the status
     class + an inline lang->region mapping) — full parity for the
     flagship pipeline query instead of rows-only.
 
@@ -4107,8 +4099,8 @@ def q_webtext_route_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     reused — the recorded per-query timing then measures the pipeline,
     not the fixture generator (~3.7s of the r2 bench number was
     regeneration)."""
-    from hetman_spark.plans.pipeline import build_parsed, build_routed, tags_disjoint
-    from hetman_spark.sources.lookup import DEFAULT_SINKS, lang_lookup, routes_df
+    from hetman_spark.plans.pipeline import DEFAULT_SPEC, plan_batch
+    from hetman_spark.sources.lookup import lang_lookup
 
     # reuse is keyed on a success marker written only AFTER the
     # generator job returns — a write killed mid-job leaves partition
@@ -4117,12 +4109,8 @@ def q_webtext_route_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # accepted partials).  The marker is ours, not Spark's: dynamic
     # partitionOverwriteMode suppresses the engine _SUCCESS file.
     df = spark.read.parquet(_ensure_webtext_fixture(spark))
-    flow = build_routed(
-        build_parsed(df).join(F.broadcast(lang_lookup(spark)), "lang", "left"),
-        routes_df(spark),
-        disjoint_tags=tags_disjoint(DEFAULT_SINKS),
-    )
-    return flow.groupBy("sink_id").agg(F.count(F.lit(1)).alias("n"))
+    routed = plan_batch(df, DEFAULT_SPEC, lang_lookup(spark)).routed
+    return routed.groupBy("sink_id").agg(F.count(F.lit(1)).alias("n"))
 
 
 def _sql_webtext_route_counts() -> str:

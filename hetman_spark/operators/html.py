@@ -2,8 +2,8 @@
 
 The html binary column plays pipeline.Data.LogLine
 (/root/reference/internal/pipeline/pipeline.go:3-8); extraction pulls
-(title, text, embedded access-log line) the way the reference parser
-pulls Parsed fields from LogLine.
+(text, embedded access-log line) the way the reference parser pulls
+Parsed fields from LogLine.
 
 Correctness invariant (BASELINE.json input_hint): the extracted text
 must be BYTE-IDENTICAL per url to the table's golden `text` column.
@@ -17,10 +17,11 @@ fixed (sources/webtext.py HTML_*), so the kernel slices the decoded
 page at its markers with locate/substring instead of running a regex
 over it; only the embedded log line goes through a regex
 (operators/parse.py parse_grok).  The slices equal the regex
-``^PREFIX(title.*?)MID_1(text.*?)MID_2(log_line) SUFFIX\\n?$`` (DOTALL,
+``^PREFIX.*?MID_1(text.*?)MID_2(log_line) SUFFIX\\n?$`` (DOTALL,
 lazy groups, grok on log_line, the template alone when grok misses):
 
-- title ends at the first MID_1;
+- text starts after the first MID_1 (the title before it is not
+  extracted);
 - log_line runs to the page's final SUFFIX, which may be followed by
   one newline;
 - text ends at the first MID_2 whose log line parses, or at the first
@@ -41,12 +42,12 @@ from hetman_spark.sources.webtext import HTML_MID_1, HTML_MID_2, HTML_PREFIX, HT
 
 
 def extract_page(df: DataFrame, grok_pattern: str, out: str) -> DataFrame:
-    """Add column ``out``: struct<title, text, log_line, *grok fields>
-    parsed from the binary ``html`` column (the whole parse stage).
+    """Add column ``out``: struct<text, log_line, *grok fields> parsed
+    from the binary ``html`` column (the whole parse stage).
 
     A page that matches no template (or null html) gives a non-null
     struct of null fields; a template page whose log line misses grok
-    keeps title/text/log_line with null grok fields (P6).
+    keeps text/log_line with null grok fields (P6).
 
     Three projections, each reading the previous one's fields: a
     column expression has no variable binding, so as one expression
@@ -74,7 +75,6 @@ def extract_page(df: DataFrame, grok_pattern: str, out: str) -> DataFrame:
     df = df.withColumn(
         out,
         F.struct(
-            s.substr(F.when(hit, title_at), mid_1 - title_at).alias("title"),
             s.substr(F.when(hit, text_at), mid_2 - text_at).alias("text"),
             s.substr(F.when(hit, log_at), suffix_at - log_at).alias("log_line"),
         ),

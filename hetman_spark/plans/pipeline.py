@@ -8,17 +8,22 @@ splits; Catalyst plans it, the driver loop commits manifest entries —
 SURVEY.md §3.1 "the driver loop is: for batch_of_partitions: process;
 append manifest entry".
 
-Stages and their reference analogs:
+Stages and their reference analogs (plan_batch builds the parse ->
+route chain for every caller; run_pipeline adds the driver loop):
   read parquet (pruned by manifest anti-join) . tailer + offset seek
   extract_page (JVM: strict utf-8 decode,     . Parser.Run (P1)
-    template slicing, grok on the log line)
+    template slicing, grok with the spec's
+    pattern on the log line)
   apply_modifier                              . Modifier.Run (M1-M3)
-  enrich_with_lookup (salted + broadcast)     . add-fields w/ lookup
-  route_explode + with_sink_tags              . Modifier fan-out + Loki
+  optional dedup / near-dup / PII stages      . (corpus-build extras)
+  rebalance(split_id) + broadcast enrich      . add-fields w/ lookup
+    (or presalt: salted repartition)
+  route_explode_static + with_sink_tags       . Modifier fan-out + Loki
                                                 stream building (M4/F2)
   write_sinks (partitionBy(sink_id,           . Forwarder delivery (F1)
     split_id), url-sorted files, zstd, no
-    dictionary for text/url/tag values)
+    dictionary for text/url/warc_ts/tag
+    values)
   lineage + sink counts                       . OTel counters (A1/A2)
   commit_split                                . registry persist (A5)
 
@@ -34,20 +39,18 @@ from __future__ import annotations
 
 import logging
 import os
+import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from hetman_spark.config import ModifierConfig, SinkConfig
+from hetman_spark.config import ModifierConfig, ParserConfig, PipelineSpec, SinkConfig
 from hetman_spark.operators.enrich import enrich_with_lookup
 from hetman_spark.operators.html import extract_page
-from hetman_spark.operators.modify import apply_modifier
-from hetman_spark.operators.route import (
-    route_explode,
-    route_explode_static,
-    with_sink_tags,
-)
+from hetman_spark.operators.modify import _strip_prefix, apply_modifier
+from hetman_spark.operators.parse import grok_to_regex
+from hetman_spark.operators.route import route_explode_static, route_rows, with_sink_tags
 from hetman_spark.plans.checkpoint import (
     append_batch_metrics,
     commit_split,
@@ -61,6 +64,12 @@ NGINX_PATTERN = (
     '$remote_addr - $remote_user [$time_local] "$request" '
     '$status $bytes_sent "$referrer" "$user_agent"'
 )
+
+# the spec of a run without a config file
+DEFAULT_SPEC = PipelineSpec(id="", input_path="", sinks=DEFAULT_SINKS)
+
+# the enriched columns a sink predicate may name
+PREDICATE_COLS = ["lang", "status_class", "region"]
 
 
 @dataclass
@@ -81,84 +90,100 @@ class PipelineResult:
     phase_secs: dict[str, float] = field(default_factory=dict)
 
 
-def build_parsed(df: DataFrame, modifier: ModifierConfig | None = None) -> DataFrame:
-    """parse + modify (narrow stages only — no shuffle; the parse runs
-    in the JVM).
+def grok_pattern(parser: ParserConfig) -> str:
+    """The grok pattern the pipeline parses the embedded log line with:
+    `parser.pattern`, or NGINX_PATTERN when it is empty.  Raises
+    ValueError for a parser config the pipeline cannot run — a json or
+    syslog format, a multiline pattern, a pattern without $variables —
+    instead of silently parsing with nginx."""
+    if parser.format not in ("", "nginx"):
+        raise ValueError(
+            f"parser format {parser.format!r} is not supported by the webtext "
+            "pipeline: only nginx/grok patterns parse the embedded log line"
+        )
+    if parser.multiline_pattern:
+        raise ValueError(
+            "parser multiline.pattern is not supported by the webtext pipeline: "
+            "each page embeds exactly one log line"
+        )
+    pattern = parser.pattern or NGINX_PATTERN
+    if not grok_to_regex(pattern)[1]:
+        raise ValueError(f"grok pattern {pattern!r} has no $variables")
+    return pattern
+
+
+def build_parsed(df: DataFrame, parser: ParserConfig = ParserConfig()) -> DataFrame:
+    """The parse stage (narrow, no shuffle; runs in the JVM).
 
     Produces the input's columns except html, then extracted_text,
-    parsed (map), parse_ok, status_class.  On the webtext source that
-    is: url, warc_ts, text, lang, split_id, extracted_text, parsed,
-    parse_ok, status_class.
+    parsed (map of the pattern's $variables), parse_ok, status_class.
+    On the webtext source that is: url, warc_ts, text, lang, split_id,
+    extracted_text, parsed, parse_ok, status_class.  status_class is
+    "unparsed" when the log line missed grok, its status is empty, or
+    the pattern has no $status.
     """
-    # --- parse stage: html -> text + grok fields (JVM slicing + grok)
-    status = F.col("_x.status")  # null iff the log line missed grok
+    pattern = grok_pattern(parser)
+    fields = grok_to_regex(pattern)[1]
+    # every grok field is null iff the log line missed grok; read the
+    # hit from status when the pattern has it (status_class reads it)
+    hit = F.col(f"_x.{'status' if 'status' in fields else fields[0]}").isNotNull()
+    status = F.col("_x.status") if "status" in fields else F.lit("")
     # parsed map (hetman's Parsed map[string]string); null-safe (P6)
     parsed = F.when(
-        status.isNotNull(),
+        hit,
         F.map_from_arrays(
-            F.array(*[F.lit(f) for f in LOG_FIELDS]),
-            F.array(*[F.col(f"_x.{f}") for f in LOG_FIELDS]),
+            F.array(*[F.lit(f) for f in fields]),
+            F.array(*[F.col(f"_x.{f}") for f in fields]),
         ),
     )
     # one projection for every output column: each withColumn/drop is
     # a separate analysis pass on the driver
-    df = extract_page(df, NGINX_PATTERN, "_x").select(
+    return extract_page(df, pattern, "_x").select(
         *[c for c in df.columns if c != "html"],
         F.col("_x.text").alias("extracted_text"),
         parsed.alias("parsed"),
-        status.isNotNull().alias("parse_ok"),
+        hit.alias("parse_ok"),
         # status_class routing tag (5xx -> errors sink), from the parse
         # struct before the modifier can rename/drop fields
         F.when(
-            status.isNotNull() & (status != ""),
+            hit & (status != ""),
             F.concat(F.substring(status, 1, 1), F.lit("xx")),
         ).otherwise(F.lit("unparsed")).alias("status_class"),
     )
 
-    # --- modifier stage (M1-M3, pure Catalyst) ---
-    if modifier is not None:
-        df = df.withColumn("parsed", apply_modifier(F.col("parsed"), modifier))
-    return df
-
-
-LOG_FIELDS = ["remote_addr", "remote_user", "time_local", "request",
-              "status", "bytes_sent", "referrer", "user_agent"]
-
 
 def tags_disjoint(
-    sinks: tuple[SinkConfig, ...], modifier: ModifierConfig | None = None
+    sinks: tuple[SinkConfig, ...],
+    modifier: ModifierConfig = ModifierConfig(),
+    parser: ParserConfig = ParserConfig(),
 ) -> bool:
     """Driver-side validation for the fast tag-merge path: no sink
     add_tags key can collide with a parsed-map key or 'source' (see
     with_sink_tags(disjoint=True), which map_concats without dedup —
     Spark's default mapKeyDedupPolicy=EXCEPTION throws on collision).
-    The parsed map holds LOG_FIELDS plus any modifier add_fields keys,
-    so those count as reserved too."""
-    reserved = set(LOG_FIELDS) | {"source"}
-    if modifier is not None:
-        reserved |= set(getattr(modifier, "add_fields", {}) or {})
+    The parsed map holds the grok pattern's fields plus any modifier
+    add_fields keys, so those count as reserved too."""
+    reserved = set(grok_to_regex(grok_pattern(parser))[1]) | {"source"}
+    reserved |= {_strip_prefix(k) for k in modifier.add_fields}
     return all(not (set(s.add_tags) & reserved) for s in sinks)
 
 
 def build_routed(
     enriched: DataFrame,
     routes: DataFrame | None = None,
+    *,
     disjoint_tags: bool = False,
-    sinks: tuple[SinkConfig, ...] | None = None,
+    sinks: tuple[SinkConfig, ...],
 ) -> DataFrame:
     """Router + per-record sink tags; output row shape per FIXTURES §5:
-    (sink_id, url, warc_ts, text, tags, split_id, lang).
+    (sink_id, url, warc_ts, text, tags, split_id, lang, parse_ok).
 
-    When the sink list is known driver-side (always, in run_pipeline)
-    pass `sinks` — the router inlines the predicates and stays in
-    codegen (route_explode_static); `routes` as a DataFrame remains
-    the dynamic-table path."""
-    if sinks is not None:
-        routed = route_explode_static(
-            enriched, sinks, predicate_cols=["lang", "status_class", "region"]
-        )
-    else:
-        routed = route_explode(enriched, routes, predicate_cols=["lang", "status_class", "region"])
+    The router (route_explode_static) inlines each of `sinks`'
+    predicates; its Generate node runs interpreted, outside
+    WholeStageCodegen.  `routes` (a routes_df table) is not read: it
+    stays in the signature only for callers that still pass the
+    routing table next to `sinks`."""
+    routed = route_explode_static(enriched, route_rows(sinks), PREDICATE_COLS)
     routed = with_sink_tags(routed, parsed_col="parsed", labels_col="labels",
                             source_col="url", disjoint=disjoint_tags)
     return routed.select(
@@ -177,6 +202,198 @@ def build_routed(
     )
 
 
+@dataclass
+class BatchPlan:
+    """One batch's plan.  `routed` is what the sinks receive, `shipped`
+    the rows that reach the router (after the dedup, near-dup and PII
+    stages), `observations` the stage counters that ride the job
+    executing `routed` (read them with stage_counts after it ran)."""
+
+    routed: DataFrame
+    shipped: DataFrame
+    observations: dict[str, Observation]
+
+    def stage_counts(self) -> dict[str, int]:
+        """The batch's counter record: source.rows_in,
+        parse.rows_parsed, parse.errors, route.rows_routed, plus
+        dedup.dropped, neardup.dropped and pii.docs_masked for the
+        stages that ran."""
+        obs = {name: o.get for name, o in self.observations.items()}
+        rows_in = int(obs["parse"]["rows_in"] or 0)
+        rows_parsed = int(obs["parse"]["rows_parsed"] or 0)
+        counts = {
+            "source.rows_in": rows_in,
+            "parse.rows_parsed": rows_parsed,
+            "parse.errors": rows_in - rows_parsed,
+            "route.rows_routed": int(obs["route"]["rows_routed"] or 0),
+        }
+        kept = rows_in
+        if "dedup" in obs:
+            kept = int(obs["dedup"]["rows_kept"] or 0)
+            counts["dedup.dropped"] = rows_in - kept
+        if "neardup" in obs:
+            # input to the near-dup stage = exact-dedup survivors when
+            # both stages run, else the raw parse output
+            counts["neardup.dropped"] = kept - int(obs["neardup"]["rows_kept"] or 0)
+        if "pii" in obs:
+            counts["pii.docs_masked"] = int(obs["pii"]["docs_masked"] or 0)
+        return counts
+
+
+def plan_batch(
+    df: DataFrame,
+    spec: PipelineSpec,
+    lookup: DataFrame,
+    presalt: bool = False,
+    salt_buckets: int = 8,
+    dedup: bool = False,
+    neardup: bool = False,
+    neardup_jaccard: float = 0.8,
+    redact_pii: bool = False,
+) -> BatchPlan:
+    """The one batch planner (run_pipeline, the streaming twin's
+    micro-batches, benchrun and the webtext_route_counts entry): raw
+    webtext rows -> parse (spec.parser) -> modifier (spec.modifier) ->
+    the optional dedup, near-dup and PII stages -> rebalance(split_id)
+    -> enrich (broadcast, or presalt) -> route (spec.sinks).  The
+    options are run_pipeline's (see its docstring).  A `labels` column
+    on `df` (aggregator mode) turns off the disjoint tag-merge path:
+    push labels are data-dependent."""
+    observations: dict[str, Observation] = {}
+
+    def observe(frame: DataFrame, name: str, *aggs) -> DataFrame:
+        # A3/A4 per-stage counters: observations ride the write job
+        # (map-side aggregated by the executor metrics system, zero
+        # extra Spark jobs, zero extra shuffles)
+        observations[name] = Observation()
+        return frame.observe(observations[name], *aggs)
+
+    # No persist: the columnar cache build costs ~0.5-1x the parse
+    # itself in pure memory bandwidth, which does NOT scale with cores
+    # (measured: cache materialization dominated the non-scaling
+    # fraction).
+    parsed = build_parsed(df, spec.parser)
+    if spec.modifier != ModifierConfig():
+        # --- modifier stage (M1-M3, pure Catalyst) ---
+        parsed = parsed.withColumn("parsed", apply_modifier(F.col("parsed"), spec.modifier))
+    flowed = observe(
+        parsed, "parse",
+        F.count(F.lit(1)).alias("rows_in"),
+        F.count_if(F.col("parse_ok")).alias("rows_parsed"),
+    )
+
+    if dedup:
+        from pyspark.sql import Window
+
+        # P6 invariant: parse-failure rows (extracted_text NULL) are
+        # NEVER deduped away — md5(NULL)=NULL would otherwise pool
+        # every unparseable row of the batch into ONE window
+        # partition and collapse them to a single survivor.  Key the
+        # window on coalesce(hash, url) so failures spread across
+        # partitions, and belt-and-braces keep ANY null-text row
+        # regardless of its row_number (two failures sharing a url
+        # must both pass through).
+        w_dd = Window.partitionBy(
+            F.coalesce(F.md5(F.col("extracted_text")), F.col("url"))
+        ).orderBy("url")
+        flowed = observe(
+            flowed.withColumn("_dd_rn", F.row_number().over(w_dd))
+            .where((F.col("_dd_rn") == 1) | F.col("extracted_text").isNull())
+            .drop("_dd_rn"),
+            "dedup", F.count(F.lit(1)).alias("rows_kept"),
+        )
+
+    if neardup:
+        from hetman_spark.functions.dedup import (
+            connected_components,
+            minhash_lsh_candidates,
+            ngram_jaccard,
+        )
+
+        # LSH + Jaccard verify + CC over THIS batch's parsed text.
+        # The (doc_id, text) projection is materialized ONCE: the
+        # LSH band build and BOTH shingle sides of the Jaccard
+        # verify reference it, and each DataFrame reference
+        # re-executes its plan (no cross-reference CSE) — without
+        # the checkpoint the page parse ran ~3 extra times per
+        # batch.  Production analog: persist the batch's doc
+        # projection before the dedup pass.  CC then shuffles only
+        # (id, label) pairs, never text.
+        docs = (
+            flowed.where(F.col("extracted_text").isNotNull())
+            .select(
+                F.xxhash64(F.col("url")).alias("doc_id"),
+                F.col("extracted_text").alias("text"),
+            )
+            .localCheckpoint(eager=True)
+        )
+        pairs = minhash_lsh_candidates(docs, text_col="text", id_col="doc_id")
+        verified = (
+            ngram_jaccard(pairs, docs, text_col="text", id_col="doc_id")
+            .where(F.col("jaccard") >= F.lit(neardup_jaccard))
+            .select("id_a", "id_b")
+        )
+        cc = connected_components(verified)
+        # non-keepers: every cluster member but the min-hash one.
+        # The drop list is tiny relative to the batch (only members
+        # of near-dup clusters); AQE turns the anti-join into a
+        # broadcast when it fits.
+        drop_ids = cc.where(F.col("v") != F.col("component")).select(
+            F.col("v").alias("_nd_id")
+        )
+        flowed = observe(
+            flowed.join(drop_ids, F.xxhash64(F.col("url")) == F.col("_nd_id"), "left_anti"),
+            "neardup", F.count(F.lit(1)).alias("rows_kept"),
+        )
+
+    if redact_pii:
+        from hetman_spark.functions.text import pii_redact
+
+        # PII scrub as the LAST content stage (after dedup/near-dup,
+        # which key on the raw text): sinks never carry raw
+        # emails/phones/IPs — the release-gate ordering a corpus
+        # build uses (dedup on content identity, then mask).  Pure
+        # codegen regexps riding the existing plan, no extra
+        # shuffle or job; parse failures (NULL text) pass through
+        # (pii_redact(NULL).masked is NULL, coalesce keeps NULL).
+        pii = pii_redact(F.col("extracted_text"))
+        flowed = observe(
+            flowed.withColumn("_pii", pii).withColumn(
+                "extracted_text",
+                F.coalesce(F.col("_pii.masked"), F.col("extracted_text")),
+            ),
+            "pii",
+            F.count_if(
+                F.coalesce(
+                    F.col("_pii.n_emails") + F.col("_pii.n_phones") + F.col("_pii.n_ips"),
+                    F.lit(0),
+                )
+                > 0
+            ).alias("docs_masked"),
+        ).drop("_pii")
+
+    # THE one shuffle: write-aligned rebalance on split_id, before the
+    # (broadcast) enrich join; rows are shuffled exactly once and
+    # BEFORE router duplication.  AQE splits oversized partitions
+    # (runtime salting) / coalesces tiny ones; commit cost of dynamic
+    # overwrite is O(files), and this layout writes ~sinks x max(tasks,
+    # splits) files, not tasks x dirs.
+    rebalanced = flowed.hint("rebalance", "split_id")
+    if presalt:
+        enriched = enrich_with_lookup(rebalanced, lookup, on="lang",
+                                      salt_buckets=salt_buckets, salt_from="url")
+    else:
+        enriched = rebalanced.join(F.broadcast(lookup), on="lang", how="left")
+    routed = build_routed(
+        enriched,
+        disjoint_tags="labels" not in df.columns
+        and tags_disjoint(spec.sinks, spec.modifier, spec.parser),
+        sinks=spec.sinks,
+    )
+    routed = observe(routed, "route", F.count(F.lit(1)).alias("rows_routed"))
+    return BatchPlan(routed, flowed, observations)
+
+
 # Sink columns written without a parquet dictionary.  parquet-mr
 # hashes every value into a dictionary and falls back to plain
 # encoding when the dictionary does not pay: in the 64 sink files of a
@@ -184,9 +401,10 @@ def build_routed(
 # file, so hashing every value bought nothing.  `tags.key_value.value`
 # (grok fields and the url-valued `source` tag) kept its dictionary,
 # but written plain under zstd it is 24% smaller (4.14 -> 3.16 MB).
-# Dictionaries stay on for the low-cardinality lang, warc_ts and
-# tags.key_value.key.
-PLAIN_ENCODED_COLUMNS = ("text", "url", "tags.key_value.value")
+# `warc_ts` is unique per page (60,000 distinct values in 60,000
+# pages), so its dictionary held every value once.  Dictionaries stay
+# on for the low-cardinality lang and tags.key_value.key.
+PLAIN_ENCODED_COLUMNS = ("text", "url", "warc_ts", "tags.key_value.value")
 
 
 def write_sinks(routed: DataFrame, data_dir: str, partition_cols: list[str]) -> None:
@@ -248,13 +466,14 @@ def _discover_splits(spark: SparkSession, src: DataFrame, input_path: str) -> li
 
 
 def _footer_lineage(
-    data_dir: str, batch: list[int], matchall_sink: str
+    data_dir: str, batch: list[int], matchall_sink: str | None
 ) -> tuple[dict[int, tuple[int, int]], dict[int, dict[str, int]]]:
     """Per-split lineage from parquet FOOTER metadata of the files the
     write job just produced: row counts per (sink, split) dir are
     num_rows sums; unparsed counts are the null_count statistic of the
-    nullable parse_ok marker column.  O(files) driver work, no Spark
-    job, no re-parse.  Plays hetman's per-target OTel counters
+    nullable parse_ok marker column; the input-side (rows, parsed)
+    counts are those of `matchall_sink` (none without one).  O(files)
+    driver work, no Spark job, no re-parse.  Plays hetman's per-target OTel counters
     (/root/reference/internal/telemetry/metrics/metrics.go:77-90)."""
     import pyarrow.parquet as pq
 
@@ -338,8 +557,7 @@ def run_pipeline(
     spark: SparkSession,
     input_path: str,
     out_dir: str,
-    sinks: tuple[SinkConfig, ...] = DEFAULT_SINKS,
-    modifier: ModifierConfig | None = None,
+    spec: PipelineSpec = DEFAULT_SPEC,
     salt_buckets: int = 8,
     splits_per_commit: int = 64,
     max_splits: int | None = None,
@@ -351,7 +569,10 @@ def run_pipeline(
     neardup_jaccard: float = 0.8,
     redact_pii: bool = False,
 ) -> PipelineResult:
-    """Resumable driver loop.
+    """Resumable driver loop: split discovery, config reload, then per
+    batch of splits the plan_batch plan, its write, lineage and the
+    manifest commit.  `spec` supplies the parser, modifier and sinks
+    (its input_path is not read: the run reads `input_path`).
 
     dedup=True inserts an exact content-dedup stage after the parse:
     per commit batch, only the first record (min url) of each distinct
@@ -442,26 +663,26 @@ def run_pipeline(
         # agent.go:106-142: on reload, workflows restart with the new
         # config).  Batch boundaries are the safe restart points: the
         # previous batch committed under the old config, this one runs
-        # entirely under the new.  A broken config file keeps the old
-        # one (reference logs and keeps running).
+        # entirely under the new spec.  A broken config file, or a
+        # spec the pipeline cannot run, keeps the old one (reference
+        # logs and keeps running).
         if config_reload_path:
             try:
                 from hetman_spark.config_yaml import load_config
 
                 _gc, specs = load_config(config_reload_path)
-                spec = next((s for s in specs if s.input_path == input_path), None)
-                if spec is None:
+                new_spec = next((s for s in specs if s.input_path == input_path), None)
+                if new_spec is None:
                     # no spec targets this run's input — grafting
-                    # specs[0]'s sinks/modifier onto it would silently
-                    # reroute the data; keep the current config
+                    # specs[0] onto it would silently reroute the
+                    # data; keep the current config
                     logging.getLogger(__name__).warning(
                         "config reload: no spec in %s matches input_path %s; "
                         "keeping current config", config_reload_path, input_path,
                     )
                 else:
-                    if spec.sinks:
-                        sinks = spec.sinks
-                    modifier = spec.modifier
+                    grok_pattern(new_spec.parser)
+                    spec = new_spec
             except Exception:
                 # keep the previous config, as the reference does — but
                 # LOUDLY (the reference logs reload failures too:
@@ -486,222 +707,40 @@ def run_pipeline(
             )
             df = union_labeled(df, labeled)
 
-        # No persist: the columnar cache build costs ~0.5-1x the parse
-        # itself in pure memory bandwidth, which does NOT scale with
-        # cores (measured: cache materialization dominated the
-        # non-scaling fraction).  The parse is recomputed for the one
-        # lineage agg job instead — CPU that scales linearly.
-        parsed = build_parsed(df, modifier=modifier)
-
-        # A3/A4 per-stage counters: observations ride the write job
-        # (map-side aggregated by the executor metrics system, zero
-        # extra Spark jobs, zero extra shuffles).
-        from pyspark.sql import Observation
-
-        obs_parse = Observation()
-        parsed = parsed.observe(
-            obs_parse,
-            F.count(F.lit(1)).alias("rows_in"),
-            F.count_if(F.col("parse_ok")).alias("rows_parsed"),
+        plan = plan_batch(
+            df, spec, lookup, presalt=presalt, salt_buckets=salt_buckets, dedup=dedup,
+            neardup=neardup, neardup_jaccard=neardup_jaccard, redact_pii=redact_pii,
         )
-
-        flowed = parsed
-        obs_dedup = None
-        if dedup:
-            from pyspark.sql import Window
-
-            obs_dedup = Observation()
-            # P6 invariant: parse-failure rows (extracted_text NULL) are
-            # NEVER deduped away — md5(NULL)=NULL would otherwise pool
-            # every unparseable row of the batch into ONE window
-            # partition and collapse them to a single survivor.  Key the
-            # window on coalesce(hash, url) so failures spread across
-            # partitions, and belt-and-braces keep ANY null-text row
-            # regardless of its row_number (two failures sharing a url
-            # must both pass through).
-            w_dd = Window.partitionBy(
-                F.coalesce(F.md5(F.col("extracted_text")), F.col("url"))
-            ).orderBy("url")
-            flowed = (
-                parsed.withColumn("_dd_rn", F.row_number().over(w_dd))
-                .where((F.col("_dd_rn") == 1) | F.col("extracted_text").isNull())
-                .drop("_dd_rn")
-                .observe(obs_dedup, F.count(F.lit(1)).alias("rows_kept"))
-            )
-
-        obs_neardup = None
-        if neardup:
-            from hetman_spark.functions.dedup import (
-                connected_components,
-                minhash_lsh_candidates,
-                ngram_jaccard,
-            )
-
-            # LSH + Jaccard verify + CC over THIS batch's parsed text.
-            # The (doc_id, text) projection is materialized ONCE: the
-            # LSH band build and BOTH shingle sides of the Jaccard
-            # verify reference it, and each DataFrame reference
-            # re-executes its plan (no cross-reference CSE) — without
-            # the checkpoint the page parse ran ~3 extra times per
-            # batch.  Production analog: persist the batch's doc
-            # projection before the dedup pass.  CC then shuffles only
-            # (id, label) pairs, never text.
-            docs = (
-                flowed.where(F.col("extracted_text").isNotNull())
-                .select(
-                    F.xxhash64(F.col("url")).alias("doc_id"),
-                    F.col("extracted_text").alias("text"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            pairs = minhash_lsh_candidates(docs, text_col="text", id_col="doc_id")
-            verified = (
-                ngram_jaccard(pairs, docs, text_col="text", id_col="doc_id")
-                .where(F.col("jaccard") >= F.lit(neardup_jaccard))
-                .select("id_a", "id_b")
-            )
-            cc = connected_components(verified)
-            # non-keepers: every cluster member but the min-hash one.
-            # The drop list is tiny relative to the batch (only members
-            # of near-dup clusters); AQE turns the anti-join into a
-            # broadcast when it fits.
-            drop_ids = cc.where(F.col("v") != F.col("component")).select(
-                F.col("v").alias("_nd_id")
-            )
-            obs_neardup = Observation()
-            flowed = (
-                flowed.join(
-                    drop_ids,
-                    F.xxhash64(F.col("url")) == F.col("_nd_id"),
-                    "left_anti",
-                )
-                .observe(obs_neardup, F.count(F.lit(1)).alias("rows_kept"))
-            )
-
-        obs_pii = None
-        if redact_pii:
-            from hetman_spark.functions.text import pii_redact
-
-            # PII scrub as the LAST content stage (after dedup/near-dup,
-            # which key on the raw text): sinks never carry raw
-            # emails/phones/IPs — the release-gate ordering a corpus
-            # build uses (dedup on content identity, then mask).  Pure
-            # codegen regexps riding the existing plan, no extra
-            # shuffle or job; parse failures (NULL text) pass through
-            # (pii_redact(NULL).masked is NULL, coalesce keeps NULL).
-            obs_pii = Observation()
-            pii = pii_redact(F.col("extracted_text"))
-            flowed = (
-                flowed.withColumn("_pii", pii)
-                .withColumn(
-                    "extracted_text",
-                    F.coalesce(F.col("_pii.masked"), F.col("extracted_text")),
-                )
-                .observe(
-                    obs_pii,
-                    F.count_if(
-                        F.coalesce(
-                            F.col("_pii.n_emails")
-                            + F.col("_pii.n_phones")
-                            + F.col("_pii.n_ips"),
-                            F.lit(0),
-                        )
-                        > 0
-                    ).alias("docs_masked"),
-                )
-                .drop("_pii")
-            )
-
-        def enrich(frame: DataFrame) -> DataFrame:
-            if presalt:
-                return enrich_with_lookup(frame, lookup, on="lang",
-                                          salt_buckets=salt_buckets, salt_from="url")
-            return frame.join(F.broadcast(lookup), on="lang", how="left")
-
-        # THE one shuffle: write-aligned rebalance on split_id,
-        # before the (broadcast) enrich join; rows are shuffled
-        # exactly once and BEFORE router duplication.  AQE splits
-        # oversized partitions (runtime salting) / coalesces tiny
-        # ones; commit cost of dynamic overwrite is O(files), and
-        # this layout writes ~sinks x max(tasks, splits) files,
-        # not tasks x dirs.
-        rebalanced = flowed.hint("rebalance", "split_id")
-        # labels from a push source are data-dependent -> the
-        # driver-validated disjoint fast path is off in that mode
-        routed = build_routed(
-            enrich(rebalanced),
-            disjoint_tags=not labeled_input_path and tags_disjoint(sinks, modifier),
-            sinks=sinks,
-        )
-        obs_route = Observation()
-        routed = routed.observe(obs_route, F.count(F.lit(1)).alias("rows_routed"))
-        import time as _time
-
-        _t0 = _time.time()
-        write_sinks(routed, data_dir, ["sink_id", "split_id"])
-        _t1 = _time.time()
+        _t0 = time.time()
+        write_sinks(plan.routed, data_dir, ["sink_id", "split_id"])
+        _t1 = time.time()
         # one counter record per batch: summed into the result and
         # written verbatim to the _metrics feed below
-        rows_in = int(obs_parse.get["rows_in"] or 0)
-        rows_parsed = int(obs_parse.get["rows_parsed"] or 0)
-        batch_counts = {
-            "source.rows_in": rows_in,
-            "parse.rows_parsed": rows_parsed,
-            "parse.errors": rows_in - rows_parsed,
-            "route.rows_routed": int(obs_route.get["rows_routed"] or 0),
-        }
-        dedup_kept = rows_in
-        if obs_dedup is not None:
-            dedup_kept = int(obs_dedup.get["rows_kept"] or 0)
-            batch_counts["dedup.dropped"] = rows_in - dedup_kept
-        if obs_neardup is not None:
-            # input to the near-dup stage = exact-dedup survivors when
-            # both stages run, else the raw parse output
-            batch_counts["neardup.dropped"] = (
-                dedup_kept - int(obs_neardup.get["rows_kept"] or 0))
-        if obs_pii is not None:
-            batch_counts["pii.docs_masked"] = int(obs_pii.get["docs_masked"] or 0)
+        batch_counts = plan.stage_counts()
         for key, val in batch_counts.items():
             result.stage_counts[key] = result.stage_counts.get(key, 0) + val
 
-        # lineage (A1/A2): per-split in/parsed/routed counts.  With a
-        # match-all sink (the common config — hetman forwarders each
-        # receive every record of their target) everything is read
-        # from the freshly written parquet footers: no extra job, no
-        # re-parse.  Without one, a single union-agg job fills in the
-        # input-side counts.
-        matchall = [s.signature() for s in sinks
+        # lineage (A1/A2): per-split in/parsed/routed counts of the
+        # shipped rows.  Per-sink counts come from the freshly written
+        # parquet footers (no job, no re-parse).  A match-all sink
+        # (the common config — hetman forwarders each receive every
+        # record of their target) holds every shipped row, so its
+        # footers give the input-side counts too; without one, one
+        # aggregation over the shipped frame does.
+        matchall = [s.signature() for s in spec.sinks
                     if s.predicate_col == "*" or s.predicate_val == "*"]
-        if matchall:
-            in_counts, per_split_routes = _footer_lineage(data_dir, batch, matchall[0])
-        else:
-            routed_l = route_explode_static(
-                enrich(flowed), sinks,
-                predicate_cols=["lang", "status_class", "region"])
-            stats_df = routed_l.groupBy("split_id", "sink_id").agg(
-                F.count(F.lit(1)).alias("n"),
-            )
-            in_agg = parsed.groupBy("split_id").agg(
-                F.count(F.lit(1)).alias("n"),
-            ).withColumn("sink_id", F.lit("__input__")).select("split_id", "sink_id", "n")
-            parsed_agg = parsed.filter("parse_ok").groupBy("split_id").agg(
-                F.count(F.lit(1)).alias("n"),
-            ).withColumn("sink_id", F.lit("__parsed__")).select("split_id", "sink_id", "n")
-            in_counts = {}
-            per_split_routes = {}
-            rows_in_tmp: dict[int, int] = {}
-            rows_p_tmp: dict[int, int] = {}
-            for r in stats_df.unionByName(in_agg).unionByName(parsed_agg).collect():
-                if r["sink_id"] == "__input__":
-                    rows_in_tmp[r["split_id"]] = r["n"]
-                elif r["sink_id"] == "__parsed__":
-                    rows_p_tmp[r["split_id"]] = r["n"]
-                else:
-                    per_split_routes.setdefault(r["split_id"], {})[r["sink_id"]] = r["n"]
-            for s in batch:
-                in_counts[s] = (rows_in_tmp.get(s, 0), rows_p_tmp.get(s, 0))
+        in_counts, per_split_routes = _footer_lineage(
+            data_dir, batch, matchall[0] if matchall else None)
+        if not matchall:
+            in_counts = {
+                r["split_id"]: (r["n"], r["n_parsed"])
+                for r in plan.shipped.groupBy("split_id").agg(
+                    F.count(F.lit(1)).alias("n"),
+                    F.count_if(F.col("parse_ok")).alias("n_parsed"),
+                ).collect()
+            }
 
-        _t2 = _time.time()
+        _t2 = time.time()
         _write_lineage(lineage_dir, batch, in_counts, per_split_routes)
 
         # manifest commit — strictly after all sink writes (A5).
@@ -719,7 +758,7 @@ def run_pipeline(
                 },
             )
 
-        _t3 = _time.time()
+        _t3 = time.time()
         batch_secs = {"write_job": _t1 - _t0, "lineage": _t2 - _t1, "commit": _t3 - _t2}
         for key, val in batch_secs.items():
             result.phase_secs[key] = result.phase_secs.get(key, 0.0) + val
@@ -750,4 +789,3 @@ def run_pipeline(
                 result.sink_counts[k] = result.sink_counts.get(k, 0) + v
 
     return result
-

@@ -16,6 +16,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 from hetman_spark.config import SinkConfig
+from hetman_spark.operators.route import route_rows
 
 
 def local_table(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
@@ -85,14 +86,11 @@ DEFAULT_SINKS: tuple[SinkConfig, ...] = (
 
 
 def routes_df(spark: SparkSession, sinks: tuple[SinkConfig, ...] = DEFAULT_SINKS) -> DataFrame:
-    """Routing table: (sink_id, predicate_col, predicate_val, add_tags, format)."""
-    rows = [
-        (s.signature(), s.predicate_col, s.predicate_val, s.add_tags, s.format)
-        for s in sinks
-    ]
+    """Routing table: the router's Route rows (sink_id, predicate_col,
+    predicate_val, add_tags, format) as a JVM-local relation."""
     return local_table(
         spark,
-        rows,
+        route_rows(sinks),
         "sink_id string, predicate_col string, predicate_val string, "
         "add_tags map<string,string>, format string",
     )

@@ -10,9 +10,12 @@ Source mapping (SURVEY.md §2.1):
 - S2 offset resume -> the streaming checkpointLocation (exact
   offsets, built-in — the registry analog).
 
-The transform chain REUSES the batch operators verbatim
-(build_parsed / enrich / route): one definition of the semantics, two
-execution modes — the core argument for rebuilding hetman on Spark.
+Each micro-batch runs the batch pipeline's plan verbatim: foreachBatch
+hands the static micro-batch to plans/pipeline.py plan_batch (parse ->
+rebalance -> broadcast enrich -> route, the default spec), so the
+stream and run_pipeline share one plan — one definition of the
+semantics, two execution modes, the core argument for rebuilding
+hetman on Spark.
 
 Sink: foreachBatch -> the batch pipeline's sink writer
 (plans/pipeline.py write_sinks: same file format), one partition per
@@ -122,20 +125,17 @@ def streaming_pipeline(
     trigger_once: bool = True,
     max_files_per_trigger: int = 4,
 ):
-    """The full parse -> enrich -> route chain as a streaming query.
+    """The batch pipeline's plan as a streaming query.
 
-    foreachBatch reuses the batch router + writer; the streaming
-    commit log (checkpoint_dir) makes each micro-batch exactly-once —
-    the streaming twin of the batch manifest.
+    foreachBatch runs plan_batch (default spec) and the batch sink
+    writer on each micro-batch; the streaming commit log
+    (checkpoint_dir) makes each micro-batch exactly-once — the
+    streaming twin of the batch manifest.
     """
-    from hetman_spark.plans.pipeline import build_parsed, build_routed, tags_disjoint, write_sinks
-    from hetman_spark.sources.lookup import DEFAULT_SINKS, lang_lookup
+    from hetman_spark.plans.pipeline import DEFAULT_SPEC, plan_batch, write_sinks
+    from hetman_spark.sources.lookup import lang_lookup
 
     lookup = lang_lookup(spark)
-    disjoint = tags_disjoint(DEFAULT_SINKS)
-
-    stream = read_webtext_stream(spark, input_dir, max_files_per_trigger)
-    parsed = build_parsed(stream)
 
     def sink_batch(batch_df: DataFrame, epoch_id: int) -> None:
         # Idempotent sink: foreachBatch gives at-least-once delivery (a
@@ -155,10 +155,7 @@ def streaming_pipeline(
         batch_df.sparkSession.conf.set(
             "spark.sql.sources.partitionOverwriteMode", "dynamic"
         )
-        routed = build_routed(
-            batch_df.join(F.broadcast(lookup), "lang", "left"),
-            disjoint_tags=disjoint, sinks=DEFAULT_SINKS,
-        )
+        routed = plan_batch(batch_df, DEFAULT_SPEC, lookup).routed
         write_sinks(
             routed.withColumn("epoch_id", F.lit(int(epoch_id))),
             f"{out_dir}/data",
@@ -166,7 +163,8 @@ def streaming_pipeline(
         )
 
     writer = (
-        parsed.writeStream.foreachBatch(sink_batch)
+        read_webtext_stream(spark, input_dir, max_files_per_trigger)
+        .writeStream.foreachBatch(sink_batch)
         .option("checkpointLocation", checkpoint_dir)
     )
     if trigger_once:

@@ -7,7 +7,10 @@
 Unlike `python -m hetman_spark`, this does NOT build its own
 SparkSession config — it inherits whatever spark-submit provides
 (executors, memory, shuffle partitions) and only sets the session
-options the pipeline semantics require.
+options the pipeline semantics require.  Its targets come from the
+CLI's builder (config_yaml.run_targets): every config target runs, and
+an explicit flag beats the config's global section, which beats this
+job's flag defaults.
 """
 
 from __future__ import annotations
@@ -19,17 +22,29 @@ import time
 from pyspark.sql import SparkSession
 
 
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--input", required=True)
-    ap.add_argument("--out", required=True)
+    ap.add_argument("--input", default=None, help="webtext table path (or use --config)")
+    ap.add_argument("--out", default=None, help="output dir (or use --config global.out_dir)")
     ap.add_argument("--config", default=None)
-    ap.add_argument("--salt-buckets", type=int, default=8)
-    ap.add_argument("--splits-per-commit", type=int, default=256)
+    # default=None so "explicitly set" is distinguishable from "unset";
+    # without a config the job's defaults are salt 8, 256 splits/commit
+    ap.add_argument("--salt-buckets", type=int, default=None)
+    ap.add_argument("--splits-per-commit", type=int, default=None)
     ap.add_argument("--presalt", action="store_true")
     ap.add_argument("--labeled-input", default=None,
                     help="aggregator mode: pre-labeled push table unioned before parse")
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
+
+    from hetman_spark.config_yaml import ConfigError, GlobalConfig, run_targets
+
+    try:
+        settings, targets = run_targets(
+            args.config, args.input, args.out, args.salt_buckets, args.splits_per_commit,
+            defaults=GlobalConfig(salt_buckets=8, splits_per_commit=256),
+        )
+    except ConfigError as e:
+        ap.error(str(e))
 
     spark = (
         SparkSession.builder.appName("hetman-spark-pipeline")
@@ -44,39 +59,18 @@ def main() -> None:
         .getOrCreate()
     )
 
-    import os
-
     from hetman_spark.plans.pipeline import run_pipeline
-    from hetman_spark.sources.lookup import DEFAULT_SINKS
-
-    # every config target runs (reference runs every workflow); a bare
-    # --input/--out invocation is one anonymous target
-    targets = [(args.input, args.out, DEFAULT_SINKS, None)]
-    if args.config:
-        from hetman_spark.config_yaml import load_config
-
-        _gc, specs = load_config(args.config)
-        targets = [
-            (
-                args.input or spec.input_path,
-                os.path.join(args.out, spec.id or f"target{i}")
-                if len(specs) > 1 else args.out,
-                spec.sinks or DEFAULT_SINKS,
-                spec.modifier,
-            )
-            for i, spec in enumerate(specs)
-        ]
 
     t0 = time.time()
     tot_in = tot_parsed = n_done = 0
     tot_sinks: dict[str, int] = {}
     stage_counts: dict[str, int] = {}
-    for input_path, out_dir, sinks, modifier in targets:
+    for input_path, out_dir, spec in targets:
         res = run_pipeline(
             spark, input_path, out_dir,
-            sinks=sinks, modifier=modifier,
-            salt_buckets=args.salt_buckets,
-            splits_per_commit=args.splits_per_commit,
+            spec=spec,
+            salt_buckets=settings.salt_buckets,
+            splits_per_commit=settings.splits_per_commit,
             presalt=args.presalt,
             labeled_input_path=args.labeled_input,
         )

@@ -172,3 +172,111 @@ def test_compact_cli_preserves_counts(spark, tmp_path, capsys):
         sorted(counts.items())
     )
     assert not stale.exists()
+
+
+GROK_CFG = """
+global:
+  out_dir: "%(out)s"
+targets:
+  - id: custom
+    input: {path: "%(inp)s"}
+    parser:
+      format: %(fmt)s
+      pattern: '$ip - $user [$when] "$req" $status $size "$ref" "$agent"'
+    forwarders:
+      - url: sink://archive
+        add_tags: {tier: archive}
+      - url: sink://errors
+        add_tags: {tier: errors}
+        predicate: {col: status_class, val: 5xx}
+"""
+
+
+def test_cli_run_parses_with_the_configured_pattern(spark, tmp_path, capsys):
+    """The target's grok pattern reaches the parse: the sink tags carry
+    the pattern's field names, and its $status still drives the
+    status_class route."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from hetman_spark.sources.webtext import write_webtext
+
+    inp, out = str(tmp_path / "in"), str(tmp_path / "out")
+    write_webtext(spark, inp, 300, n_splits=2)
+    cfg = tmp_path / "cfg.yaml"
+    cfg.write_text(GROK_CFG % {"out": out, "inp": inp, "fmt": "nginx"})
+    assert cli_main(["run", "--config", str(cfg), "--master", "local[4]"]) == 0
+    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rep["rows_parsed"] == 300
+
+    data = spark.read.parquet(os.path.join(out, "data"))
+    keys = {k for r in data.select(F.map_keys("tags").alias("k")).collect() for k in r["k"]}
+    assert {"ip", "user", "when", "req", "status", "size", "ref", "agent"} <= keys
+    assert not keys & {"remote_addr", "time_local", "user_agent"}
+    tier = F.col("tags")["tier"]
+    errors = data.where(tier == "errors")
+    assert errors.count() > 0
+    assert errors.where(~F.col("tags")["status"].startswith("5")).count() == 0
+    assert errors.count() == data.where(
+        (tier == "archive") & F.col("tags")["status"].startswith("5")).count()
+
+
+def test_pattern_without_status_routes_unparsed(spark):
+    from hetman_spark.config import ParserConfig
+    from hetman_spark.plans.pipeline import build_parsed
+    from hetman_spark.sources.webtext import generate_webtext
+
+    parsed = build_parsed(generate_webtext(spark, 50, n_splits=1),
+                          ParserConfig(pattern="$addr - $rest"))
+    rows = parsed.select("parse_ok", "status_class", "parsed").collect()
+    assert all(r["parse_ok"] for r in rows)
+    assert {r["status_class"] for r in rows} == {"unparsed"}
+    assert all(set(r["parsed"]) == {"addr", "rest"} for r in rows)
+
+
+def test_cli_run_rejects_a_format_the_pipeline_cannot_parse(spark, tmp_path):
+    import pytest
+
+    from hetman_spark.sources.webtext import write_webtext
+
+    inp, out = str(tmp_path / "in"), str(tmp_path / "out")
+    write_webtext(spark, inp, 50, n_splits=1)
+    cfg = tmp_path / "cfg.yaml"
+    cfg.write_text(GROK_CFG % {"out": out, "inp": inp, "fmt": "json"})
+    with pytest.raises(ValueError, match="parser format 'json' is not supported"):
+        cli_main(["run", "--config", str(cfg), "--master", "local[4]"])
+
+
+def test_submit_job_runs_every_target_with_config_settings(spark, tmp_path, capsys):
+    """jobs/run_pipeline_job.py builds its targets like the CLI: both
+    targets run, each in its own namespace, under the config's
+    splits_per_commit (2 -> two commit batches per 4-split target)."""
+    import os
+    import runpy
+
+    from hetman_spark.plans.checkpoint import read_batch_metrics
+    from hetman_spark.sources.webtext import write_webtext
+
+    inp = str(tmp_path / "in1")
+    write_webtext(spark, inp, 300, n_splits=4)
+    write_webtext(spark, inp + "2", 200, n_splits=4)
+    out = str(tmp_path / "out")
+    cfg = tmp_path / "cfg.yaml"
+    cfg.write_text(TWO_TARGET_CFG % {"out": out, "inp": inp})
+
+    job = runpy.run_path(os.path.join(os.path.dirname(__file__), "..", "jobs",
+                                      "run_pipeline_job.py"))
+    # the job's session builder reuses this session and sets its own
+    # arrow batch size on it; later tests keep the fixture's
+    batch_conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    batch_size = spark.conf.get(batch_conf)
+    try:
+        job["main"](["--config", str(cfg)])
+    finally:
+        spark.conf.set(batch_conf, batch_size)
+    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rep["targets"] == 2
+    assert rep["rows_in"] == 500
+    for target in ("alpha", "beta"):
+        assert len(read_batch_metrics(f"{out}/{target}/_metrics")) == 2

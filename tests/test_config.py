@@ -11,7 +11,7 @@ from hetman_spark.sources.labeled import union_labeled, with_labels
 SANE = """
 global:
   out_dir: /tmp/out
-  n_splits: 8
+  salt_buckets: 4
 targets:
   - id: webtext
     input: {path: /data/webtext}
@@ -41,7 +41,7 @@ def _write(tmp_path, body, name="conf.yaml"):
 
 def test_sane_config(tmp_path):
     gc, specs = load_config(_write(tmp_path, SANE))
-    assert gc.out_dir == "/tmp/out" and gc.n_splits == 8
+    assert gc.out_dir == "/tmp/out" and gc.salt_buckets == 4
     # unique-path dedup merged both targets into one spec w/ both sinks
     # (config.go:219-242: one tailer per file, forwarders merged)
     assert len(specs) == 1
@@ -73,6 +73,21 @@ targets:
 """
     with pytest.raises(ConfigError, match="no forwarders"):
         load_config(_write(tmp_path, body))
+
+
+def test_tags_disjoint_reserves_the_pattern_and_modifier_keys():
+    """The fast tag merge (map_concat without dedup) is allowed only
+    when no sink tag key can collide with a parsed-map key: the
+    pattern's fields and the modifier's added keys, which arrive as
+    'parsed.<key>' dot-paths."""
+    from hetman_spark.config import ModifierConfig, ParserConfig, SinkConfig
+    from hetman_spark.plans.pipeline import tags_disjoint
+
+    sinks = (SinkConfig(url="s://a", add_tags={"foo": "x"}),)
+    assert tags_disjoint(sinks)
+    assert not tags_disjoint(sinks, ModifierConfig(add_fields={"parsed.foo": "bar"}))
+    assert not tags_disjoint(sinks, parser=ParserConfig(pattern="$foo $bar"))
+    assert not tags_disjoint((SinkConfig(url="s://a", add_tags={"status": "x"}),))
 
 
 def test_union_labeled_and_fill_timestamp(spark):

@@ -65,19 +65,18 @@ LOG_FIELDS = {
 
 # non-null fields only; every other field of the struct is null
 EXPECTED = {
-    "trailing_newline": {"title": "T", "log_line": LOG, "text": "hello", **LOG_FIELDS},
+    "trailing_newline": {"log_line": LOG, "text": "hello", **LOG_FIELDS},
     "two_trailing_newlines": {},
     "trailing_crlf": {},
     "empty_bytes": {},
     "null_html": {},
     "non_template": {},
-    "grok_miss": {"title": "T", "log_line": "not an access log", "text": "kept text"},
-    "lazy_p_group": {"title": "T", "log_line": LOG, "text": "a</p>b</p>c", **LOG_FIELDS},
+    "grok_miss": {"log_line": "not an access log", "text": "kept text"},
+    "lazy_p_group": {"log_line": LOG, "text": "a</p>b</p>c", **LOG_FIELDS},
     "unicode_text": {
-        "title": "T", "log_line": LOG, "text": "nb\u00a0sp e\u0301 \U0001f600 \u200b", **LOG_FIELDS,
+        "log_line": LOG, "text": "nb\u00a0sp e\u0301 \U0001f600 \u200b", **LOG_FIELDS,
     },
     "unicode_log_fields": {
-        "title": "T",
         "log_line": UNICODE_LOG,
         "text": "t",
         "remote_addr": "10.0.0.7",
@@ -90,7 +89,6 @@ EXPECTED = {
         "user_agent": "\u00a0ua\U0001f600",
     },
     "newline_in_text_and_field": {
-        "title": "T",
         "log_line": NEWLINE_LOG,
         "text": "line\nbreak",
         "remote_addr": "10.0.0.7",
@@ -104,17 +102,16 @@ EXPECTED = {
     },
     # the first log marker leaves a line grok rejects: the regex
     # backtracks to the next marker whose line parses
-    "log_marker_in_text": {"title": "T", "log_line": LOG, "text": "a</p><!--log: b", **LOG_FIELDS},
+    "log_marker_in_text": {"log_line": LOG, "text": "a</p><!--log: b", **LOG_FIELDS},
     "log_marker_in_text_twice": {
-        "title": "T", "log_line": LOG, "text": "a</p><!--log: b</p><!--log: c", **LOG_FIELDS,
+        "log_line": LOG, "text": "a</p><!--log: b</p><!--log: c", **LOG_FIELDS,
     },
     # no marker gives a parsing line: the first marker splits text/log
     "log_marker_in_text_grok_miss": {
-        "title": "T", "log_line": "b</p><!--log: not an access log", "text": "a",
+        "log_line": "b</p><!--log: not an access log", "text": "a",
     },
     # the first marker's line parses, so later markers stay in the log
     "log_marker_in_log_field": {
-        "title": "T",
         "log_line": MARKER_LOG,
         "text": "t",
         "remote_addr": "10.0.0.7",
@@ -127,11 +124,11 @@ EXPECTED = {
         "user_agent": "u",
     },
     "body_marker_in_text": {
-        "title": "A", "log_line": LOG, "text": "B</title></head><body><p>x", **LOG_FIELDS,
+        "log_line": LOG, "text": "B</title></head><body><p>x", **LOG_FIELDS,
     },
     # the log line runs to the LAST page suffix
-    "suffix_in_log_line": {"title": "T", "log_line": LOG + " --></body></html>x", "text": "kept"},
-    "log_line_ends_newline": {"title": "T", "log_line": LOG + "\n", "text": "kept"},
+    "suffix_in_log_line": {"log_line": LOG + " --></body></html>x", "text": "kept"},
+    "log_line_ends_newline": {"log_line": LOG + "\n", "text": "kept"},
 }
 
 
@@ -143,7 +140,7 @@ def pages(spark):
 
 
 def test_kernel_edge_cases_match_python_regex(pages):
-    fields = ["title", "text", "log_line", *LOG_FIELDS]
+    fields = ["text", "log_line", *LOG_FIELDS]
     got = {r["name"]: r["x"] for r in extract_page(pages, NGINX_PATTERN, "x").collect()}
     assert set(got) == set(CASES)
     for name, want in EXPECTED.items():

@@ -226,10 +226,10 @@ def _sink_chunk_footers(data_dir: str) -> dict[str, list]:
 
 def test_sink_files_skip_dictionary_on_high_cardinality_columns(spark, webtext_path, tmp_path):
     """Every sink file, from the batch pipeline and from a streaming
-    drain alike (one writer, plans/pipeline.py write_sinks): text, url
-    and the tag values are written without a parquet dictionary, the
-    low-cardinality lang and tag keys keep theirs, and url min/max
-    statistics stay for pruning."""
+    drain alike (one writer, plans/pipeline.py write_sinks): text, url,
+    warc_ts and the tag values are written without a parquet
+    dictionary, the low-cardinality lang and tag keys keep theirs, and
+    url min/max statistics stay for pruning."""
     from hetman_spark.streaming.stream import streaming_pipeline
 
     out = str(tmp_path / "batch")
@@ -239,7 +239,7 @@ def test_sink_files_skip_dictionary_on_high_cardinality_columns(spark, webtext_p
     query.awaitTermination(120)
     for data_dir in (f"{out}/data", str(tmp_path / "stream" / "data")):
         chunks = _sink_chunk_footers(data_dir)
-        for col in ("text", "url", "tags.key_value.value"):
+        for col in ("text", "url", "warc_ts", "tags.key_value.value"):
             assert not any(c.has_dictionary_page for c in chunks[col]), (data_dir, col)
         for col in ("lang", "tags.key_value.key"):
             assert all(c.has_dictionary_page for c in chunks[col]), (data_dir, col)
@@ -318,6 +318,73 @@ def test_dedup_stage_keeps_parse_failures(spark, tmp_path):
         (F.col("sink_id") == matchall) & F.col("url").startswith("https://broken.")
     )
     assert broken.count() == 40
+
+
+@pytest.mark.parametrize("dedup", [False, True])
+def test_lineage_without_matchall_sink(spark, tmp_path, dedup):
+    """Sinks with no match-all sink: per-sink lineage and manifest
+    counts equal a direct count of the sink files, and rows_in /
+    rows_parsed per split count the rows that reach the router (the
+    dedup survivors with dedup=True), computed here from the input."""
+    from hetman_spark.config import PipelineSpec
+    from hetman_spark.plans.checkpoint import read_manifest
+    from hetman_spark.sources.lookup import DEFAULT_SINKS
+
+    src_dir = str(tmp_path / "src")
+    base = generate_webtext(spark, 400, n_splits=4)
+    split = F.pmod(F.xxhash64("url"), F.lit(4)).cast("int")
+    dups = (  # same html/text under new urls
+        base.limit(60)
+        .withColumn("url", F.concat(F.lit("https://mirror.example.com/"), F.col("url")))
+        .withColumn("split_id", split)
+    )
+    corrupt = (  # no template: null text, never parsed, never deduped
+        base.limit(20)
+        .withColumn("url", F.concat(F.lit("https://broken.example.com/"), F.col("url")))
+        .withColumn("html", F.lit(b"NOT-A-TEMPLATE-PAGE"))
+        .withColumn("split_id", split)
+    )
+    base.unionByName(dups).unionByName(corrupt).write.partitionBy("split_id").parquet(src_dir)
+
+    sinks = tuple(s for s in DEFAULT_SINKS if s.predicate_col != "*")
+    out = str(tmp_path / "out")
+    res = run_pipeline(spark, src_dir, out, spec=PipelineSpec(id="", input_path="", sinks=sinks),
+                       splits_per_commit=8, dedup=dedup)
+
+    # survivors from the input: corrupt pages always, one page (min
+    # url) per distinct text otherwise
+    rows = spark.read.parquet(src_dir).select("url", "text", "split_id").collect()
+    keeper: dict[str, str] = {}
+    for r in rows:
+        if not r["url"].startswith("https://broken."):
+            keeper[r["text"]] = min(keeper.get(r["text"], r["url"]), r["url"])
+    want_in: dict[int, int] = {}
+    want_parsed: dict[int, int] = {}
+    for r in rows:
+        broken = r["url"].startswith("https://broken.")
+        if dedup and not broken and keeper[r["text"]] != r["url"]:
+            continue
+        want_in[r["split_id"]] = want_in.get(r["split_id"], 0) + 1
+        want_parsed[r["split_id"]] = want_parsed.get(r["split_id"], 0) + (not broken)
+    assert sum(want_in.values()) == (420 if dedup else 480)
+
+    data = spark.read.parquet(os.path.join(out, "data"))
+    direct: dict[int, dict[str, int]] = {}
+    for r in data.groupBy("split_id", "sink_id").count().collect():
+        direct.setdefault(r["split_id"], {})[r["sink_id"]] = r["count"]
+    manifest = {e["split_id"]: e for e in read_manifest(os.path.join(out, "_manifest"))}
+    lineage = {r["split_id"]: r for r in spark.read.parquet(os.path.join(out, "lineage")).collect()}
+    assert set(manifest) == set(lineage) == set(want_in) == set(range(4))
+    for split_id, n_in in want_in.items():
+        for rec in (manifest[split_id], lineage[split_id].asDict()):
+            assert rec["rows_in"] == n_in, (split_id, rec)
+            assert rec["rows_parsed"] == want_parsed[split_id], (split_id, rec)
+            assert dict(rec["rows_routed"]) == direct[split_id], (split_id, rec)
+    assert res.rows_in == sum(want_in.values())
+    assert res.rows_parsed == sum(want_parsed.values())
+    assert res.sink_counts == {
+        k: sum(d.get(k, 0) for d in direct.values()) for k in res.sink_counts
+    }
 
 
 def test_pipeline_neardup_stage(spark, tmp_path):

@@ -242,31 +242,21 @@ def test_lookup_tables_are_jvm_local(spark):
 
 
 def test_pipeline_plan_has_no_python_crossing(spark, tmp_path):
-    """The run_pipeline parse -> broadcast enrich -> route plan and the
-    streaming twin's plan evaluate nothing in Python and scan no
-    Python-backed relation."""
-    from hetman_spark.plans.pipeline import build_parsed, build_routed, tags_disjoint
-    from hetman_spark.sources.lookup import DEFAULT_SINKS, lang_lookup
+    """The batch plan run_pipeline writes and every streaming
+    micro-batch runs (plan_batch over a static read of the parquet
+    input) evaluates nothing in Python, scans no Python-backed
+    relation, and routes without a BroadcastNestedLoopJoin."""
+    from hetman_spark.plans.pipeline import DEFAULT_SPEC, plan_batch
+    from hetman_spark.sources.lookup import lang_lookup
     from hetman_spark.sources.webtext import generate_webtext
-    from hetman_spark.streaming.stream import read_webtext_stream
 
-    def routed(parsed):
-        # the per-batch tail of run_pipeline and of the streaming sink
-        return build_routed(
-            parsed.join(F.broadcast(lang_lookup(spark)), "lang", "left"),
-            disjoint_tags=tags_disjoint(DEFAULT_SINKS),
-            sinks=DEFAULT_SINKS,
-        )
-
-    webtext = generate_webtext(spark, 200, n_splits=2)
-    webtext.write.parquet(str(tmp_path / "wt"))
-    batch = routed(build_parsed(webtext).hint("rebalance", "split_id"))
-    stream = routed(build_parsed(read_webtext_stream(spark, str(tmp_path / "wt"))))
-    assert stream.isStreaming
-    for df in (batch, stream):
-        qe = df._jdf.queryExecution()  # noqa: SLF001
-        plans = df._sc._jvm.PythonSQLUtils.explainString(qe, "extended")  # noqa: SLF001
-        python_nodes = ("ArrowEvalPython", "BatchEvalPython", "PythonUDF")
-        for node in (*python_nodes, "ExistingRDD", "LogicalRDD"):
-            assert node not in plans, plans
-        assert "BroadcastHashJoin" in plans
+    generate_webtext(spark, 200, n_splits=2).write.parquet(str(tmp_path / "wt"))
+    df = plan_batch(spark.read.parquet(str(tmp_path / "wt")), DEFAULT_SPEC,
+                    lang_lookup(spark)).routed
+    qe = df._jdf.queryExecution()  # noqa: SLF001
+    plans = df._sc._jvm.PythonSQLUtils.explainString(qe, "extended")  # noqa: SLF001
+    python_nodes = ("ArrowEvalPython", "BatchEvalPython", "PythonUDF")
+    for node in (*python_nodes, "ExistingRDD", "LogicalRDD", "BroadcastNestedLoopJoin"):
+        assert node not in plans, plans
+    assert "BroadcastHashJoin" in plans
+    assert "RebalancePartitions" in plans

@@ -47,7 +47,7 @@ def test_config_hot_reload_between_batches(spark, tmp_path):
     t.start()
     res = run_pipeline(
         spark, inp, str(tmp_path / "out"),
-        sinks=specs[0].sinks,
+        spec=specs[0],
         splits_per_commit=1,
         config_reload_path=str(cfg),
     )
@@ -81,7 +81,7 @@ def test_config_hot_reload_broken_file_keeps_old(spark, tmp_path):
 
     res = run_pipeline(
         spark, inp, str(tmp_path / "out"),
-        sinks=specs[0].sinks,
+        spec=specs[0],
         splits_per_commit=1,
         config_reload_path=str(cfg),
     )

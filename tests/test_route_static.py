@@ -1,89 +1,92 @@
-"""route_explode_static must be row-identical to route_explode: the
-static router is a pure plan-shape optimization (inlined predicates +
-array_compact/explode instead of a BroadcastNestedLoopJoin), never a
-semantics change."""
+"""The one router, route_explode_static: its rows must equal an
+independent Python reference computed from the SinkConfig predicates
+over the collected input rows, and no routing plan may contain a
+BroadcastNestedLoopJoin."""
 
+import pytest
 from pyspark.sql import functions as F
 
-from hetman_spark.operators.route import route_explode, route_explode_static
+from hetman_spark.config import SinkConfig
+from hetman_spark.operators.route import route_explode_static, route_rows, validate_predicate_cols
 from hetman_spark.plans.pipeline import build_parsed
-from hetman_spark.sources.lookup import DEFAULT_SINKS, lang_lookup, routes_df
+from hetman_spark.sources.lookup import DEFAULT_SINKS, lang_lookup
 from hetman_spark.sources.webtext import generate_webtext
 
+COLS = ["lang", "status_class", "region"]
 
-def test_static_router_matches_join_router(spark):
+
+def _plan(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+def test_router_matches_python_reference(spark):
     df = build_parsed(generate_webtext(spark, 2000, n_splits=4)).join(
         F.broadcast(lang_lookup(spark)), "lang", "left"
     )
-    cols = ["lang", "status_class", "region"]
-    key = ["sink_id", "url"]
-    dyn = route_explode(df, routes_df(spark), predicate_cols=cols).select(
-        *key, "add_tags", "format"
+    got = sorted(
+        (r["sink_id"], r["url"], tuple(sorted(r["add_tags"].items())), r["format"])
+        for r in route_explode_static(df, route_rows(DEFAULT_SINKS), COLS)
+        .select("sink_id", "url", "add_tags", "format")
+        .collect()
     )
-    stat = route_explode_static(df, DEFAULT_SINKS, predicate_cols=cols).select(
-        *key, "add_tags", "format"
+
+    def matches(sink, row) -> bool:
+        if sink.predicate_col == "*" or sink.predicate_val == "*":
+            return True
+        val = row[sink.predicate_col]
+        return val is not None and str(val) == sink.predicate_val
+
+    want = sorted(
+        (s.signature(), row["url"], tuple(sorted(s.add_tags.items())), s.format)
+        for row in df.select("url", *COLS).collect()
+        for s in DEFAULT_SINKS
+        if matches(s, row)
     )
-    assert dyn.count() == stat.count()
-    # order-insensitive row equality including tags/format payloads
-    d = dyn.withColumn("add_tags", F.to_json(F.col("add_tags")))
-    s = stat.withColumn("add_tags", F.to_json(F.col("add_tags")))
-    assert d.exceptAll(s).count() == 0
-    assert s.exceptAll(d).count() == 0
+    assert len(want) > 2000  # every row reaches the match-all sink, some more
+    assert got == want
 
 
-def test_static_router_no_bnlj(spark):
+def test_static_router_no_bnlj(spark, sf_dir):
+    """Neither the pipeline's routing plan nor the route_fanout entries
+    (literal sink ids over TPC-H orders) join against a routes table."""
+    from hetman_spark.entry_queries import QUERIES
+
     df = build_parsed(generate_webtext(spark, 200, n_splits=2)).join(
         F.broadcast(lang_lookup(spark)), "lang", "left"
     )
-    out = route_explode_static(df, DEFAULT_SINKS, ["lang", "status_class", "region"])
-    plan = out._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-        out._jdf.queryExecution(), "formatted"
-    )
-    assert "BroadcastNestedLoopJoin" not in plan
+    plans = [_plan(route_explode_static(df, route_rows(DEFAULT_SINKS), COLS))]
+    plans += [_plan(QUERIES[name](spark, sf_dir)) for name in ("route_fanout_counts", "route_fanout_rows")]
+    for plan in plans:
+        assert "Generate" in plan
+        assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_router_rejects_unknown_predicate_col(spark):
     """A sink whose predicate_col is not offered to the router must be
     a build-time config error, not a silent zero-row sink (r3 VERDICT
     What's-wrong #4)."""
-    import pytest
-
-    from hetman_spark.config import SinkConfig
-    from hetman_spark.operators.route import route_per_sink, validate_predicate_cols
-
     bad = DEFAULT_SINKS + (
         SinkConfig(url="s3://x", predicate_col="regoin", predicate_val="emea"),
     )
     df = spark.range(1).selectExpr("'en' AS lang", "'2xx' AS status_class",
                                    "'emea' AS region")
     with pytest.raises(ValueError, match="regoin"):
-        route_explode_static(df, bad, ["lang", "status_class", "region"])
-    with pytest.raises(ValueError, match="regoin"):
-        route_per_sink(
-            df,
-            [{"sink_id": "x", "predicate_col": "regoin", "predicate_val": "emea"}],
-            ["lang", "status_class", "region"],
-        )
+        route_explode_static(df, route_rows(bad), COLS)
     # the valid set still passes validation untouched
-    validate_predicate_cols(DEFAULT_SINKS, ["lang", "status_class", "region"])
+    validate_predicate_cols(route_rows(DEFAULT_SINKS), COLS)
 
 
 def test_validator_exempts_matchall_predicate_val(spark):
-    """r4 ADVICE low: the routers treat predicate_val="*" as match-ALL
+    """r4 ADVICE low: the router treats predicate_val="*" as match-ALL
     regardless of predicate_col (`c == "*" or v == "*"`), so the
     validator must not reject a sink whose col is unknown but whose
     val is "*" — that config routes every row, not zero."""
-    from hetman_spark.config import SinkConfig
-    from hetman_spark.operators.route import route_per_sink, validate_predicate_cols
-
-    matchall_odd_col = (
-        SinkConfig(url="s3://all", predicate_col="not_a_column", predicate_val="*"),
+    matchall_odd_col = route_rows(
+        (SinkConfig(url="s3://all", predicate_col="not_a_column", predicate_val="*"),)
     )
     validate_predicate_cols(matchall_odd_col, ["lang"])  # must not raise
     df = spark.range(3).selectExpr("'en' AS lang")
-    routed = route_per_sink(
-        df,
-        [{"sink_id": "all", "predicate_col": "not_a_column", "predicate_val": "*"}],
-        ["lang"],
-    )
-    assert routed["all"].count() == 3  # really match-all
+    routed = route_explode_static(df, matchall_odd_col, ["lang"])
+    assert routed.count() == 3  # really match-all
