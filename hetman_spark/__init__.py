@@ -7,13 +7,14 @@ tail -> parse -> modify -> buffer -> forward (see
 package re-expresses the same per-record semantics as a batch-resumable
 Spark pipeline over a Common-Crawl-style webtext table:
 
-    read (parquet/iceberg) -> vectorized parse -> broadcast-join enrich
+    read (parquet) -> vectorized parse -> broadcast-join enrich
       -> tag-driven route -> per-sink partitioned writes
-      + per-partition lineage + checkpoint-manifest resume.
+      + one commit record per batch (per-partition lineage, stage
+        counters, manifest resume).
 
 Everything relational is stock Catalyst; custom code is confined to the
-html slicing and grok parse (JVM column expressions), the
-manifest/commit protocol, and the lineage side-output (SURVEY.md §7).
+html slicing and grok parse (JVM column expressions) and the
+one-record-per-batch commit protocol (SURVEY.md §7).
 """
 
 __version__ = "0.1.0"

@@ -100,34 +100,26 @@ def main(argv: list[str] | None = None) -> int:
     args = ap.parse_args(argv)
 
     if args.cmd == "status":
-        from hetman_spark.plans.checkpoint import read_batch_metrics, read_manifest
+        from hetman_spark.plans.checkpoint import read_manifest
 
-        entries = read_manifest(f"{args.out}/_manifest")
-        batches = read_batch_metrics(f"{args.out}/_metrics")
-        phase_totals: dict[str, float] = {}
-        for b in batches:
-            for k, v in (b.get("phase_secs") or {}).items():
-                phase_totals[k] = round(phase_totals.get(k, 0.0) + v, 3)
-        # aggregate stage counters across committed splits (A3/A4 view:
-        # the manifest is the durable record the OTel counters play)
-        rows_in = sum(e.get("rows_in", 0) for e in entries)
-        rows_parsed = sum(e.get("rows_parsed", 0) for e in entries)
-        routed: dict[str, int] = {}
-        for e in entries:
-            for k, v in (e.get("rows_routed") or {}).items():
-                routed[k] = routed.get(k, 0) + v
+        def total(all_counts) -> dict:
+            out: dict = {}
+            for counts in all_counts:
+                for k, v in counts.items():
+                    out[k] = out.get(k, 0) + v
+            return out
+
+        # every figure is a sum over the commit records — the durable
+        # record the OTel counters play (A3/A4), the same one resume reads
+        records = read_manifest(f"{args.out}/_manifest")
+        sinks = total(e["rows_routed"] for r in records for e in r["splits"].values())
         print(json.dumps({
-            "committed_splits": len(entries),
-            "stage_counts": {
-                "source.rows_in": rows_in,
-                "parse.rows_parsed": rows_parsed,
-                "parse.errors": rows_in - rows_parsed,
-                "route.rows_routed": sum(routed.values()),
-            },
-            "sink_counts": dict(sorted(routed.items())),
-            "batches": len(batches),
-            "phase_secs": phase_totals,
-            "entries": entries,
+            "committed_splits": sum(len(r["splits"]) for r in records),
+            "stage_counts": total(r["stage_counts"] for r in records),
+            "sink_counts": dict(sorted(sinks.items())),
+            "batches": len(records),
+            "phase_secs": {k: round(v, 3) for k, v in total(r["phase_secs"] for r in records).items()},
+            "entries": records,
         }, indent=2))
         return 0
 

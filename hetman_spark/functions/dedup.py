@@ -369,16 +369,6 @@ def simhash_md5(text: Column) -> Column:
     )
 
 
-def simhash_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Exact-simhash duplicate groups (Hamming distance 0).  For
-    distance <= k see :func:`simhash_near_pairs`."""
-    return (
-        df.select(F.col(id_col), simhash(F.col(text_col)).alias("simhash"))
-        .groupBy("simhash")
-        .agg(F.min(id_col).alias("keeper_id"), F.count(F.lit(1)).alias("n_copies"))
-    )
-
-
 def simhash_near_pairs(
     df: DataFrame,
     text_col: str = "text",

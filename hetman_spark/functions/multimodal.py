@@ -145,51 +145,6 @@ def extract_image_features(df: DataFrame, codec: str = "auto") -> DataFrame:
     return imgs.select(*cols).mapInPandas(op, _IMAGE_FEATURES_SCHEMA)
 
 
-_FRAME_SAMPLE_SCHEMA = "media_id long, frame_idx int, frame_payload binary"
-
-
-def sample_frames(df: DataFrame, every_n: int = 10, max_frames: int = 4) -> DataFrame:
-    """Frame-sampling plumbing for video rows: mapInPandas yielding
-    multiple rows per input row (1 -> N explode inside the Arrow
-    batch).  The decode is stubbed: fake frames are deterministic
-    byte slices; a real build swaps in pyav/ffmpeg."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pd.DataFrame(
-                    {"media_id": pd.array([], dtype="int64"),
-                     "frame_idx": pd.array([], dtype="int32"),
-                     "frame_payload": []}
-                )
-                continue
-            payloads_in = [b or b"" for b in pdf["payload"]]
-            # vectorized fan-out arithmetic: frames per row, then a
-            # flat explode index — no iterrows, no per-row append loop
-            lens = np.fromiter((len(b) for b in payloads_in), dtype=np.int64, count=len(pdf))
-            n = np.clip(lens // max(every_n, 1), 1, max_frames)
-            row_of = np.repeat(np.arange(len(pdf)), n)
-            ends = np.cumsum(n)
-            within = np.arange(int(ends[-1])) - np.repeat(ends - n, n)
-            frame_idx = (within * every_n).astype(np.int32)
-            starts = frame_idx % np.maximum(lens[row_of], 1)
-            # the (stubbed) frame decode — the one per-frame step a
-            # real pyav/ffmpeg build also pays
-            frames = [
-                bytes(payloads_in[r][s : s + 16])
-                for r, s in zip(row_of, starts)
-            ]
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"].to_numpy()[row_of],
-                 "frame_idx": frame_idx,
-                 "frame_payload": frames}
-            )
-
-    return df.filter(F.col("kind") == "video").mapInPandas(op, _FRAME_SAMPLE_SCHEMA)
-
-
 def synth_media(spark, n_rows: int = 100) -> DataFrame:
     """Deterministic fake media table for tests: payload bytes derived
     from the row id (md5 chain), kinds round-robin."""

@@ -10,9 +10,7 @@ consumer immediately groups them this way, and a training-data
 pipeline uses the same shape to segment interaction logs).
 
 Batch form: lag() + cumulative sum of boundary flags — one shuffle on
-the user key, window work is within-partition.  Streaming twin:
-Structured Streaming's session_window aggregation (true watermark-based
-gap sessions — the batch and stream forms agree on closed sessions).
+the user key, window work is within-partition.
 
 Scale shape: the only shuffle keys on user_id; a hot user (bot
 traffic) lands in one partition — AQE skew-split cannot help inside a
@@ -78,27 +76,4 @@ def session_stats(
             F.unix_timestamp(F.max(ts_col)) - F.unix_timestamp(F.min(ts_col))
         ).cast("long").alias("session_seconds"),
         F.date_format(F.min(ts_col), "yyyy-MM-dd HH:mm:ss").alias("started_at"),
-    )
-
-
-def streaming_session_stats(
-    stream: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Streaming twin: true gap sessions via session_window — the
-    watermark closes sessions so state is bounded (late events beyond
-    the watermark are dropped, the streaming-correctness trade)."""
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(F.col(ts_col), gap).alias("w"), user_col)
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            user_col,
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-        )
     )

@@ -15,10 +15,23 @@ dynamic partition overwrite: a half-written split is simply
 overwritten on rerun, so exactly-once per-sink counts survive kills
 (SURVEY.md §7 "hard parts").
 
-Commit protocol: one JSON file per split, written via tmp+rename —
-atomic on POSIX; on object stores the same role is played by a
-conditional PUT or an Iceberg snapshot commit (noted, not needed
-here).  Listing the manifest dir is O(n_splits), never O(rows).
+Commit protocol: ONE record per commit batch, `batch-<first split
+id:06d>.json`, written via tmp + fsync + rename — atomic on POSIX; on
+object stores the same role is played by a conditional PUT or an
+Iceberg snapshot commit (noted, not needed here).  The name is unique
+because each split commits once.  The record is also the pipeline's
+lineage and metrics:
+
+  splits        {split id: {rows_in, rows_parsed, rows_routed: {sink: n}}}
+  stage_counts  the batch's df.observe counters (BatchPlan.stage_counts)
+  phase_secs    write_job and lineage seconds
+  committed_at  unix time of the commit
+
+A batch has its whole record or none of it, so resume, lineage and
+`status` read one fact and cannot disagree; a crash anywhere before
+the rename reprocesses the whole batch, which is also the unit of the
+sink write.  A leftover `*.tmp` is ignored.  Listing the manifest dir
+is O(batches), never O(rows).
 """
 
 from __future__ import annotations
@@ -28,72 +41,35 @@ import os
 import time
 
 
-def _split_file(manifest_dir: str, split_id: int) -> str:
-    return os.path.join(manifest_dir, f"split-{split_id:06d}.json")
-
-
-def committed_splits(manifest_dir: str) -> set[int]:
-    """Read the set of committed split ids (empty if no manifest yet)."""
-    if not os.path.isdir(manifest_dir):
-        return set()
-    out: set[int] = set()
-    for name in os.listdir(manifest_dir):
-        if name.startswith("split-") and name.endswith(".json"):
-            out.add(int(name[len("split-") : -len(".json")]))
-    return out
-
-
-def commit_split(manifest_dir: str, split_id: int, meta: dict | None = None) -> None:
-    """Atomically record a split as complete.  MUST be called only
-    after every sink write for the split has succeeded (the ordering
-    that makes kill/resume exactly-once)."""
+def commit_batch(manifest_dir: str, record: dict) -> None:
+    """Atomically write one commit batch's record (see the module
+    docstring for its fields; committed_at is stamped here).  MUST be
+    called only after every sink write of the batch has succeeded (the
+    ordering that makes kill/resume exactly-once)."""
     os.makedirs(manifest_dir, exist_ok=True)
-    entry = {"split_id": split_id, "committed_at": time.time(), **(meta or {})}
-    final = _split_file(manifest_dir, split_id)
+    first = min(int(s) for s in record["splits"])
+    final = os.path.join(manifest_dir, f"batch-{first:06d}.json")
     tmp = final + ".tmp"
     with open(tmp, "w") as f:
-        json.dump(entry, f)
+        json.dump({**record, "committed_at": time.time()}, f)
         f.flush()
         os.fsync(f.fileno())
     os.replace(tmp, final)
 
 
-def append_batch_metrics(metrics_dir: str, entry: dict) -> None:
-    """Per-batch metrics feed (A3/A4 live view): one JSONL line per
-    commit batch, appended strictly AFTER that batch's manifest commit.
-    The reference graphs per-stage OTel counters in Grafana
-    (/root/reference/deploy/grafana/dashboard.json); this file is the
-    batch-dashboard feed — tail it, or aggregate via `status`.
-
-    A single O_APPEND write of one short line is atomic on POSIX; a
-    torn final line after a crash is tolerable for a metrics feed (the
-    manifest, not this file, is the source of truth for resume)."""
-    os.makedirs(metrics_dir, exist_ok=True)
-    line = json.dumps(entry) + "\n"
-    with open(os.path.join(metrics_dir, "batches.jsonl"), "a") as f:
-        f.write(line)
-        f.flush()
-
-
-def read_batch_metrics(metrics_dir: str) -> list[dict]:
-    """All batch metric entries (skipping a torn final line, if any)."""
-    path = os.path.join(metrics_dir, "batches.jsonl")
-    if not os.path.isfile(path):
-        return []
-    out = []
-    with open(path) as f:
-        for line in f:
-            try:
-                out.append(json.loads(line))
-            except json.JSONDecodeError:
-                break
-    return out
-
-
 def read_manifest(manifest_dir: str) -> list[dict]:
-    """Full manifest entries (for lineage/reporting)."""
-    entries = []
-    for split_id in sorted(committed_splits(manifest_dir)):
-        with open(_split_file(manifest_dir, split_id)) as f:
-            entries.append(json.load(f))
-    return entries
+    """Every commit record, in file-name (first split id) order; empty
+    if no manifest yet."""
+    if not os.path.isdir(manifest_dir):
+        return []
+    records = []
+    for name in sorted(os.listdir(manifest_dir)):
+        if name.startswith("batch-") and name.endswith(".json"):
+            with open(os.path.join(manifest_dir, name)) as f:
+                records.append(json.load(f))
+    return records
+
+
+def committed_splits(manifest_dir: str) -> set[int]:
+    """The set of committed split ids (empty if no manifest yet)."""
+    return {int(s) for record in read_manifest(manifest_dir) for s in record["splits"]}

@@ -1,12 +1,12 @@
 """The end-to-end pipeline: read -> parse -> enrich -> route -> write,
-with lineage and checkpoint-manifest resume.
+with one commit record per batch (lineage, counters, manifest resume).
 
 This replaces hetman's whole orchestrator
 (/root/reference/internal/orchestrator/orchestrator.go:242-425): the
 goroutine/channel graph becomes ONE lazy DataFrame per batch of input
-splits; Catalyst plans it, the driver loop commits manifest entries —
-SURVEY.md §3.1 "the driver loop is: for batch_of_partitions: process;
-append manifest entry".
+splits; Catalyst plans it, the driver loop commits one manifest record
+per batch — SURVEY.md §3.1 "the driver loop is: for
+batch_of_partitions: process; append manifest entry".
 
 Stages and their reference analogs (plan_batch builds the parse ->
 route chain for every caller; run_pipeline adds the driver loop):
@@ -24,8 +24,9 @@ route chain for every caller; run_pipeline adds the driver loop):
     split_id), url-sorted files, zstd, no
     dictionary for text/url/warc_ts/tag
     values)
-  lineage + sink counts                       . OTel counters (A1/A2)
-  commit_split                                . registry persist (A5)
+  footer lineage (per-split in/parsed/routed) . OTel counters (A1/A2)
+  commit_batch: one record per batch with     . registry persist (A5)
+    lineage, stage counters and phase times     + counter export (A3/A4)
 
 Scale shape (the plan we WANT at 100 TB):
   one scan (pruned to uncommitted splits, column-pruned), no shuffle
@@ -51,11 +52,7 @@ from hetman_spark.operators.html import extract_page
 from hetman_spark.operators.modify import _strip_prefix, apply_modifier
 from hetman_spark.operators.parse import grok_to_regex
 from hetman_spark.operators.route import route_explode_static, route_rows, with_sink_tags
-from hetman_spark.plans.checkpoint import (
-    append_batch_metrics,
-    commit_split,
-    committed_splits,
-)
+from hetman_spark.plans.checkpoint import commit_batch, committed_splits
 from hetman_spark.sources.lookup import DEFAULT_SINKS, lang_lookup
 
 # nginx combined-log pattern for the embedded access-log line
@@ -518,41 +515,6 @@ def _footer_lineage(
     return in_counts, per_split_routes
 
 
-def _write_lineage(
-    lineage_dir: str,
-    batch: list[int],
-    in_counts: dict[int, tuple[int, int]],
-    per_split_routes: dict[int, dict[str, int]],
-) -> None:
-    """Write lineage rows as parquet via pyarrow directly on the
-    driver — a handful of rows per batch; a Spark job here costs ~1.5s
-    of pure scheduling (measured) for no benefit."""
-    import uuid
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    os.makedirs(lineage_dir, exist_ok=True)
-    rows = {
-        "split_id": batch,
-        "rows_in": [in_counts.get(s, (0, 0))[0] for s in batch],
-        "rows_parsed": [in_counts.get(s, (0, 0))[1] for s in batch],
-        "rows_routed": [
-            [(k, v) for k, v in sorted(per_split_routes.get(s, {}).items())] for s in batch
-        ],
-    }
-    schema = pa.schema(
-        [
-            pa.field("split_id", pa.int32()),
-            pa.field("rows_in", pa.int64()),
-            pa.field("rows_parsed", pa.int64()),
-            pa.field("rows_routed", pa.map_(pa.string(), pa.int64())),
-        ]
-    )
-    table = pa.Table.from_pydict(rows, schema=schema)
-    pq.write_table(table, os.path.join(lineage_dir, f"lineage-{uuid.uuid4().hex}.parquet"))
-
-
 def run_pipeline(
     spark: SparkSession,
     input_path: str,
@@ -570,9 +532,11 @@ def run_pipeline(
     redact_pii: bool = False,
 ) -> PipelineResult:
     """Resumable driver loop: split discovery, config reload, then per
-    batch of splits the plan_batch plan, its write, lineage and the
-    manifest commit.  `spec` supplies the parser, modifier and sinks
-    (its input_path is not read: the run reads `input_path`).
+    batch of splits the plan_batch plan, its write, footer lineage and
+    the batch's commit record.  `spec` supplies the parser, modifier
+    and sinks (its input_path is not read: the run reads `input_path`);
+    a config reload replaces it with the reloaded target of the same
+    identity (its id, or its configured input.path without one).
 
     dedup=True inserts an exact content-dedup stage after the parse:
     per commit batch, only the first record (min url) of each distinct
@@ -581,9 +545,9 @@ def run_pipeline(
     pages must not reach the sinks.  Deterministic keeper (window
     row_number on (md5(text), url) — dropDuplicates would keep an
     arbitrary partition-dependent row).  Costs one extra shuffle keyed
-    on the content hash, and per-split lineage/manifest rows then count
-    SURVIVING rows (what was shipped); the pre-dedup totals stay in
-    stage_counts (source.rows_in) with the drop recorded as
+    on the content hash, and the commit record's per-split rows then
+    count SURVIVING rows (what was shipped); the pre-dedup totals stay
+    in its stage_counts (source.rows_in) with the drop recorded as
     dedup.dropped.  Default off: the reference ships every record.
 
     neardup=True inserts the NEAR-duplicate stage after (and composable
@@ -617,10 +581,11 @@ def run_pipeline(
 
     Each iteration: one Spark job over <= splits_per_commit uncommitted
     splits -> dynamic-overwrite write partitioned by (sink_id,
-    split_id) -> lineage write -> manifest commit per split.  A kill
-    between write and commit reprocesses those splits on rerun,
-    overwriting their output partitions idempotently (exactly-once
-    observable output; see plans/checkpoint.py).
+    split_id) -> footer lineage -> ONE commit record for the batch
+    (commit_batch: per-split counts, stage counters, phase times).  A
+    kill anywhere before that record lands reprocesses the whole batch
+    on rerun, overwriting its output partitions idempotently
+    (exactly-once observable output; see plans/checkpoint.py).
 
     Physical shape (default, presalt=False): both joins are broadcast,
     so the plan has exactly ONE shuffle of un-duplicated rows — the
@@ -634,7 +599,6 @@ def run_pipeline(
     """
     manifest_dir = os.path.join(out_dir, "_manifest")
     data_dir = os.path.join(out_dir, "data")
-    lineage_dir = os.path.join(out_dir, "lineage")
 
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
@@ -671,14 +635,18 @@ def run_pipeline(
                 from hetman_spark.config_yaml import load_config
 
                 _gc, specs = load_config(config_reload_path)
-                new_spec = next((s for s in specs if s.input_path == input_path), None)
+                # match the running target by its own identity (its id,
+                # or its configured input.path without one): the run's
+                # input path may be an --input override no target names
+                ident = (lambda s: s.id) if spec.id else (lambda s: s.input_path)
+                new_spec = next((s for s in specs if ident(s) == ident(spec)), None)
                 if new_spec is None:
-                    # no spec targets this run's input — grafting
+                    # the running target left the config — grafting
                     # specs[0] onto it would silently reroute the
                     # data; keep the current config
                     logging.getLogger(__name__).warning(
-                        "config reload: no spec in %s matches input_path %s; "
-                        "keeping current config", config_reload_path, input_path,
+                        "config reload: no target in %s matches %s; keeping current "
+                        "config", config_reload_path, spec.id or spec.input_path,
                     )
                 else:
                     grok_pattern(new_spec.parser)
@@ -715,7 +683,7 @@ def run_pipeline(
         write_sinks(plan.routed, data_dir, ["sink_id", "split_id"])
         _t1 = time.time()
         # one counter record per batch: summed into the result and
-        # written verbatim to the _metrics feed below
+        # written verbatim into the batch's commit record below
         batch_counts = plan.stage_counts()
         for key, val in batch_counts.items():
             result.stage_counts[key] = result.stage_counts.get(key, 0) + val
@@ -741,51 +709,31 @@ def run_pipeline(
             }
 
         _t2 = time.time()
-        _write_lineage(lineage_dir, batch, in_counts, per_split_routes)
-
-        # manifest commit — strictly after all sink writes (A5).
-        # sink_ids records the sinks THIS split actually routed to, not
-        # the batch-wide union.
-        for s in batch:
-            commit_split(
-                manifest_dir,
-                s,
-                {
-                    "rows_in": in_counts.get(s, (0, 0))[0],
-                    "rows_parsed": in_counts.get(s, (0, 0))[1],
-                    "rows_routed": per_split_routes.get(s, {}),
-                    "sink_ids": sorted(per_split_routes.get(s, {})),
-                },
-            )
-
+        splits = {
+            s: {
+                "rows_in": in_counts.get(s, (0, 0))[0],
+                "rows_parsed": in_counts.get(s, (0, 0))[1],
+                "rows_routed": per_split_routes.get(s, {}),
+            }
+            for s in batch
+        }
+        # the one commit record (A1-A5): manifest, lineage and metrics
+        # of the batch, written strictly after all sink writes
+        commit_batch(manifest_dir, {
+            "splits": splits,
+            "stage_counts": batch_counts,
+            "phase_secs": {"write_job": round(_t1 - _t0, 3), "lineage": round(_t2 - _t1, 3)},
+        })
         _t3 = time.time()
         batch_secs = {"write_job": _t1 - _t0, "lineage": _t2 - _t1, "commit": _t3 - _t2}
         for key, val in batch_secs.items():
             result.phase_secs[key] = result.phase_secs.get(key, 0.0) + val
 
-        # A3/A4 live feed: one JSONL line per commit batch (the batch
-        # analog of the reference's per-scrape OTel counter export),
-        # appended strictly after this batch's manifest commit.
-        batch_routes: dict[str, int] = {}
-        for m in per_split_routes.values():
-            for k, v in m.items():
-                batch_routes[k] = batch_routes.get(k, 0) + v
-        append_batch_metrics(
-            os.path.join(out_dir, "_metrics"),
-            {
-                "splits": batch,
-                "stage_counts": batch_counts,
-                "sink_counts": dict(sorted(batch_routes.items())),
-                "phase_secs": {k: round(v, 3) for k, v in batch_secs.items()},
-                "committed_at": _t3,
-            },
-        )
         result.splits_processed.extend(batch)
-        for s in batch:
-            result.rows_in += in_counts.get(s, (0, 0))[0]
-            result.rows_parsed += in_counts.get(s, (0, 0))[1]
-        for m in per_split_routes.values():
-            for k, v in m.items():
+        for entry in splits.values():
+            result.rows_in += entry["rows_in"]
+            result.rows_parsed += entry["rows_parsed"]
+            for k, v in entry["rows_routed"].items():
                 result.sink_counts[k] = result.sink_counts.get(k, 0) + v
 
     return result

@@ -170,94 +170,3 @@ def streaming_pipeline(
     if trigger_once:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def windowed_counts_stream(
-    spark: SparkSession, input_dir: str, window: str = "1 hour", watermark: str = "2 hours"
-):
-    """A2 as a live metric: per-(window, lang) page counts with a
-    watermark for late data — hetman's forwardedLogCount re-expressed
-    as a streaming aggregation."""
-    stream = read_webtext_stream(spark, input_dir)
-    return (
-        stream.withWatermark("warc_ts", watermark)
-        .groupBy(F.window("warc_ts", window).alias("w"), "lang")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("window_start"), "lang", "n")
-    )
-
-
-def dedup_stream(
-    lines: DataFrame,
-    key_cols: list[str] | None = None,
-    ts_col: str = "warc_ts",
-    watermark: str = "2 hours",
-    exact_within_watermark: bool = True,
-) -> DataFrame:
-    """Streaming exact-dedup: drop content-duplicate records as they
-    arrive — the continuous twin of functions/dedup.py:exact_dedup
-    (which groups a static corpus).  The LLM-pipeline use: a crawler
-    feed where re-fetches and mirror pages must not reach the corpus
-    twice.
-
-    key_cols defaults to a content hash of `text` (md5 — matching
-    exact_dedup's grouping key) so byte-identical pages dedup even
-    when their urls differ.
-
-    State-boundedness at scale: dropDuplicatesWithinWatermark keeps a
-    key's state only until the watermark passes it — a duplicate
-    arriving later than `watermark` after the original is NOT caught,
-    which is the honest trade every streaming dedup makes (unbounded
-    dropDuplicates state would OOM a perpetual tailer; set
-    exact_within_watermark=False to get it for bounded drains).  The
-    batch exact_dedup remains the exhaustive ground truth for
-    compaction passes.
-    """
-    if key_cols is None:
-        # Only pay the per-row md5 when it is actually the dedup key;
-        # caller-supplied key_cols dedup on their own columns and must
-        # not see an internal _content_hash column in the output schema.
-        hashed = lines.withColumn("_content_hash", F.md5(F.col("text").cast("binary")))
-        keys = ["_content_hash"]
-    else:
-        hashed = lines
-        keys = key_cols
-    wm = hashed.withWatermark(ts_col, watermark)
-    if exact_within_watermark:
-        out = wm.dropDuplicatesWithinWatermark(keys)
-    else:
-        out = wm.dropDuplicates(keys)
-    return out.drop("_content_hash") if key_cols is None else out
-
-
-def distinct_users_stream(
-    events: DataFrame,
-    ts_col: str = "ts",
-    user_col: str = "user_id",
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Exact windowed distinct-user counts on a STREAM — the continuous
-    twin of the batch events_user_windows entry.
-
-    Streaming aggregations reject COUNT(DISTINCT), and HLL sketches
-    are engine/merge-order dependent (the same reason the batch entry
-    rejects them, entry_queries.q_events_user_windows).  The exact
-    streaming construction is dedup-then-count: drop duplicate
-    (window, user) pairs within the watermark, then a windowed count —
-    each surviving row is one distinct user in that window, and both
-    stateful stages are bounded by the same watermark.  Append-mode
-    output: a window's count emits once, when the watermark passes its
-    end (late events inside the watermark are still counted; later
-    ones are dropped — the documented streaming trade)."""
-    wstart = F.window(F.col(ts_col), window)
-    dd = (
-        events.withWatermark(ts_col, watermark)
-        .select(F.col(ts_col), wstart["start"].alias("wstart"), F.col(user_col).alias("u"))
-        .dropDuplicatesWithinWatermark(["wstart", "u"])
-    )
-    return (
-        dd.groupBy(F.window(F.col(ts_col), window).alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_users"))
-        .select(F.col("w.start").alias("window_start"), "n_users")
-    )

@@ -1,11 +1,10 @@
-"""CLI analyze subcommand + storage-duality reader tests."""
+"""CLI analyze subcommand tests."""
 
 import json
 import os
 import subprocess
 import sys
 
-from hetman_spark.sources.tables import iceberg_available, read_webtext
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -33,15 +32,3 @@ def test_analyze_cli_on_documents():
     # so every count must be present and zero — a nonzero here means
     # the patterns drifted into false positives
     assert report["pii"] == {"emails": 0, "phones": 0, "ips": 0, "docs_with_pii": 0}
-
-
-def test_read_webtext_parquet_fallback(spark, tmp_path):
-    # no Iceberg runtime in this container: parquet branch must serve
-    assert not iceberg_available(spark)
-    from hetman_spark.sources.webtext import write_webtext
-
-    p = str(tmp_path / "wt")
-    write_webtext(spark, p, 200, n_splits=2)
-    df = read_webtext(spark, p)
-    assert df.count() == 200
-    assert set(df.columns) == {"url", "warc_ts", "html", "text", "lang", "split_id"}

@@ -255,7 +255,7 @@ def test_submit_job_runs_every_target_with_config_settings(spark, tmp_path, caps
     import os
     import runpy
 
-    from hetman_spark.plans.checkpoint import read_batch_metrics
+    from hetman_spark.plans.checkpoint import read_manifest
     from hetman_spark.sources.webtext import write_webtext
 
     inp = str(tmp_path / "in1")
@@ -279,4 +279,34 @@ def test_submit_job_runs_every_target_with_config_settings(spark, tmp_path, caps
     assert rep["targets"] == 2
     assert rep["rows_in"] == 500
     for target in ("alpha", "beta"):
-        assert len(read_batch_metrics(f"{out}/{target}/_metrics")) == 2
+        assert len(read_manifest(f"{out}/{target}/_manifest")) == 2
+
+
+def test_status_reports_the_run_counters(spark, tmp_path, capsys):
+    """status sums the commit records' batch counters, so on a --dedup
+    run with duplicate pages its stage_counts equal run's, dedup.dropped
+    included, and its sink_counts equal run's."""
+    from pyspark.sql import functions as F
+
+    from hetman_spark.sources.webtext import generate_webtext
+
+    inp, out = str(tmp_path / "in"), str(tmp_path / "out")
+    base = generate_webtext(spark, 400, n_splits=4)
+    dups = (  # same html/text under new urls
+        base.limit(60)
+        .withColumn("url", F.concat(F.lit("https://mirror.example.com/"), F.col("url")))
+        .withColumn("split_id", F.pmod(F.xxhash64("url"), F.lit(4)).cast("int"))
+    )
+    base.unionByName(dups).write.partitionBy("split_id").parquet(inp)
+
+    assert cli_main(["run", "--input", inp, "--out", out, "--dedup", "--master", "local[4]"]) == 0
+    run = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert cli_main(["status", "--out", out]) == 0
+    status = json.loads(capsys.readouterr().out)
+
+    (target,) = run["per_target"]
+    assert target["stage_counts"]["source.rows_in"] == 460
+    assert target["stage_counts"]["dedup.dropped"] == 60
+    assert status["stage_counts"] == target["stage_counts"]
+    assert status["sink_counts"] == run["sink_counts"]
+    assert status["committed_splits"] == 4

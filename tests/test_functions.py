@@ -12,11 +12,9 @@ from hetman_spark.functions.dedup import (
     minhash_signature,
     ngram_jaccard,
     shingles,
-    simhash_dedup,
 )
 from hetman_spark.functions.multimodal import (
     extract_image_features,
-    sample_frames,
     synth_media,
     with_media_metadata,
 )
@@ -84,12 +82,6 @@ def test_ngram_jaccard_verification(spark, docs):
     assert out[(1, 5)] < 0.1
 
 
-def test_simhash_dedup(spark, docs):
-    groups = simhash_dedup(docs).collect()
-    dup_groups = [g for g in groups if g["n_copies"] > 1]
-    assert any(g["keeper_id"] == 1 for g in dup_groups)
-
-
 @pytest.fixture(scope="module")
 def vectors(spark):
     # 20 deterministic vectors in 8 dims; vec 1 ~ vec 0 (scaled),
@@ -136,9 +128,6 @@ def test_multimodal_plumbing(spark):
     # determinism
     feats2 = extract_image_features(media).collect()
     assert sorted(map(str, feats)) == sorted(map(str, feats2))
-    frames = sample_frames(media).collect()
-    assert len(frames) > 0
-    assert all(len(r["frame_payload"]) <= 16 for r in frames)
 
 
 def test_image_codec_stub_and_auto_agree_without_pillow(spark):

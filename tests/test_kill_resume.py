@@ -12,7 +12,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from hetman_spark.plans.checkpoint import committed_splits
+from hetman_spark.plans.checkpoint import committed_splits, read_manifest
 from hetman_spark.sources.webtext import write_webtext
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -65,3 +65,9 @@ def test_sigkill_mid_run_then_resume(spark, tmp_path):
     assert archive.groupBy("url").count().filter("count > 1").count() == 0
     src = spark.read.parquet(wt).select("url", F.col("text").alias("g"))
     assert archive.join(src, "url").filter(F.col("text") != F.col("g")).count() == 0
+
+    # one record per commit batch: every split in exactly one record,
+    # and the records' lineage counts every page once
+    records = read_manifest(manifest_dir)
+    assert sorted(int(s) for r in records for s in r["splits"]) == list(range(12))
+    assert sum(e["rows_in"] for r in records for e in r["splits"].values()) == 6000

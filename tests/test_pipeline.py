@@ -69,25 +69,25 @@ def test_pipeline_end_to_end(spark, webtext_path, tmp_path):
     assert row["tags"]["source"] == row["url"]
     assert "status" in row["tags"]
 
-    # lineage adds up
-    lineage = spark.read.parquet(os.path.join(out, "lineage"))
-    assert lineage.agg(F.sum("rows_in")).collect()[0][0] == N_ROWS
+    # one commit record per batch, and nothing else in the output: its
+    # per-split lineage and batch counters sum to the result
+    from hetman_spark.plans.checkpoint import read_manifest
 
-    # the per-batch metrics feed (A3/A4 live view) sums to the result
-    from hetman_spark.plans.checkpoint import read_batch_metrics
-
-    batches = read_batch_metrics(os.path.join(out, "_metrics"))
-    assert batches, "metrics feed missing"
-    assert sorted(s for b in batches for s in b["splits"]) == sorted(res.splits_processed)
+    assert sorted(os.listdir(out)) == ["_manifest", "data"]
+    assert os.listdir(os.path.join(out, "_manifest")) == ["batch-000000.json"]
+    records = read_manifest(os.path.join(out, "_manifest"))
+    entries = [e for r in records for e in r["splits"].values()]
+    assert sorted(int(s) for r in records for s in r["splits"]) == sorted(res.splits_processed)
+    assert sum(e["rows_in"] for e in entries) == N_ROWS
     for key, want in res.stage_counts.items():
-        assert sum(b["stage_counts"][key] for b in batches) == want
-    feed_sinks: dict[str, int] = {}
-    for b in batches:
-        for k, v in b["sink_counts"].items():
-            feed_sinks[k] = feed_sinks.get(k, 0) + v
-    assert feed_sinks == res.sink_counts
-    for b in batches:
-        assert set(b["phase_secs"]) == {"write_job", "lineage", "commit"}
+        assert sum(r["stage_counts"][key] for r in records) == want
+    record_sinks: dict[str, int] = {}
+    for e in entries:
+        for k, v in e["rows_routed"].items():
+            record_sinks[k] = record_sinks.get(k, 0) + v
+    assert record_sinks == res.sink_counts
+    for r in records:
+        assert set(r["phase_secs"]) == {"write_job", "lineage"}
 
 
 def test_resume_idempotent(spark, webtext_path, tmp_path):
@@ -322,7 +322,7 @@ def test_dedup_stage_keeps_parse_failures(spark, tmp_path):
 
 @pytest.mark.parametrize("dedup", [False, True])
 def test_lineage_without_matchall_sink(spark, tmp_path, dedup):
-    """Sinks with no match-all sink: per-sink lineage and manifest
+    """Sinks with no match-all sink: the commit record's per-sink
     counts equal a direct count of the sink files, and rows_in /
     rows_parsed per split count the rows that reach the router (the
     dedup survivors with dedup=True), computed here from the input."""
@@ -372,14 +372,16 @@ def test_lineage_without_matchall_sink(spark, tmp_path, dedup):
     direct: dict[int, dict[str, int]] = {}
     for r in data.groupBy("split_id", "sink_id").count().collect():
         direct.setdefault(r["split_id"], {})[r["sink_id"]] = r["count"]
-    manifest = {e["split_id"]: e for e in read_manifest(os.path.join(out, "_manifest"))}
-    lineage = {r["split_id"]: r for r in spark.read.parquet(os.path.join(out, "lineage")).collect()}
-    assert set(manifest) == set(lineage) == set(want_in) == set(range(4))
+    lineage = {
+        int(s): e for r in read_manifest(os.path.join(out, "_manifest"))
+        for s, e in r["splits"].items()
+    }
+    assert set(lineage) == set(want_in) == set(range(4))
     for split_id, n_in in want_in.items():
-        for rec in (manifest[split_id], lineage[split_id].asDict()):
-            assert rec["rows_in"] == n_in, (split_id, rec)
-            assert rec["rows_parsed"] == want_parsed[split_id], (split_id, rec)
-            assert dict(rec["rows_routed"]) == direct[split_id], (split_id, rec)
+        rec = lineage[split_id]
+        assert rec["rows_in"] == n_in, (split_id, rec)
+        assert rec["rows_parsed"] == want_parsed[split_id], (split_id, rec)
+        assert rec["rows_routed"] == direct[split_id], (split_id, rec)
     assert res.rows_in == sum(want_in.values())
     assert res.rows_parsed == sum(want_parsed.values())
     assert res.sink_counts == {
@@ -508,12 +510,12 @@ def test_pipeline_redact_pii_stage(spark, tmp_path):
     assert res.sink_counts[matchall] == 300  # scrub never drops rows
     assert res.stage_counts["pii.docs_masked"] == 50
 
-    # the per-batch metrics feed carries every stage counter, pii too
-    from hetman_spark.plans.checkpoint import read_batch_metrics
+    # the commit records carry every stage counter, pii too
+    from hetman_spark.plans.checkpoint import read_manifest
 
-    batches = read_batch_metrics(str(tmp_path / "out_pii" / "_metrics"))
+    records = read_manifest(str(tmp_path / "out_pii" / "_manifest"))
     for key, want in res.stage_counts.items():
-        assert sum(b["stage_counts"][key] for b in batches) == want
+        assert sum(r["stage_counts"][key] for r in records) == want
 
     out = spark.read.parquet(str(tmp_path / "out_pii" / "data"))
     assert out.filter(F.col("text").contains("@example.com")).count() == 0

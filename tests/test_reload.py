@@ -55,10 +55,10 @@ def test_config_hot_reload_between_batches(spark, tmp_path):
 
     from hetman_spark.plans.checkpoint import read_manifest
 
-    entries = sorted(read_manifest(str(manifest)), key=lambda e: e["committed_at"])
-    assert len(entries) == 8
-    first_sinks = entries[0]["sink_ids"]
-    last_sinks = entries[-1]["sink_ids"]
+    records = sorted(read_manifest(str(manifest)), key=lambda r: r["committed_at"])
+    assert len(records) == 8
+    (first_sinks,) = (e["rows_routed"] for e in records[0]["splits"].values())
+    (last_sinks,) = (e["rows_routed"] for e in records[-1]["splits"].values())
     # the first committed split ran under the 1-sink config; the last
     # ran after the rewrite and fans out to 2 sinks
     assert len(first_sinks) == 1
@@ -89,3 +89,39 @@ def test_config_hot_reload_broken_file_keeps_old(spark, tmp_path):
     # the previous config (agent.go error path)
     assert len(res.sink_counts) == 1
     assert res.rows_in == 500
+
+
+def test_reload_with_input_override_finds_the_running_target(spark, tmp_path, capsys, monkeypatch):
+    """run --config C --input X --reload-config: X is not the config's
+    input.path, so the reload must find the running target by its id.
+    The config gains a sink right after the first batch's write (an
+    in-process hook, no thread): the later batches route to both."""
+    import json
+
+    from hetman_spark.__main__ import main as cli_main
+    from hetman_spark.plans import pipeline
+    from hetman_spark.plans.checkpoint import read_manifest
+    from hetman_spark.sources.webtext import write_webtext
+
+    inp = str(tmp_path / "webtext")
+    write_webtext(spark, inp, 400, n_splits=4)
+    cfg = tmp_path / "cfg.yaml"
+    cfg.write_text(CFG_ONE_SINK % "configured/elsewhere")
+    real_write = pipeline.write_sinks
+
+    def write_then_edit(*args):
+        real_write(*args)
+        cfg.write_text(CFG_TWO_SINKS % "configured/elsewhere")
+
+    monkeypatch.setattr(pipeline, "write_sinks", write_then_edit)
+    out = str(tmp_path / "out")
+    assert cli_main(["run", "--config", str(cfg), "--input", inp, "--out", out,
+                     "--splits-per-commit", "1", "--reload-config", "--master", "local[4]"]) == 0
+    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rep["rows_in"] == 400
+    assert len(rep["sink_counts"]) == 2
+    routed = {
+        int(s): e["rows_routed"]
+        for r in read_manifest(os.path.join(out, "_manifest")) for s, e in r["splits"].items()
+    }
+    assert [len(routed[s]) for s in range(4)] == [1, 2, 2, 2]

@@ -42,31 +42,6 @@ def test_session_stats(spark):
     assert rows[(3, 0)]["session_seconds"] == 1800
 
 
-def test_streaming_session_window_matches_batch(spark, tmp_path):
-    """The streaming session_window twin agrees with the batch
-    operator on closed sessions (availableNow drains everything)."""
-    from hetman_spark.operators.sessionize import streaming_session_stats
-
-    src = str(tmp_path / "events")
-    _events(spark).write.parquet(src)
-    stream = spark.readStream.schema("event_id long, user_id long, ts timestamp").parquet(src)
-    q = (
-        streaming_session_stats(stream, gap="30 minutes")
-        .writeStream.format("memory").queryName("sess")
-        .outputMode("complete").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["user_id"], str(r["session_start"])): r["n_events"]
-        for r in spark.sql("select * from sess").collect()
-    }
-    # session_window's gap is [start, last+gap): same grouping as batch
-    assert got[(1, "2024-01-01 10:00:00")] == 3
-    assert got[(1, "2024-01-01 11:30:00")] == 1
-    assert got[(2, "2024-01-01 09:00:00")] == 1
-    assert got[(3, "2024-01-01 08:00:00")] == 2
-
-
 def test_sessionize_property_random_gaps(spark):
     """Property: within a session all consecutive gaps <= threshold;
     the first event of every later session follows a gap > threshold.

@@ -6,7 +6,7 @@ import time
 from pyspark.sql import functions as F
 
 from hetman_spark.sources.webtext import write_webtext
-from hetman_spark.streaming.stream import streaming_pipeline, windowed_counts_stream
+from hetman_spark.streaming.stream import streaming_pipeline
 
 
 def test_streaming_pipeline_matches_batch(spark, tmp_path):
@@ -26,21 +26,6 @@ def test_streaming_pipeline_matches_batch(spark, tmp_path):
     q2.awaitTermination(60)
     data2 = spark.read.parquet(os.path.join(out, "data"))
     assert data2.count() == data.count()
-
-
-def test_windowed_counts(spark, tmp_path):
-    wt = str(tmp_path / "wt2")
-    write_webtext(spark, wt, 500, n_splits=2)
-    agg = windowed_counts_stream(spark, wt, window="6 hours")
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory").queryName("win_counts")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(60)
-    rows = spark.sql("SELECT sum(n) AS total FROM win_counts").collect()
-    assert rows[0]["total"] == 500
 
 
 def _drain(query, n_rows: int, limit_s: float = 120) -> None:
@@ -175,105 +160,3 @@ def test_backpressure_max_files_per_trigger(spark, tmp_path):
     assert len(epochs) == 3  # one micro-batch per file
     data = spark.read.parquet(os.path.join(out, "data"))
     assert data.filter(F.col("sink_id") == "ef72bbb8150adc6cdce19e595f8e64e0").count() == 150
-
-
-def test_dedup_stream_drops_exact_dups_across_epochs(spark, tmp_path):
-    """Streaming exact-dedup twin: byte-identical texts arriving in
-    LATER micro-batches (within the watermark) are dropped by carried
-    state, not just within one batch."""
-    import datetime as dt
-
-    from hetman_spark.streaming.stream import dedup_stream
-
-    base = dt.datetime(2024, 1, 1, 12, 0, 0)
-    schema = "url string, warc_ts timestamp, text string"
-    f1 = [("u1", base, "alpha"), ("u2", base, "beta"), ("u3", base, "alpha")]
-    f2 = [("u4", base + dt.timedelta(minutes=5), "alpha"),
-          ("u5", base + dt.timedelta(minutes=5), "gamma")]
-    src = str(tmp_path / "src")
-    spark.createDataFrame(f1, schema).coalesce(1).write.mode("append").parquet(src)
-    spark.createDataFrame(f2, schema).coalesce(1).write.mode("append").parquet(src)
-
-    lines = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    q = (
-        dedup_stream(lines, watermark="1 hour")
-        .writeStream.format("memory").queryName("dedup_out")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql(
-        "SELECT text, count(*) AS n FROM dedup_out GROUP BY text"
-    ).collect()
-    assert {r["text"] for r in rows} == {"alpha", "beta", "gamma"}
-    assert all(r["n"] == 1 for r in rows)
-
-
-def test_dedup_stream_custom_keys_clean_schema(spark, tmp_path):
-    """r4 ADVICE low: with caller-supplied key_cols the internal
-    _content_hash column must neither be computed (wasted per-row md5)
-    nor leak into the output schema."""
-    from hetman_spark.streaming.stream import dedup_stream
-
-    schema = "url string, warc_ts timestamp, text string"
-    src = tmp_path / "empty_src"
-    src.mkdir()
-    lines = spark.readStream.schema(schema).parquet(str(src))
-    out = dedup_stream(lines, key_cols=["url"])
-    assert "_content_hash" not in out.columns
-    assert out.columns == lines.columns
-    # and the plan must not carry the md5 projection at all
-    assert "_content_hash" not in out._jdf.queryExecution().analyzed().toString()
-
-
-def test_distinct_users_stream_matches_batch_exact(spark, tmp_path):
-    """The streaming dedup-then-count construction must produce the
-    SAME exact per-window distinct-user counts as the batch entry's
-    COUNT(DISTINCT) once the watermark closes the windows."""
-    import datetime as dt
-
-    from hetman_spark.streaming.stream import distinct_users_stream
-
-    base = dt.datetime(2024, 1, 1, 0, 0, 0)
-    schema = "ts timestamp, user_id long"
-    h0 = [(base + dt.timedelta(minutes=m), u) for m, u in [(1, 1), (20, 1), (30, 2)]]
-    h1 = [(base + dt.timedelta(minutes=60 + m), u)
-          for m, u in [(5, 2), (10, 3), (50, 3), (55, 4)]]
-    src = str(tmp_path / "ev")
-    spark.createDataFrame(h0 + h1, schema).coalesce(1).write.mode("append").parquet(src)
-
-    out = str(tmp_path / "out")
-
-    def drain():
-        # parquet sink: supports resuming the same checkpoint across
-        # drains (the memory sink does not)
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1).parquet(src)
-        )
-        q = (
-            distinct_users_stream(stream)
-            .writeStream.format("parquet").option("path", out)
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ck"))
-            .trigger(availableNow=True).start()
-        )
-        q.awaitTermination(120)
-
-    drain()
-    # a far-future sentinel advances the watermark past H0/H1 so their
-    # append-mode results emit on the next drain
-    spark.createDataFrame(
-        [(base + dt.timedelta(hours=10), 99)], schema
-    ).coalesce(1).write.mode("append").parquet(src)
-    drain()
-
-    got = {
-        r["window_start"]: r["n_users"]
-        for r in spark.read.parquet(out).collect()
-    }
-    assert got.get(base) == 2            # users {1, 2}
-    assert got.get(base + dt.timedelta(hours=1)) == 3  # users {2, 3, 4}
