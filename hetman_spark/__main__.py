@@ -1,20 +1,25 @@
 """CLI entrypoint: the spark-submit surface of the pipeline.
 
-Usage (local or via spark-submit --py-files hetman_spark.zip):
+Usage (local, or via spark-submit --py-files hetman_spark.zip, where
+jobs/run_pipeline_job.py is `run`):
 
   python -m hetman_spark generate --out /tmp/webtext --rows 60000
   python -m hetman_spark run --input /tmp/webtext --out /tmp/out
   python -m hetman_spark status --out /tmp/out
 
-Plays cmd/hetman/main.go + cmd/root.go (cobra CLI, --mode=agent) of
-the reference; `run` is the agent loop, `status` reads the manifest
-the way `hetman` reads its registry on boot.
+Under spark-submit the session takes the launcher's master and every
+--conf (session.py get_spark); a plain `python` run is local.  Plays
+cmd/hetman/main.go + cmd/root.go (cobra CLI, --mode=agent) of the
+reference; `run` is the agent loop, `stream` its tailing form, and
+`status` reads the commit records of either the way `hetman` reads its
+registry on boot.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+from collections import Counter
 import os
 import sys
 import time
@@ -100,27 +105,12 @@ def main(argv: list[str] | None = None) -> int:
     args = ap.parse_args(argv)
 
     if args.cmd == "status":
-        from hetman_spark.plans.checkpoint import read_manifest
-
-        def total(all_counts) -> dict:
-            out: dict = {}
-            for counts in all_counts:
-                for k, v in counts.items():
-                    out[k] = out.get(k, 0) + v
-            return out
+        from hetman_spark.plans.checkpoint import read_manifest, totals
 
         # every figure is a sum over the commit records — the durable
         # record the OTel counters play (A3/A4), the same one resume reads
         records = read_manifest(f"{args.out}/_manifest")
-        sinks = total(e["rows_routed"] for r in records for e in r["splits"].values())
-        print(json.dumps({
-            "committed_splits": sum(len(r["splits"]) for r in records),
-            "stage_counts": total(r["stage_counts"] for r in records),
-            "sink_counts": dict(sorted(sinks.items())),
-            "batches": len(records),
-            "phase_secs": {k: round(v, 3) for k, v in total(r["phase_secs"] for r in records).items()},
-            "entries": records,
-        }, indent=2))
+        print(json.dumps({**totals(records), "entries": records}, indent=2))
         return 0
 
     from hetman_spark.session import get_spark
@@ -164,7 +154,8 @@ def main(argv: list[str] | None = None) -> int:
 
         per_target = []
         tot_in = tot_parsed = 0
-        tot_sinks: dict[str, int] = {}
+        tot_sinks: Counter[str] = Counter()
+        tot_stages: Counter[str] = Counter()
         n_splits_done = 0
         for input_path, out_dir, spec in targets:
             res = run_pipeline(
@@ -186,8 +177,8 @@ def main(argv: list[str] | None = None) -> int:
             n_splits_done += len(res.splits_processed)
             tot_in += res.rows_in
             tot_parsed += res.rows_parsed
-            for k, v in res.sink_counts.items():
-                tot_sinks[k] = tot_sinks.get(k, 0) + v
+            tot_sinks.update(res.sink_counts)
+            tot_stages.update(res.stage_counts)
             per_target.append({
                 "out": out_dir,
                 "splits_processed": len(res.splits_processed),
@@ -203,7 +194,8 @@ def main(argv: list[str] | None = None) -> int:
                     "splits_processed": n_splits_done,
                     "rows_in": tot_in,
                     "rows_parsed": tot_parsed,
-                    "sink_counts": tot_sinks,
+                    "sink_counts": dict(tot_sinks),
+                    "stage_counts": dict(tot_stages),
                     "per_target": per_target,
                     "sec": round(sec, 2),
                     "pages_per_sec": round(tot_in / sec, 1) if sec > 0 else None,
@@ -213,8 +205,7 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "stream":
-        from pyspark.sql import functions as F
-
+        from hetman_spark.plans.checkpoint import read_manifest, totals
         from hetman_spark.streaming.stream import streaming_pipeline
 
         q = streaming_pipeline(
@@ -235,24 +226,15 @@ def main(argv: list[str] | None = None) -> int:
         proc_sec = sum(
             (p.get("durationMs") or {}).get("triggerExecution", 0) for p in progress
         ) / 1000.0
-        # a zero-epoch drain (no input files) writes nothing under
-        # {out}/data — reading it unconditionally raises PATH_NOT_FOUND;
-        # report an empty run instead
-        sink_counts = {}
-        if rows_in > 0:
-            sink_counts = {
-                r["sink_id"]: r["n"]
-                for r in spark.read.parquet(f"{args.out}/data")
-                .groupBy("sink_id")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
+        # the epochs' commit records hold each epoch's per-sink footer
+        # counts: no sink file is read after the drain
+        sink_counts = totals(read_manifest(f"{args.out}/_manifest"))["sink_counts"]
         sec = time.time() - t0
         print(json.dumps({
             "cmd": "stream",
             "epochs": epochs,
             "rows_in": rows_in,
-            "sink_counts": dict(sorted(sink_counts.items())),
+            "sink_counts": sink_counts,
             "sec": round(sec, 2),
             "processing_sec": round(proc_sec, 2),
             "pages_per_sec": round(rows_in / sec, 1) if sec > 0 else None,

@@ -142,9 +142,8 @@ def run_targets(
     out_dir: str | None,
     salt_buckets: int | None,
     splits_per_commit: int | None,
-    defaults: GlobalConfig = GlobalConfig(),
 ) -> tuple[GlobalConfig, list[tuple[str, str, PipelineSpec]]]:
-    """The targets of one `run` (CLI and spark-submit job alike):
+    """The targets of one `run` (the spark-submit job is `run` too):
     [(input_path, out_dir, spec)] plus the run's settings.
 
     Every config target runs (the reference runs every workflow,
@@ -152,8 +151,7 @@ def run_targets(
     namespace out/<id> when there are several, so resume state never
     crosses targets; a bare input/out run is one anonymous target on
     the default sinks.  Settings: an explicit flag (not None) beats the
-    config's global section, which beats `defaults` (the caller's flag
-    defaults, used only without a config)."""
+    config's global section, which beats GlobalConfig's defaults."""
     if config_path:
         settings, specs = load_config(config_path)
     else:
@@ -161,7 +159,7 @@ def run_targets(
             raise ConfigError("run requires --input/--out or --config providing them")
         from hetman_spark.plans.pipeline import DEFAULT_SPEC
 
-        settings, specs = defaults, [DEFAULT_SPEC]
+        settings, specs = GlobalConfig(), [DEFAULT_SPEC]
     settings = replace(
         settings,
         out_dir=out_dir or settings.out_dir,

@@ -3081,16 +3081,27 @@ def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     each gram is md5-hashed exactly once — the r5 plan-CSE lesson
     respected, now without the fan-out), each sliding window takes
     array_min over a slice (min h, ties rightmost), and array_distinct
-    replaces the pair-selection dedup.  Rows out: (doc_id, pos, fp) —
-    identical selection to the shuffle-first form (pytest-pinned
-    equivalence; driver value-hash unchanged)."""
+    replaces the pair-selection dedup.  Rows out: (doc_id, pos, fp).
+
+    Docs of fewer than k+w-1 words have no full window and select
+    nothing, as in the DuckDB oracle (test_winnow_fingerprints_guarantees
+    pins 0-, 1-, 2- and 4-word docs against it).  The selection equals
+    the shuffle-first form's on the sf fixtures
+    (test_winnow_array_form_matches_shuffle_first), which hold no such
+    short doc: on a 3- to 5-word doc the shuffle-first form emitted a
+    partial-window fingerprint."""
     d = _tp(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
     n_grams = F.size(words) - _WN_K + 1
-    gram_structs = F.transform(
-        F.sequence(F.lit(0), n_grams - 1),
-        _gram_struct_md5_factory(words, _WN_K),
-    )
+    # a doc of fewer than k words has no gram; without the guard the
+    # sequence descends and slice() fails on start 0
+    gram_structs = F.when(
+        n_grams > 0,
+        F.transform(
+            F.sequence(F.lit(0), n_grams - 1),
+            _gram_struct_md5_factory(words, _WN_K),
+        ),
+    ).otherwise(F.array().cast("array<struct<h:string,np:bigint>>"))
     # TWO projections, deliberately: the window-selection lambda below
     # must reference the hashed-gram array as a COLUMN, not capture the
     # md5-building expression — a captured expression is re-evaluated

@@ -232,7 +232,13 @@ def nfc_normalize_udf():
     cover it.  Web corpora mix precomposed (U+00E1) and decomposed
     (a + U+0301) forms of the same visible text; exact dedup keyed on
     raw bytes silently misses those pairs — normalize FIRST, then
-    hash."""
+    hash.
+
+    pyarrow.compute.utf8_normalize cannot replace it on pyarrow 16.1:
+    it never composes, so form="NFC" returns the NFD string (U+00E1 ->
+    a + U+0301).  unicode_nfc_dedup's counters read the same under
+    either form; test_nfc_normalize_collapses_decomposed tells them
+    apart."""
     import unicodedata
 
     @F.pandas_udf("string")

@@ -25,6 +25,7 @@ lineage and metrics:
   splits        {split id: {rows_in, rows_parsed, rows_routed: {sink: n}}}
   stage_counts  the batch's df.observe counters (BatchPlan.stage_counts)
   phase_secs    write_job and lineage seconds
+  epoch_id      streaming micro-batches only (see below)
   committed_at  unix time of the commit
 
 A batch has its whole record or none of it, so resume, lineage and
@@ -32,6 +33,12 @@ A batch has its whole record or none of it, so resume, lineage and
 the rename reprocesses the whole batch, which is also the unit of the
 sink write.  A leftover `*.tmp` is ignored.  Listing the manifest dir
 is O(batches), never O(rows).
+
+The streaming twin commits each micro-batch the same way, keyed by
+its epoch: `epoch-<epoch id:06d>.json`.  A replayed epoch (same id
+after a failure) overwrites its own record, as it overwrites its own
+sink partitions.  Its resume state is the streaming checkpoint, so
+committed_splits reads batch records only; `status` sums both kinds.
 """
 
 from __future__ import annotations
@@ -39,6 +46,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from collections import Counter
 
 
 def commit_batch(manifest_dir: str, record: dict) -> None:
@@ -47,8 +55,11 @@ def commit_batch(manifest_dir: str, record: dict) -> None:
     called only after every sink write of the batch has succeeded (the
     ordering that makes kill/resume exactly-once)."""
     os.makedirs(manifest_dir, exist_ok=True)
-    first = min(int(s) for s in record["splits"])
-    final = os.path.join(manifest_dir, f"batch-{first:06d}.json")
+    if "epoch_id" in record:
+        name = f"epoch-{record['epoch_id']:06d}.json"
+    else:
+        name = f"batch-{min(int(s) for s in record['splits']):06d}.json"
+    final = os.path.join(manifest_dir, name)
     tmp = final + ".tmp"
     with open(tmp, "w") as f:
         json.dump({**record, "committed_at": time.time()}, f)
@@ -57,14 +68,14 @@ def commit_batch(manifest_dir: str, record: dict) -> None:
     os.replace(tmp, final)
 
 
-def read_manifest(manifest_dir: str) -> list[dict]:
-    """Every commit record, in file-name (first split id) order; empty
-    if no manifest yet."""
+def read_manifest(manifest_dir: str, kinds: tuple[str, ...] = ("batch-", "epoch-")) -> list[dict]:
+    """Every commit record of `kinds`, in file-name order; empty if no
+    manifest yet."""
     if not os.path.isdir(manifest_dir):
         return []
     records = []
     for name in sorted(os.listdir(manifest_dir)):
-        if name.startswith("batch-") and name.endswith(".json"):
+        if name.startswith(kinds) and name.endswith(".json"):
             with open(os.path.join(manifest_dir, name)) as f:
                 records.append(json.load(f))
     return records
@@ -72,4 +83,24 @@ def read_manifest(manifest_dir: str) -> list[dict]:
 
 def committed_splits(manifest_dir: str) -> set[int]:
     """The set of committed split ids (empty if no manifest yet)."""
-    return {int(s) for record in read_manifest(manifest_dir) for s in record["splits"]}
+    return {int(s) for record in read_manifest(manifest_dir, ("batch-",)) for s in record["splits"]}
+
+
+def totals(records: list[dict]) -> dict:
+    """The records summed: what `status` prints and the `stream` CLI
+    reports as its sink_counts."""
+
+    def total(all_counts) -> dict:
+        out: Counter = Counter()
+        for counts in all_counts:
+            out.update(counts)
+        return dict(out)
+
+    sinks = total(e["rows_routed"] for r in records for e in r["splits"].values())
+    return {
+        "committed_splits": sum(len(r["splits"]) for r in records),
+        "stage_counts": total(r["stage_counts"] for r in records),
+        "sink_counts": dict(sorted(sinks.items())),
+        "batches": len(records),
+        "phase_secs": {k: round(v, 3) for k, v in total(r["phase_secs"] for r in records).items()},
+    }

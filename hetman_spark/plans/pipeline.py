@@ -9,7 +9,9 @@ per batch — SURVEY.md §3.1 "the driver loop is: for
 batch_of_partitions: process; append manifest entry".
 
 Stages and their reference analogs (plan_batch builds the parse ->
-route chain for every caller; run_pipeline adds the driver loop):
+route chain for every caller; process_batch runs one batch from plan
+to commit record, for run_pipeline's driver loop and the streaming
+twin's micro-batches alike):
   read parquet (pruned by manifest anti-join) . tailer + offset seek
   extract_page (JVM: strict utf-8 decode,     . Parser.Run (P1)
     template slicing, grok with the spec's
@@ -463,18 +465,20 @@ def _discover_splits(spark: SparkSession, src: DataFrame, input_path: str) -> li
 
 
 def _footer_lineage(
-    data_dir: str, batch: list[int], matchall_sink: str | None
+    data_dir: str, batch: list[int] | None, matchall_sink: str | None
 ) -> tuple[dict[int, tuple[int, int]], dict[int, dict[str, int]]]:
     """Per-split lineage from parquet FOOTER metadata of the files the
-    write job just produced: row counts per (sink, split) dir are
-    num_rows sums; unparsed counts are the null_count statistic of the
-    nullable parse_ok marker column; the input-side (rows, parsed)
-    counts are those of `matchall_sink` (none without one).  O(files)
-    driver work, no Spark job, no re-parse.  Plays hetman's per-target OTel counters
+    write job just produced under `data_dir`/sink_id=*/split_id=*, for
+    the splits of `batch` (every split dir when None): row counts per
+    (sink, split) dir are num_rows sums; unparsed counts are the
+    null_count statistic of the nullable parse_ok marker column; the
+    input-side (rows, parsed) counts are those of `matchall_sink` (none
+    without one).  O(files) driver work, no Spark job, no re-parse.
+    Plays hetman's per-target OTel counters
     (/root/reference/internal/telemetry/metrics/metrics.go:77-90)."""
     import pyarrow.parquet as pq
 
-    wanted = set(batch)
+    wanted = None if batch is None else set(batch)
     per_split_routes: dict[int, dict[str, int]] = {}
     in_counts: dict[int, tuple[int, int]] = {}
     if not os.path.isdir(data_dir):
@@ -488,7 +492,7 @@ def _footer_lineage(
             if not split_name.startswith("split_id="):
                 continue
             split_id = int(split_name.split("=", 1)[1])
-            if split_id not in wanted:
+            if wanted is not None and split_id not in wanted:
                 continue
             n = 0
             nulls = 0
@@ -513,6 +517,86 @@ def _footer_lineage(
             if sink_id == matchall_sink:
                 in_counts[split_id] = (n, n - nulls)
     return in_counts, per_split_routes
+
+
+def process_batch(
+    df: DataFrame,
+    spec: PipelineSpec,
+    lookup: DataFrame,
+    out_dir: str,
+    splits: list[int] | None = None,
+    epoch_id: int | None = None,
+    **stages,
+) -> tuple[dict, dict[str, float]]:
+    """One batch from plan to commit, the body of run_pipeline's loop
+    and of the streaming twin's foreachBatch: plan_batch (`stages` are
+    its options) -> write_sinks -> footer lineage -> one commit record
+    (plans/checkpoint.py commit_batch).
+
+    A run_pipeline batch names its `splits`, writes data/sink_id=*/
+    split_id=* and commits batch-<first split>.  A micro-batch passes
+    its `epoch_id` instead, writes under data/epoch_id=<e>/ and commits
+    epoch-<e>; its record holds the splits its rows carry.  Returns the
+    record and the batch's write_job, lineage and commit seconds."""
+    # the session of `df`: foreachBatch runs under a CLONED session
+    # whose conf was snapshotted at stream start, so setting the conf on
+    # the outer session is a no-op there, and static overwrite would
+    # wipe every earlier epoch
+    df.sparkSession.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    data_dir = os.path.join(out_dir, "data")
+    plan = plan_batch(df, spec, lookup, **stages)
+    routed, partition_cols, lineage_dir = plan.routed, ["sink_id", "split_id"], data_dir
+    if epoch_id is not None:
+        routed = routed.withColumn("epoch_id", F.lit(epoch_id))
+        partition_cols = ["epoch_id", *partition_cols]
+        lineage_dir = os.path.join(data_dir, f"epoch_id={epoch_id}")
+    _t0 = time.time()
+    write_sinks(routed, data_dir, partition_cols)
+    _t1 = time.time()
+    batch_counts = plan.stage_counts()
+
+    # lineage (A1/A2): per-split in/parsed/routed counts of the
+    # shipped rows.  Per-sink counts come from the freshly written
+    # parquet footers (no job, no re-parse).  A match-all sink
+    # (the common config — hetman forwarders each receive every
+    # record of their target) holds every shipped row, so its
+    # footers give the input-side counts too; without one, one
+    # aggregation over the shipped frame does.
+    matchall = [s.signature() for s in spec.sinks
+                if s.predicate_col == "*" or s.predicate_val == "*"]
+    in_counts, per_split_routes = _footer_lineage(
+        lineage_dir, splits, matchall[0] if matchall else None)
+    if not matchall:
+        in_counts = {
+            r["split_id"]: (r["n"], r["n_parsed"])
+            for r in plan.shipped.groupBy("split_id").agg(
+                F.count(F.lit(1)).alias("n"),
+                F.count_if(F.col("parse_ok")).alias("n_parsed"),
+            ).collect()
+        }
+
+    _t2 = time.time()
+    if splits is None:
+        splits = sorted(set(in_counts) | set(per_split_routes))
+    record = {
+        "splits": {
+            s: {
+                "rows_in": in_counts.get(s, (0, 0))[0],
+                "rows_parsed": in_counts.get(s, (0, 0))[1],
+                "rows_routed": per_split_routes.get(s, {}),
+            }
+            for s in splits
+        },
+        "stage_counts": batch_counts,
+        "phase_secs": {"write_job": round(_t1 - _t0, 3), "lineage": round(_t2 - _t1, 3)},
+    }
+    if epoch_id is not None:
+        record["epoch_id"] = epoch_id
+    # the one commit record (A1-A5): manifest, lineage and metrics of
+    # the batch, written strictly after all sink writes
+    commit_batch(os.path.join(out_dir, "_manifest"), record)
+    _t3 = time.time()
+    return record, {"write_job": _t1 - _t0, "lineage": _t2 - _t1, "commit": _t3 - _t2}
 
 
 def run_pipeline(
@@ -579,13 +663,11 @@ def run_pipeline(
     plan (no extra shuffle or job); parse failures pass through (P6);
     affected-doc count recorded as pii.docs_masked.
 
-    Each iteration: one Spark job over <= splits_per_commit uncommitted
-    splits -> dynamic-overwrite write partitioned by (sink_id,
-    split_id) -> footer lineage -> ONE commit record for the batch
-    (commit_batch: per-split counts, stage counters, phase times).  A
-    kill anywhere before that record lands reprocesses the whole batch
-    on rerun, overwriting its output partitions idempotently
-    (exactly-once observable output; see plans/checkpoint.py).
+    Each iteration is one process_batch over <= splits_per_commit
+    uncommitted splits.  A kill anywhere before its record lands
+    reprocesses the whole batch on rerun, overwriting its output
+    partitions idempotently (exactly-once observable output; see
+    plans/checkpoint.py).
 
     Physical shape (default, presalt=False): both joins are broadcast,
     so the plan has exactly ONE shuffle of un-duplicated rows — the
@@ -597,11 +679,6 @@ def run_pipeline(
     repartition on (lang, salt) from the north_rule before the enrich
     join — needed when the lookup is too big to broadcast.
     """
-    manifest_dir = os.path.join(out_dir, "_manifest")
-    data_dir = os.path.join(out_dir, "data")
-
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
     src = spark.read.parquet(input_path)
     all_splits = _discover_splits(spark, src, input_path)
     if labeled_input_path:
@@ -611,7 +688,7 @@ def run_pipeline(
             spark, spark.read.parquet(labeled_input_path), labeled_input_path
         )
         all_splits = sorted(set(all_splits) | set(labeled_splits))
-    done = committed_splits(manifest_dir)
+    done = committed_splits(os.path.join(out_dir, "_manifest"))
     todo = [s for s in all_splits if s not in done]
     if max_splits is not None:
         todo = todo[:max_splits]
@@ -675,62 +752,18 @@ def run_pipeline(
             )
             df = union_labeled(df, labeled)
 
-        plan = plan_batch(
-            df, spec, lookup, presalt=presalt, salt_buckets=salt_buckets, dedup=dedup,
-            neardup=neardup, neardup_jaccard=neardup_jaccard, redact_pii=redact_pii,
+        record, batch_secs = process_batch(
+            df, spec, lookup, out_dir, splits=batch, presalt=presalt,
+            salt_buckets=salt_buckets, dedup=dedup, neardup=neardup,
+            neardup_jaccard=neardup_jaccard, redact_pii=redact_pii,
         )
-        _t0 = time.time()
-        write_sinks(plan.routed, data_dir, ["sink_id", "split_id"])
-        _t1 = time.time()
-        # one counter record per batch: summed into the result and
-        # written verbatim into the batch's commit record below
-        batch_counts = plan.stage_counts()
-        for key, val in batch_counts.items():
+        for key, val in record["stage_counts"].items():
             result.stage_counts[key] = result.stage_counts.get(key, 0) + val
-
-        # lineage (A1/A2): per-split in/parsed/routed counts of the
-        # shipped rows.  Per-sink counts come from the freshly written
-        # parquet footers (no job, no re-parse).  A match-all sink
-        # (the common config — hetman forwarders each receive every
-        # record of their target) holds every shipped row, so its
-        # footers give the input-side counts too; without one, one
-        # aggregation over the shipped frame does.
-        matchall = [s.signature() for s in spec.sinks
-                    if s.predicate_col == "*" or s.predicate_val == "*"]
-        in_counts, per_split_routes = _footer_lineage(
-            data_dir, batch, matchall[0] if matchall else None)
-        if not matchall:
-            in_counts = {
-                r["split_id"]: (r["n"], r["n_parsed"])
-                for r in plan.shipped.groupBy("split_id").agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.count_if(F.col("parse_ok")).alias("n_parsed"),
-                ).collect()
-            }
-
-        _t2 = time.time()
-        splits = {
-            s: {
-                "rows_in": in_counts.get(s, (0, 0))[0],
-                "rows_parsed": in_counts.get(s, (0, 0))[1],
-                "rows_routed": per_split_routes.get(s, {}),
-            }
-            for s in batch
-        }
-        # the one commit record (A1-A5): manifest, lineage and metrics
-        # of the batch, written strictly after all sink writes
-        commit_batch(manifest_dir, {
-            "splits": splits,
-            "stage_counts": batch_counts,
-            "phase_secs": {"write_job": round(_t1 - _t0, 3), "lineage": round(_t2 - _t1, 3)},
-        })
-        _t3 = time.time()
-        batch_secs = {"write_job": _t1 - _t0, "lineage": _t2 - _t1, "commit": _t3 - _t2}
         for key, val in batch_secs.items():
             result.phase_secs[key] = result.phase_secs.get(key, 0.0) + val
 
         result.splits_processed.extend(batch)
-        for entry in splits.values():
+        for entry in record["splits"].values():
             result.rows_in += entry["rows_in"]
             result.rows_parsed += entry["rows_parsed"]
             for k, v in entry["rows_routed"].items():

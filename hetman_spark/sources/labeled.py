@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hetman_spark.operators.modify import fill_timestamp
+
 LABELS_TYPE = "map<string,string>"
 
 # forwarder.Payload / PayloadStream — the Loki-style push body
@@ -62,7 +64,9 @@ def loki_to_webtext(decoded: DataFrame, n_splits: int = 16) -> DataFrame:
     extracts from (a push record has no page body, so text is empty —
     the parse/grok stage still gets real fields).  Timestamps are
     opaque strings in the reference (aggregator_test.go:89 sends
-    "timestamp"), so unparseable ones become NULL, not an error."""
+    "timestamp"): a missing or unparseable one is no error; it is
+    stamped with the current time (F3, fill_timestamp), as the
+    reference's Loki forwarder stamps a record without one."""
     url = F.coalesce(
         F.try_element_at("labels", F.lit("source")), F.lit("push://payload")
     )
@@ -73,7 +77,7 @@ def loki_to_webtext(decoded: DataFrame, n_splits: int = 16) -> DataFrame:
     ).cast("binary")
     return decoded.select(
         url.alias("url"),
-        F.try_to_timestamp(F.col("warc_ts")).alias("warc_ts"),
+        fill_timestamp(F.try_to_timestamp(F.col("warc_ts"))).alias("warc_ts"),
         html.alias("html"),
         F.lit("").alias("text"),
         F.coalesce(

@@ -10,19 +10,19 @@ Source mapping (SURVEY.md §2.1):
 - S2 offset resume -> the streaming checkpointLocation (exact
   offsets, built-in — the registry analog).
 
-Each micro-batch runs the batch pipeline's plan verbatim: foreachBatch
-hands the static micro-batch to plans/pipeline.py plan_batch (parse ->
-rebalance -> broadcast enrich -> route, the default spec), so the
-stream and run_pipeline share one plan — one definition of the
+Each micro-batch is a pipeline batch: foreachBatch hands the static
+micro-batch to plans/pipeline.py process_batch (plan_batch with the
+default spec -> write_sinks -> footer lineage -> one commit record),
+the same body run_pipeline's loop runs — one definition of the
 semantics, two execution modes, the core argument for rebuilding
 hetman on Spark.
 
-Sink: foreachBatch -> the batch pipeline's sink writer
-(plans/pipeline.py write_sinks: same file format), one partition per
-epoch_id with dynamic partition overwrite, so a retried micro-batch
-replaces its own partial output instead of duplicating it
-(exactly-once OBSERVABLE output on top of foreachBatch's
-at-least-once delivery).
+Sink: each epoch writes its own partition, data/epoch_id=<e>/, with
+dynamic partition overwrite, and commits `_manifest/epoch-<e>.json`,
+so a retried micro-batch replaces its own partial output and its own
+record instead of duplicating them (exactly-once OBSERVABLE output on
+top of foreachBatch's at-least-once delivery).  `status` and the
+`stream` CLI read those records, as they read a batch run's.
 """
 
 from __future__ import annotations
@@ -125,42 +125,21 @@ def streaming_pipeline(
     trigger_once: bool = True,
     max_files_per_trigger: int = 4,
 ):
-    """The batch pipeline's plan as a streaming query.
-
-    foreachBatch runs plan_batch (default spec) and the batch sink
-    writer on each micro-batch; the streaming commit log
-    (checkpoint_dir) makes each micro-batch exactly-once — the
-    streaming twin of the batch manifest.
+    """The batch pipeline as a streaming query: foreachBatch runs
+    process_batch (default spec) on each micro-batch, keyed by its
+    epoch; the streaming commit log (checkpoint_dir) holds the offsets
+    to resume from — the streaming twin of the batch manifest.
     """
-    from hetman_spark.plans.pipeline import DEFAULT_SPEC, plan_batch, write_sinks
+    from hetman_spark.plans.pipeline import DEFAULT_SPEC, process_batch
     from hetman_spark.sources.lookup import lang_lookup
 
     lookup = lang_lookup(spark)
 
     def sink_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        # Idempotent sink: foreachBatch gives at-least-once delivery (a
-        # retried/restarted micro-batch re-runs with the SAME epoch_id),
-        # so a blind append would duplicate rows.  Writing each epoch
-        # into its own partition with dynamic partition overwrite makes
-        # the retry replace its earlier partial output — the streaming
-        # twin of the batch manifest's overwrite-then-commit design.
-        #
-        # The conf MUST be set on batch_df.sparkSession: foreachBatch
-        # executes under a CLONED session whose conf snapshot was taken
-        # at stream start, so setting it on the outer session is a
-        # no-op for this write — static overwrite then silently wipes
-        # every earlier epoch (caught by the `stream` CLI on a fresh
-        # session; the pytest had masked it via conf leakage from an
-        # earlier batch-pipeline test).
-        batch_df.sparkSession.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-        routed = plan_batch(batch_df, DEFAULT_SPEC, lookup).routed
-        write_sinks(
-            routed.withColumn("epoch_id", F.lit(int(epoch_id))),
-            f"{out_dir}/data",
-            ["epoch_id", "sink_id", "split_id"],
-        )
+        # foreachBatch delivers at least once: a retried or restarted
+        # micro-batch re-runs with the SAME epoch_id and overwrites its
+        # own epoch partition and record
+        process_batch(batch_df, DEFAULT_SPEC, lookup, out_dir, epoch_id=int(epoch_id))
 
     writer = (
         read_webtext_stream(spark, input_dir, max_files_per_trigger)

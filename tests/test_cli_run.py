@@ -249,9 +249,9 @@ def test_cli_run_rejects_a_format_the_pipeline_cannot_parse(spark, tmp_path):
 
 
 def test_submit_job_runs_every_target_with_config_settings(spark, tmp_path, capsys):
-    """jobs/run_pipeline_job.py builds its targets like the CLI: both
-    targets run, each in its own namespace, under the config's
-    splits_per_commit (2 -> two commit batches per 4-split target)."""
+    """jobs/run_pipeline_job.py is the CLI's `run`: both targets run,
+    each in its own namespace, under the config's splits_per_commit
+    (2 -> two commit batches per 4-split target)."""
     import os
     import runpy
 
@@ -267,15 +267,9 @@ def test_submit_job_runs_every_target_with_config_settings(spark, tmp_path, caps
 
     job = runpy.run_path(os.path.join(os.path.dirname(__file__), "..", "jobs",
                                       "run_pipeline_job.py"))
-    # the job's session builder reuses this session and sets its own
-    # arrow batch size on it; later tests keep the fixture's
-    batch_conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    batch_size = spark.conf.get(batch_conf)
-    try:
-        job["main"](["--config", str(cfg)])
-    finally:
-        spark.conf.set(batch_conf, batch_size)
+    assert job["main"](["--config", str(cfg), "--master", "local[4]"]) == 0
     rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rep["cmd"] == "run"
     assert rep["targets"] == 2
     assert rep["rows_in"] == 500
     for target in ("alpha", "beta"):

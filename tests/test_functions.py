@@ -778,13 +778,24 @@ def test_winnow_fingerprints_guarantees(spark, sf_dir):
             assert any(i <= p < i + _WN_W for p in positions), (doc_id, i)
     assert total_sel / total_grams < 0.6  # sketch, not the full stream
 
-    # shared-substring guarantee on a constructed pair
+    # shared-substring guarantee on a constructed pair, next to docs
+    # too short for one window (0, 1 and 2 words: fewer than k; 4
+    # words: fewer than k+w-1), each matched against the DuckDB oracle
     shared = "alpha beta gamma delta epsilon zeta eta theta"
     df = spark.createDataFrame(
-        [(900001, "xx yy " + shared), (900002, shared + " qq rr ss tt")],
+        [(900001, "xx yy " + shared), (900002, shared + " qq rr ss tt"),
+         (900010, ""), (900011, "one"), (900012, "one two"),
+         (900014, "one two three four")],
         "doc_id long, text string",
     )
-    import tempfile, os
+    import os
+    import tempfile
+
+    import duckdb
+
+    from hetman_spark.entry_queries import ORACLES
+    from tools.check_parity import normalize
+
     tmp = tempfile.mkdtemp()
     df.write.mode("overwrite").parquet(os.path.join(tmp, "documents.parquet"))
     out = q_winnow_fingerprints(spark, tmp).collect()
@@ -792,6 +803,14 @@ def test_winnow_fingerprints_guarantees(spark, sf_dir):
     for r in out:
         fps.setdefault(r["doc_id"], set()).add(r["fp"])
     assert fps[900001] & fps[900002]
+    assert set(fps) == {900001, 900002}  # no short doc selects anything
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{tmp}/documents.parquet/*.parquet'")
+    cur = con.execute(ORACLES["winnow_fingerprints"])
+    cols = [c[0] for c in cur.description]
+    oracle = [dict(zip(cols, r)) for r in cur.fetchall()]
+    assert normalize([r.asDict() for r in out], cols) == normalize(oracle, cols)
 
 
 def test_ivfpq_neighbors_come_from_probed_cells(spark, sf_dir):

@@ -62,6 +62,28 @@ def test_loki_payload_invalid_body_dropped(spark, tmp_path):
     assert loki_payload_to_df(spark, str(p)).count() == 1
 
 
+def test_loki_to_webtext_fills_missing_and_bad_timestamps(spark, tmp_path):
+    """F3 (loki.go:27-31): a pushed record whose timestamp is missing
+    or does not parse is stamped with the current time; a good one is
+    kept."""
+    import datetime
+
+    p = tmp_path / "payloads"
+    p.mkdir()
+    # the source label becomes the url: one stream per case
+    values = {"good": "2024-01-02 12:00:00", "bad": "timestamp", "missing": None}
+    payload = {"streams": [{"stream": {"source": k}, "values": [[ts, "line"]]}
+                           for k, ts in values.items()]}
+    (p / "p1.json").write_text(json.dumps(payload))
+    before = datetime.datetime.now()
+    got = {r["url"]: r["warc_ts"]
+           for r in loki_to_webtext(loki_payload_to_df(spark, str(p))).collect()}
+    assert got["good"].date() == datetime.date(2024, 1, 2)
+    for case in ("bad", "missing"):
+        assert got[case] is not None, case
+        assert abs((got[case] - before).total_seconds()) < 600, (case, got[case])
+
+
 def test_loki_payload_e2e_through_pipeline(spark, tmp_path):
     """Full S6 path: HTTP-payload files -> decode -> webtext adapter ->
     run_pipeline labeled union; upstream labels win the tag merge."""

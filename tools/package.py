@@ -2,8 +2,12 @@
 
 Usage:
     python tools/package.py [dest.zip]
-    spark-submit --master <cluster> --py-files hetman_spark.zip \
-        jobs/run_pipeline_job.py --input ... --out ...
+    spark-submit --master <cluster> [--conf k=v ...] --py-files hetman_spark.zip \
+        jobs/run_pipeline_job.py --input ... --out ... [any other `run` flag]
+
+The job is the CLI's `run` (same flags, defaults and result line); the
+session takes spark-submit's master and --conf over its own defaults.
+tests/test_spark_submit.py builds this zip and launches both.
 """
 
 from __future__ import annotations
