@@ -110,71 +110,11 @@ def _stitch_bench(spark, master: str, rows: int, scratch: str) -> None:
     })
 
 
-def _dedup_bench(spark, master: str, rows: int, scratch: str, reps: int = 3) -> None:
-    """Dedup-family scaling record (r4 VERDICT #3): LSH banding +
-    transitive clustering at corpus scale on the pinned core pair.
-    The corpus is the deterministic webtext text column — which
-    CONTAINS organic near-dups by construction (the generator's word
-    stream is seeded rid + i*7919, so docs rid and rid±7919 are
-    one-word-shifted copies), giving connected_components real merge
-    work, not an empty graph.  Reports min-of-reps for (a) the banded
-    LSH candidate join alone and (b) dedup_clusters end-to-end (LSH
-    materialization + CC rounds), plus CC round/check counts."""
-    from pyspark.sql import functions as F
-
-    from hetman_spark.functions.dedup import (
-        connected_components,
-        minhash_lsh_candidates,
-    )
-    from hetman_spark.sources.webtext import generate_webtext
-
-    docs_dir, warm_dir = f"{scratch}/docs", f"{scratch}/docs_warm"
-    generate_webtext(spark, rows, n_splits=64).select(
-        F.xxhash64("url").alias("doc_id"), "text"
-    ).write.parquet(docs_dir)
-    generate_webtext(spark, max(rows // 10, 1000), n_splits=16).select(
-        F.xxhash64("url").alias("doc_id"), "text"
-    ).write.parquet(warm_dir)
-    docs = spark.read.parquet(docs_dir)
-    warm = spark.read.parquet(warm_dir)
-
-    # warmup: the full path once on the small corpus
-    wp = minhash_lsh_candidates(warm, id_col="doc_id")
-    connected_components(wp).count()
-
-    lsh_secs, cc_secs, n_pairs = [], [], 0
-    cc_stats: dict = {}
-    for _ in range(reps):
-        t0 = time.time()
-        n_pairs = minhash_lsh_candidates(docs, id_col="doc_id").count()
-        lsh_secs.append(time.time() - t0)
-        t0 = time.time()
-        cc_stats = {}
-        cc = connected_components(
-            minhash_lsh_candidates(docs, id_col="doc_id"), stats=cc_stats
-        )
-        n_nodes = cc.count()
-        cc_secs.append(time.time() - t0)
-    _emit({
-        "master": master, "mode": "dedup",
-        "rows": rows, "n_pairs": n_pairs, "n_nodes": n_nodes,
-        "cc_rounds": cc_stats.get("rounds"),
-        "cc_checks": cc_stats.get("checks"),
-        "lsh_secs": [round(s, 2) for s in lsh_secs],
-        "cc_secs": [round(s, 2) for s in cc_secs],
-        "lsh_sec": round(min(lsh_secs), 2),
-        "cc_sec": round(min(cc_secs), 2),
-    })
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--master", required=True)
     ap.add_argument("--input", required=True)
     ap.add_argument("--warmup-input", required=True)
-    ap.add_argument("--salt-buckets", type=int, default=8)
-    ap.add_argument("--presalt", action="store_true",
-                    help="literal pre-enrich salted repartition path")
     ap.add_argument("--noop", action="store_true",
                     help="compute-path only: run the full plan into a noop sink "
                          "(isolates executor-scaling work from the single local "
@@ -184,13 +124,6 @@ def main() -> None:
                          "noop pre-pass — for interleaved min-of-rounds protocols "
                          "where later rounds serve as the deep warmup and the "
                          "input is already page-cache-hot from generation")
-    ap.add_argument("--neardup", action="store_true",
-                    help="run the pipeline with the in-pipeline near-dup stage "
-                         "(LSH -> Jaccard verify -> CC) for its scaling evidence")
-    ap.add_argument("--dedup-bench", type=int, default=0, metavar="ROWS",
-                    help="dedup-family scaling record: LSH banding + transitive "
-                         "clustering over a deterministic ROWS-doc corpus with "
-                         "organic near-dups; reports min-of-3 for each stage")
     ap.add_argument("--stitch", type=int, default=0, metavar="ROWS",
                     help="streaming multiline-stitcher drain benchmark: generate "
                          "ROWS synthetic log lines (40%% continuations), drain "
@@ -203,9 +136,6 @@ def main() -> None:
 
     scratch = tempfile.mkdtemp(prefix="benchrun-")
     try:
-        if args.dedup_bench:
-            _dedup_bench(spark, args.master, args.dedup_bench, scratch)
-            return
         if args.stitch:
             _stitch_bench(spark, args.master, args.stitch, scratch)
             return
@@ -231,16 +161,12 @@ def main() -> None:
 
         # warmup: same code path on the small table, then a full noop
         # pass over the real input so JIT/codegen/Arrow paths are hot
-        run_pipeline(spark, args.warmup_input, f"{scratch}/warmup",
-                     salt_buckets=args.salt_buckets, splits_per_commit=1024,
-                     presalt=args.presalt, neardup=args.neardup)
+        run_pipeline(spark, args.warmup_input, f"{scratch}/warmup", splits_per_commit=1024)
         if not args.light_warmup:
             noop_write(_routed(spark, src))
 
         t0 = time.time()
-        res = run_pipeline(spark, args.input, f"{scratch}/out",
-                           salt_buckets=args.salt_buckets, splits_per_commit=1024,
-                           presalt=args.presalt, neardup=args.neardup)
+        res = run_pipeline(spark, args.input, f"{scratch}/out", splits_per_commit=1024)
         sec = time.time() - t0
         _emit({
             "master": args.master,

@@ -81,7 +81,6 @@ class SinkConfig:
     add_tags: dict[str, str] = field(default_factory=dict)
     predicate_col: str = "*"
     predicate_val: str = "*"
-    format: str = "parquet"
 
     def signature(self, log_source_path: str = "") -> str:
         """Deterministic sink identity.

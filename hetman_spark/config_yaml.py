@@ -45,13 +45,16 @@ class GlobalConfig:
 
 
 def _parse_sink(d: dict) -> SinkConfig:
+    # every sink is written as zstd parquet (plans/pipeline.py
+    # write_sinks); any other format would be silently ignored
+    if d.get("format", "parquet") != "parquet":
+        raise ConfigError(f"forwarder {d.get('url', '?')!r}: unsupported format {d['format']!r}")
     pred = d.get("predicate", {}) or {}
     return SinkConfig(
         url=d["url"],
         add_tags=dict(d.get("add_tags", {}) or {}),
         predicate_col=pred.get("col", "*"),
         predicate_val=pred.get("val", "*"),
-        format=d.get("format", "parquet"),
     )
 
 

@@ -3195,9 +3195,11 @@ def q_unicode_nfc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical); NFC normalization collapses them back: n_raw_forms=2
     but n_norm_forms=1 for every doc containing an 'a' (and 1/1 for
     docs without).  n_changed counts variants the normalizer actually
-    rewrote (the decomposed one).  Scale shape: the UDF is one
-    Arrow-batched map pass inside the scan stage; only (doc_id, hash)
-    pairs reach the aggregate shuffle."""
+    rewrote (the decomposed one).  min_norm_md5 hashes the normal
+    form itself: the counts read the same whether the normalizer
+    composes (NFC) or decomposes (NFD), the hash does not.  Scale
+    shape: the UDF is one Arrow-batched map pass inside the scan
+    stage; only (doc_id, hash) pairs reach the aggregate shuffle."""
     from hetman_spark.functions.text import nfc_normalize_udf
 
     # plain scan on purpose (r6 A/B): the NFC pandas-UDF stage has tiny
@@ -3223,6 +3225,7 @@ def q_unicode_nfc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(
             F.when(F.col("norm") != F.col("raw"), F.lit(1)).otherwise(F.lit(0))
         ).cast("long").alias("n_changed"),
+        F.min(F.md5(F.col("norm"))).alias("min_norm_md5"),
     )
 
 
@@ -3239,7 +3242,8 @@ SELECT doc_id,
        CAST(count(DISTINCT raw_hash) AS BIGINT) AS n_raw_forms,
        CAST(count(DISTINCT md5(norm)) AS BIGINT) AS n_norm_forms,
        CAST(sum(CASE WHEN norm != raw THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_changed
+         AS n_changed,
+       min(md5(norm)) AS min_norm_md5
 FROM normed GROUP BY doc_id
 """
 

@@ -236,9 +236,8 @@ def nfc_normalize_udf():
 
     pyarrow.compute.utf8_normalize cannot replace it on pyarrow 16.1:
     it never composes, so form="NFC" returns the NFD string (U+00E1 ->
-    a + U+0301).  unicode_nfc_dedup's counters read the same under
-    either form; test_nfc_normalize_collapses_decomposed tells them
-    apart."""
+    a + U+0301).  unicode_nfc_dedup's min_norm_md5 column and
+    test_nfc_normalize_collapses_decomposed tell the forms apart."""
     import unicodedata
 
     @F.pandas_udf("string")

@@ -6,17 +6,16 @@ nginx/grok (gonx), JSON (fastjson, string-valued top-level keys only),
 syslog RFC5424 and RFC3164.  Parse failures forward the record
 UNPARSED — rows are never dropped (parser.go:148-155,201).
 
-Here each format is a vectorized column transform:
+Here each format is a JVM column expression (no Python runs per row):
 
 - nginx/grok: the $var pattern is translated to a regex once on the
   driver; extraction happens JVM-side with one regexp_extract per
   field (whole-stage codegen, no Python).  The webtext pipeline runs
   the same parse_grok on the log line it slices out of each page
   (operators/html.py:extract_page).
-- JSON: from_json with an explicit all-string schema (production
-  path — the "strings only" rule enforced by schema choice), plus a
-  pandas UDF replicating the reference's dynamic strings-only filter
-  exactly (/root/reference/internal/parser/parser.go:239-255).
+- JSON: one JVM expression over Spark's Variant parser that keeps
+  the string-valued top-level keys, the reference's strings-only
+  rule (reference internal/parser/parser.go:239-255).
 - syslog: fixed grammars as JVM regexp_extract structs.
 
 Every parser returns a null struct on failure and a parse_ok flag;
@@ -27,7 +26,6 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -96,45 +94,31 @@ def _grok_type(fields: list[str]) -> T.StructType:
 # ---------------------------------------------------------------------------
 
 
-def parse_json_static(line: Column, fields: list[str]) -> Column:
-    """Production JSON parse: explicit all-string schema.  The
-    reference keeps only string-valued top-level keys
-    (/root/reference/internal/parser/parser.go:239-255); with a static
-    per-pipeline schema the strings-only rule is enforced by schema
-    choice (SURVEY.md §1.1).  Unparseable lines -> null struct (P6).
+def parse_json(line: Column) -> Column:
+    """P2: the reference's JSON parse keeps only the top-level keys
+    whose value is a JSON string and drops the rest
+    (reference internal/parser/parser.go:239-255, values failing
+    StringBytes() are skipped): map<string,string>, or null for a line
+    that is not a JSON object (caller keeps the row, P6).
+
+    One JVM expression: try_parse_json (null on bad JSON), a try_cast
+    to map<string,variant> (null unless the value is an object: arrays
+    and scalars drop out), map_filter keeping the STRING-typed values
+    (a JSON null, number, bool, array or object value is dropped), and
+    a cast of the survivors to string.  A duplicated key keeps its
+    last value, as Python's json.loads does ('{"a":"1","a":2}' gives
+    {}), under the session default
+    spark.sql.variant.allowDuplicateKeys=true (session.py); with
+    Spark's default the whole line is null.
+
+    Known divergences from json.loads: text after the top-level object
+    is ignored ('{"a":"x"} junk' gives {a: x}, json.loads rejects the
+    line), and an object holding a NaN or Infinity value is null
+    (json.loads keeps its string keys).
     """
-    schema = T.StructType([T.StructField(f, T.StringType()) for f in fields])
-    return F.from_json(line, schema)
-
-
-_JSON_MAP_TYPE = T.MapType(T.StringType(), T.StringType())
-
-
-@F.pandas_udf(_JSON_MAP_TYPE)
-def parse_json_dynamic(lines: pd.Series) -> pd.Series:
-    """Exact replica of the reference's dynamic JSON parse: keep ONLY
-    top-level keys whose value is a JSON string; silently drop the
-    rest; unparseable line -> null (caller keeps the row, P6).
-
-    Reference: getKeyValuePairs at
-    /root/reference/internal/parser/parser.go:239-255 (values failing
-    StringBytes() are skipped).  Arrow-batched; json.loads per element
-    mirrors the reference's per-record fastjson call.
-    """
-    import json
-
-    def one(s):
-        if s is None:
-            return None
-        try:
-            obj = json.loads(s)
-        except Exception:
-            return None
-        if not isinstance(obj, dict):
-            return None
-        return {k: v for k, v in obj.items() if isinstance(v, str)}
-
-    return lines.map(one)
+    obj = F.try_parse_json(line).try_cast("map<string,variant>")
+    strings = F.map_filter(obj, lambda _k, v: F.schema_of_variant(v) == F.lit("STRING"))
+    return strings.cast("map<string,string>")
 
 
 # ---------------------------------------------------------------------------

@@ -8,7 +8,7 @@ forwarder builds a stream {merged tags, [[ts, line]]}
 
 Rebuild: one router, route_explode_static.  The routing table is a
 handful of driver-side Route rows (sink_id, predicate_col,
-predicate_val, add_tags, format); each row's predicate is inlined as a
+predicate_val, add_tags); each row's predicate is inlined as a
 literal Column expression and one inline() duplicates every record
 into the sinks it matches — a single DataFrame with a sink_id column,
 one pass over the data, then write.partitionBy(sink_id, ..).  SinkConfigs
@@ -39,15 +39,11 @@ class Route(NamedTuple):
     predicate_col: str = "*"
     predicate_val: str = "*"
     add_tags: dict[str, str] | None = None
-    format: str = "parquet"
 
 
 def route_rows(sinks) -> list[Route]:
     """SinkConfigs as routing-table rows, sink_id = the sink signature."""
-    return [
-        Route(s.signature(), s.predicate_col, s.predicate_val, s.add_tags, s.format)
-        for s in sinks
-    ]
+    return [Route(s.signature(), s.predicate_col, s.predicate_val, s.add_tags) for s in sinks]
 
 
 def validate_predicate_cols(routes, predicate_cols: list[str]) -> None:
@@ -78,8 +74,8 @@ def validate_predicate_cols(routes, predicate_cols: list[str]) -> None:
 def route_explode_static(df: DataFrame, routes: list[Route], predicate_cols: list[str]) -> DataFrame:
     """The router: each Route's predicate is inlined as a literal Column
     expression, matching routes collect into a per-row array of
-    (sink_id, add_tags, format) structs, and one inline() produces the
-    duplicated rows, with the three struct fields as columns.  No join:
+    (sink_id, add_tags) structs, and one inline() produces the
+    duplicated rows, with the two struct fields as columns.  No join:
     the plan is Project -> Generate, and the predicates are evaluated
     per row inside the Generate node, which Spark runs interpreted
     (outside WholeStageCodegen) between two codegen stages.  A null
@@ -98,12 +94,7 @@ def route_explode_static(df: DataFrame, routes: list[Route], predicate_cols: lis
             )
         else:
             tags = F.create_map().cast("map<string,string>")
-        payload = F.struct(
-            F.lit(r.sink_id).alias("sink_id"),
-            tags.alias("add_tags"),
-            F.lit(r.format).cast("string").alias("format"),
-        )
-        return F.when(cond, payload)
+        return F.when(cond, F.struct(F.lit(r.sink_id).alias("sink_id"), tags.alias("add_tags")))
 
     # inline = explode + one column per struct field, in one select
     # (one analysis pass)

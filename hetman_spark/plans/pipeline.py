@@ -51,7 +51,7 @@ from pyspark.sql import functions as F
 from hetman_spark.config import ModifierConfig, ParserConfig, PipelineSpec, SinkConfig
 from hetman_spark.operators.enrich import enrich_with_lookup
 from hetman_spark.operators.html import extract_page
-from hetman_spark.operators.modify import _strip_prefix, apply_modifier
+from hetman_spark.operators.modify import _strip_prefix, apply_modifier, go_replacer
 from hetman_spark.operators.parse import grok_to_regex
 from hetman_spark.operators.route import route_explode_static, route_rows, with_sink_tags
 from hetman_spark.plans.checkpoint import commit_batch, committed_splits
@@ -109,6 +109,16 @@ def grok_pattern(parser: ParserConfig) -> str:
     if not grok_to_regex(pattern)[1]:
         raise ValueError(f"grok pattern {pattern!r} has no $variables")
     return pattern
+
+
+def check_spec(spec: PipelineSpec) -> None:
+    """The one spec check, run at plan build and on a config reload:
+    grok_pattern's parser check, and the replace kernel built (and run
+    once on the driver) for every modifier pattern and template.
+    Raises ValueError for a spec whose batches could not run."""
+    grok_pattern(spec.parser)
+    for r in spec.modifier.replace_fields:
+        go_replacer(r.pattern, r.replacement)
 
 
 def build_parsed(df: DataFrame, parser: ParserConfig = ParserConfig()) -> DataFrame:
@@ -258,6 +268,7 @@ def plan_batch(
     options are run_pipeline's (see its docstring).  A `labels` column
     on `df` (aggregator mode) turns off the disjoint tag-merge path:
     push labels are data-dependent."""
+    check_spec(spec)
     observations: dict[str, Observation] = {}
 
     def observe(frame: DataFrame, name: str, *aggs) -> DataFrame:
@@ -273,7 +284,7 @@ def plan_batch(
     # fraction).
     parsed = build_parsed(df, spec.parser)
     if spec.modifier != ModifierConfig():
-        # --- modifier stage (M1-M3, pure Catalyst) ---
+        # --- modifier stage (M1-M3; replace runs in an Arrow UDF) ---
         parsed = parsed.withColumn("parsed", apply_modifier(F.col("parsed"), spec.modifier))
     flowed = observe(
         parsed, "parse",
@@ -726,7 +737,7 @@ def run_pipeline(
                         "config", config_reload_path, spec.id or spec.input_path,
                     )
                 else:
-                    grok_pattern(new_spec.parser)
+                    check_spec(new_spec)
                     spec = new_spec
             except Exception:
                 # keep the previous config, as the reference does — but

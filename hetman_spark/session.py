@@ -108,6 +108,9 @@ def get_spark(
         # errors still name the column and show the plan; runtime
         # errors keep their error class but lose the Python file:line.
         "spark.python.sql.dataFrameDebugging.enabled": "false",
+        # operators/parse.py parse_json: a duplicated JSON key keeps
+        # its last value (Spark's default makes the whole object null)
+        "spark.sql.variant.allowDuplicateKeys": "true",
     }
     if os.environ.get("HETMAN_SPARK_KAFKA_PACKAGES"):
         # S5/F4 last mile: pull the Kafka connector from Maven at

@@ -87,10 +87,9 @@ DEFAULT_SINKS: tuple[SinkConfig, ...] = (
 
 def routes_df(spark: SparkSession, sinks: tuple[SinkConfig, ...] = DEFAULT_SINKS) -> DataFrame:
     """Routing table: the router's Route rows (sink_id, predicate_col,
-    predicate_val, add_tags, format) as a JVM-local relation."""
+    predicate_val, add_tags) as a JVM-local relation."""
     return local_table(
         spark,
         route_rows(sinks),
-        "sink_id string, predicate_col string, predicate_val string, "
-        "add_tags map<string,string>, format string",
+        "sink_id string, predicate_col string, predicate_val string, add_tags map<string,string>",
     )

@@ -64,6 +64,16 @@ def test_insane_parser_format_rejected(tmp_path):
         load_config(_write(tmp_path, body))
 
 
+def test_forwarder_format_other_than_parquet_rejected(tmp_path):
+    # every sink is written as parquet: another format is a config
+    # error, not a setting that is silently ignored
+    body = SANE.replace("add_tags: {tier: archive}", "add_tags: {tier: archive}\n        format: json")
+    with pytest.raises(ConfigError, match="unsupported format 'json'"):
+        load_config(_write(tmp_path, body))
+    body = SANE.replace("add_tags: {tier: archive}", "add_tags: {tier: archive}\n        format: parquet")
+    assert load_config(_write(tmp_path, body))[1][0].sinks == load_config(_write(tmp_path, SANE))[1][0].sinks
+
+
 def test_no_forwarders_rejected(tmp_path):
     body = """
 targets:

@@ -6,8 +6,7 @@ from pyspark.sql import functions as F
 from hetman_spark.operators.parse import (
     grok_to_regex,
     parse_grok,
-    parse_json_dynamic,
-    parse_json_static,
+    parse_json,
     parse_syslog_rfc3164,
     parse_syslog_rfc5424,
 )
@@ -73,19 +72,14 @@ def test_nginx_parse_anchors_at_end_of_text(spark):
     assert [r["p"] for r in out] == [None, None]
 
 
-def test_json_parse_static(spark):
+def test_json_parse_golden(spark):
     # golden: parser_test.go:108-124
     line = (
         '{"timestamp": "2023-06-10T01:14:26.000Z", "level": "info", '
         '"source": "stdout", "message": "This is an info message from stdout"}'
     )
     df = spark.createDataFrame([(line,)], "line string")
-    row = _one(
-        df.select(
-            parse_json_static(F.col("line"), ["timestamp", "level", "source", "message"]).alias("p")
-        )
-    )
-    assert row.asDict() == {
+    assert _one(df.select(parse_json(F.col("line")).alias("p"))) == {
         "timestamp": "2023-06-10T01:14:26.000Z",
         "level": "info",
         "source": "stdout",
@@ -93,16 +87,31 @@ def test_json_parse_static(spark):
     }
 
 
-def test_json_parse_dynamic_strings_only(spark):
-    # strings-only rule: getKeyValuePairs, parser.go:239-255
-    df = spark.createDataFrame(
-        [('{"a":"1","n":2,"obj":{"x":"y"},"b":"2","arr":[1],"f":false}',),
-         ("not json",)],
-        "line string",
-    )
-    out = df.select(parse_json_dynamic(F.col("line")).alias("p")).collect()
-    assert out[0]["p"] == {"a": "1", "b": "2"}
-    assert out[1]["p"] is None  # row kept, parse null (P6)
+def test_json_parse_strings_only(spark):
+    # strings-only rule: getKeyValuePairs, parser.go:239-255; anything
+    # but a JSON object is null and the row is kept (P6)
+    cases = [
+        ('{"a":"1","n":2,"obj":{"x":"y"},"b":"2","arr":[1],"f":false}', {"a": "1", "b": "2"}),
+        ('{"n":null,"s":"","u":"caf\\u00e9"}', {"s": "", "u": "café"}),
+        ('{"a":"1","a":"2"}', {"a": "2"}),  # a duplicated key keeps its last value
+        ('{"a":"1","a":2}', {}),
+        ("{}", {}),
+        ("[1,2]", None),
+        ('["a"]', None),
+        ('"s"', None),
+        ("3", None),
+        ("null", None),
+        ("not json", None),
+        ('{"a":"1",}', None),
+        (None, None),
+    ]
+    df = spark.createDataFrame([(i, line) for i, (line, _want) in enumerate(cases)], "i int, line string")
+    parsed = df.select("i", parse_json(F.col("line")).alias("p"))
+    got = {r["i"]: r["p"] for r in parsed.collect()}
+    assert [got[i] for i in range(len(cases))] == [want for _line, want in cases]
+    # one JVM expression: no Python worker in the physical plan
+    plan = parsed._jdf.queryExecution().executedPlan().toString()
+    assert "Python" not in plan and "pythonUDF" not in plan
 
 
 def test_syslog_rfc5424(spark):

@@ -3,21 +3,22 @@ cores — no SparkSession needed, so these run fast and wide.
 
 - grok_to_regex: generated field values must round-trip through the
   generated regex for any delimiter structure gonx supports.
-- go_replace_all: must equal Python re.sub whenever the pattern
-  cannot match empty (the fast-path equivalence claim in
-  operators/modify.py), and must collapse the canonical `.*` case the
-  way Go does.
+- go_replacer (the RE2 replace kernel): must equal Python re.sub
+  whenever the pattern cannot match empty (then Go's skip of an empty
+  match right after a match never applies), and must collapse the
+  canonical `.*` case the way Go does.
 - SinkConfig.signature: permutation-invariant in tag insertion order,
   injective-ish across differing tags.
 """
 
 import re
 
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from hetman_spark.config import SinkConfig
-from hetman_spark.operators.modify import go_replace_all
+from hetman_spark.operators.modify import go_replacer
 from hetman_spark.operators.parse import grok_to_regex
 
 # field values must not contain the delimiters around them
@@ -52,9 +53,11 @@ def test_grok_roundtrip(fields, values):
 )
 def test_go_replace_matches_resub_for_nonempty_patterns(s, pattern, repl):
     # none of these patterns can match "", so Go == Python semantics
-    rx = re.compile(pattern)
+    # (the template alphabet has no "$" or "\\": a plain literal);
+    # Go's and RE2's \d and \w are ASCII-only, as re.ASCII makes them
+    rx = re.compile(pattern, re.ASCII)
     assert rx.search("") is None
-    assert go_replace_all(s, rx, repl.replace("\\", "")) == rx.sub(repl.replace("\\", ""), s)
+    assert go_replacer(pattern, repl)(pa.array([s])).to_pylist() == [rx.sub(repl, s)]
 
 
 @settings(max_examples=200)
@@ -64,7 +67,7 @@ def test_go_replace_dotstar_single_replacement(s):
     # yields exactly one replacement (modifier_test.go golden)
     if "\n" in s:
         return
-    assert go_replace_all(s, re.compile(".*"), "****") == "****"
+    assert go_replacer(".*", "****")(pa.array([s])).to_pylist() == ["****"]
 
 
 @settings(max_examples=100)

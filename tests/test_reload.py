@@ -125,3 +125,61 @@ def test_reload_with_input_override_finds_the_running_target(spark, tmp_path, ca
         for r in read_manifest(os.path.join(out, "_manifest")) for s, e in r["splits"].items()
     }
     assert [len(routed[s]) for s in range(4)] == [1, 2, 2, 2]
+
+
+CFG_REDACT = CFG_ONE_SINK.replace("""    parser: {format: nginx}
+""", """    parser: {format: nginx}
+    modifier:
+      replace_fields:
+        - {path: parsed.remote_addr, pattern: '%s', replacement: 'x'}
+""")
+
+
+def test_reload_to_a_pattern_re2_rejects_keeps_the_old_spec(spark, tmp_path):
+    """The reload runs the whole spec check, the replace kernel
+    included: a reloaded pattern the regex engine rejects is never
+    swapped in, so the run finishes on the old spec."""
+    from pyspark.sql import functions as F
+
+    from hetman_spark.config_yaml import load_config
+    from hetman_spark.plans.pipeline import run_pipeline
+    from hetman_spark.sources.webtext import write_webtext
+
+    inp = str(tmp_path / "webtext")
+    write_webtext(spark, inp, 400, n_splits=2)
+    cfg = tmp_path / "cfg.yaml"
+    cfg.write_text(CFG_REDACT % (inp, r"\d"))
+    _gc, specs = load_config(str(cfg))
+    cfg.write_text(CFG_REDACT % (inp, "("))  # bad BEFORE the run starts
+    out = str(tmp_path / "out")
+
+    res = run_pipeline(spark, inp, out, spec=specs[0], splits_per_commit=1,
+                       config_reload_path=str(cfg))
+    assert res.rows_in == 400
+    assert res.splits_processed == [0, 1]
+    # every parsed address went through the old spec's \d -> x
+    addrs = spark.read.parquet(os.path.join(out, "data")).where("parse_ok").select(
+        F.col("tags")["remote_addr"].alias("a")
+    )
+    assert addrs.count() > 0
+    assert addrs.where(F.col("a").rlike("[0-9]")).count() == 0
+
+
+def test_a_bad_pattern_raises_at_plan_build(spark, tmp_path):
+    """The spec check runs at plan build: a replace pattern the engine
+    rejects raises before any sink write or commit record."""
+    import pytest
+
+    from hetman_spark.config_yaml import load_config
+    from hetman_spark.plans.pipeline import run_pipeline
+    from hetman_spark.sources.webtext import write_webtext
+
+    inp = str(tmp_path / "webtext")
+    write_webtext(spark, inp, 100, n_splits=1)
+    cfg = tmp_path / "cfg.yaml"
+    cfg.write_text(CFG_REDACT % (inp, "("))
+    _gc, specs = load_config(str(cfg))
+    out = tmp_path / "out"
+    with pytest.raises(ValueError, match="missing \\)"):
+        run_pipeline(spark, inp, str(out), spec=specs[0])
+    assert not (out / "data").exists() and not (out / "_manifest").exists()

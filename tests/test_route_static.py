@@ -26,9 +26,9 @@ def test_router_matches_python_reference(spark):
         F.broadcast(lang_lookup(spark)), "lang", "left"
     )
     got = sorted(
-        (r["sink_id"], r["url"], tuple(sorted(r["add_tags"].items())), r["format"])
+        (r["sink_id"], r["url"], tuple(sorted(r["add_tags"].items())))
         for r in route_explode_static(df, route_rows(DEFAULT_SINKS), COLS)
-        .select("sink_id", "url", "add_tags", "format")
+        .select("sink_id", "url", "add_tags")
         .collect()
     )
 
@@ -39,7 +39,7 @@ def test_router_matches_python_reference(spark):
         return val is not None and str(val) == sink.predicate_val
 
     want = sorted(
-        (s.signature(), row["url"], tuple(sorted(s.add_tags.items())), s.format)
+        (s.signature(), row["url"], tuple(sorted(s.add_tags.items())))
         for row in df.select("url", *COLS).collect()
         for s in DEFAULT_SINKS
         if matches(s, row)
