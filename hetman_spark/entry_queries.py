@@ -323,6 +323,8 @@ def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # min(vec_id) stays IN the plan (broadcast 1-row join) — the
     # driver-side collect this entry used to do was r4 VERDICT's
     # residual nit #2; one job end-to-end now
+    from hetman_spark.functions.similarity import cosine
+
     e = _t(spark, sf_dir, "embeddings")
     mid = e.agg(F.min("vec_id").alias("min_id"))
     q = (
@@ -333,16 +335,12 @@ def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.join(F.broadcast(mid), e["vec_id"] == mid["min_id"], "left_anti")
         .select("vec_id", F.col("embedding").cast("array<double>").alias("ce"))
     )
-    dot = F.aggregate(
-        F.zip_with(F.col("ce"), F.col("qe"), lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm = lambda c: F.sqrt(F.aggregate(c, F.lit(0.0), lambda acc, x: acc + x * x))  # noqa: E731
-    sim = dot / (norm(F.col("ce")) * norm(F.col("qe")))
     ranked = (
         cand.crossJoin(F.broadcast(q))
-        .select(F.col("vec_id").alias("neighbor_id"), sim.alias("sim"))
+        .select(
+            F.col("vec_id").alias("neighbor_id"),
+            cosine(F.col("ce"), F.col("qe")).alias("sim"),
+        )
         .orderBy(F.col("sim").desc(), F.col("neighbor_id"))
         .limit(10)
     )
@@ -1623,7 +1621,7 @@ def q_token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a hex md5 (string compare identical everywhere).  Scale shape:
     one window (sort within stratum) — at 100 TB the per-stratum sort
     is the standard price of budgeted sampling; the cheaper preview is
-    deterministic_sample on a rate estimated from source_mix."""
+    sample.stratified_sample at rates estimated from source_mix."""
     d = _t(spark, sf_dir, "documents")
     from pyspark.sql import Window
 
@@ -2357,11 +2355,10 @@ def _sql_cell(planes: int, seed: int = 42, qv: str = "vq") -> str:
 
 
 def q_embedding_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hyperplane-LSH near-dup candidate pairs with the engine-agnostic
-    integer bucketing (the xxhash64 float library variant
-    functions/dedup.py:embedding_neardup_candidates stays the default;
-    this entry is its oracle-checkable twin — same bucketed equi-join
-    shape, never all-pairs)."""
+    """Hyperplane-LSH near-dup candidate pairs over the embeddings,
+    bucketed by similarity.hyperplane_code_int (md5-derived integer
+    planes, so DuckDB recomputes every bucket exactly): one bucketed
+    equi-join, never all-pairs."""
     from hetman_spark.functions.similarity import hyperplane_code_int
 
     e = _t(spark, sf_dir, "embeddings")
@@ -2476,9 +2473,8 @@ JOIN qe y ON y.vec_id = p.id_b
 
 
 def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF probe, integer-exact: cells + quantized-dot ranking (see
-    similarity.ivf_topk_quantized; the float-cosine ivf_topk is the
-    full-precision library path)."""
+    """IVF probe, integer-exact: cells + quantized-dot ranking
+    (similarity.ivf_topk_quantized)."""
     from hetman_spark.functions.similarity import ivf_topk_quantized
 
     e = _t(spark, sf_dir, "embeddings")

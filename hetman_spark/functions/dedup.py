@@ -455,8 +455,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iters: int = 25,
-    check_every: int = 1,
-    stats: dict | None = None,
 ) -> DataFrame:
     """(node, component) for every node that appears in `pairs`;
     component = the MINIMUM node id reachable in the undirected pair
@@ -494,21 +492,11 @@ def connected_components(
     commutative); raises if max_iters rounds don't converge (2^25
     chain depth) rather than returning a half-merged clustering.
 
-    check_every: fingerprint-collect cadence.  Labels are monotone
-    non-increasing, so a fingerprint unchanged across k rounds proves
-    NOTHING moved in any of them — skipping checks never falsely
-    converges.  MEASURED (r4 VERDICT #6 asked for cadence 2; BENCH.md
-    'dedup-family record'): at 200k docs / 353k pairs, check_every=2
-    detects convergence 2 rounds LATE (rounds 8 -> 10) and the extra
-    rounds (~1 s each: two keyed joins + localCheckpoint) cost 5-10x
-    the saved fingerprint collects (~0.1 s narrow agg each): wall
-    10.2 s -> 12.1 s.  The ratio only worsens with data (rounds
-    shuffle, fingerprints partial-aggregate), so the default stays 1;
-    the knob remains for deployments where driver RTT genuinely
-    dominates a round (very small graphs on a remote cluster manager).
-
-    stats: pass a dict to receive {"rounds": n, "checks": m} back
-    (bench instrumentation; BENCH.md dedup-family record).
+    The fingerprint is collected every round.  Checking every second
+    round (BENCH.md 'dedup-family record', 200k docs / 353k pairs)
+    detected convergence 2 rounds late (8 -> 10), and the extra rounds
+    (~1 s each: two keyed joins + localCheckpoint) cost 5-10x the
+    saved collects (~0.1 s each): wall 10.2 s -> 12.1 s.
     """
     a, b = F.col(src).alias("v"), F.col(dst).alias("u")
     # checkpoint the edge list: it joins into EVERY round, and without
@@ -537,7 +525,7 @@ def connected_components(
 
     fingerprint = fp(labels)
 
-    for it in range(max_iters):
+    for _ in range(max_iters):
         nbr_min = (
             edges.join(labels.withColumnRenamed("v", "u").withColumnRenamed("label", "lu"), "u")
             .groupBy("v")
@@ -557,15 +545,10 @@ def connected_components(
             .select(F.col("v"), F.col("label2").alias("label"))
         )
         labels = jumped.localCheckpoint(eager=True)
-        if stats is not None:
-            stats["rounds"] = it + 1
-        if (it + 1) % check_every == 0 or it == max_iters - 1:
-            if stats is not None:
-                stats["checks"] = stats.get("checks", 0) + 1
-            new_fp = fp(labels)
-            if new_fp == fingerprint:
-                return labels.select("v", F.col("label").alias("component"))
-            fingerprint = new_fp
+        new_fp = fp(labels)
+        if new_fp == fingerprint:
+            return labels.select("v", F.col("label").alias("component"))
+        fingerprint = new_fp
     raise RuntimeError(
         f"connected_components did not converge in {max_iters} rounds "
         "(pathological chain > 2^25 deep?)"
@@ -589,59 +572,6 @@ def dedup_clusters(
             F.sort_array(F.collect_list("v")).alias("member_ids"),
             (F.count(F.lit(1)) - 1).alias("n_removable"),
         )
-    )
-
-
-def embedding_neardup_candidates(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    planes: int = 12,
-    seed: int = 42,
-    max_bucket_size: int | None = 10_000,
-) -> DataFrame:
-    """Near-duplicate candidates over an embedding column via
-    random-hyperplane LSH: sign pattern of `planes` fixed pseudo-random
-    hyperplanes forms the bucket; same bucket => candidate pair.
-
-    Hyperplane components are derived from xxhash64(seed, plane, dim) —
-    deterministic, no driver-side randomness, identical on any cluster.
-    """
-    dim_idx = F.sequence(F.lit(0), F.size(F.col(vec_col)) - 1)
-
-    def plane_sign(p: int) -> Column:
-        comps = F.transform(
-            dim_idx,
-            lambda d: (
-                F.pmod(F.xxhash64(F.lit(seed), F.lit(p), d), F.lit(2001)).cast("double") - 1000.0
-            )
-            / 1000.0,
-        )
-        dot = F.aggregate(
-            F.zip_with(F.col(vec_col).cast("array<double>"), comps, lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        return F.when(dot >= 0, F.lit("1")).otherwise(F.lit("0"))
-
-    bucket = F.concat(*[plane_sign(p) for p in range(planes)])
-    bucketed = df.select(F.col(id_col).alias("id"), bucket.alias("bucket"))
-    if max_bucket_size is not None:
-        # hot-bucket cap: a degenerate bucket (e.g. zero vectors, or a
-        # hyperplane set that fails to split a dense cluster) would
-        # emit k^2/2 pairs — drop buckets too large to be informative
-        ok = (
-            bucketed.groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .where(F.col("n") <= max_bucket_size)
-            .select("bucket")
-        )
-        bucketed = bucketed.join(ok, "bucket", "left_semi")
-    left, right = bucketed.alias("l"), bucketed.alias("r")
-    return (
-        left.join(right, "bucket")
-        .where(F.col("l.id") < F.col("r.id"))
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
     )
 
 

@@ -2,11 +2,11 @@
 columns with typed metadata.
 
 The Spark-side plumbing (schemas, batch shapes, partition hygiene,
-mapInPandas signatures) is real and tested; the codec work itself is
-STUBBED behind _decode_image/_decode_audio with deterministic fakes —
-the container has no image/audio libraries (Pillow, ffmpeg, librosa).
-Swap the stub bodies for real decoders on a cluster that has them;
-nothing else changes.
+mapInPandas signatures) is real and tested.  The one codec is the
+image decode, _decode_image: Pillow when it is importable, else a
+deterministic stub (the synthetic payloads of entry
+`multimodal_features` are not decodable images, and its DuckDB oracle
+recomputes the stub).  Audio and video rows carry metadata only.
 
 Design rules for binary-heavy tables at scale:
 - keep Arrow batches small (session sets maxRecordsPerBatch=2048;
@@ -45,20 +45,14 @@ def with_media_metadata(df: DataFrame, payload_col: str = "payload") -> DataFram
     )
 
 
-# import-guarded real codecs: Pillow/soundfile are absent in this
-# container (verified: ModuleNotFoundError), so the deterministic stubs
-# below are the default here — but a cluster that HAS the libraries
-# gets the real decode through the same code path, verified by the
-# skipif tests in tests/test_functions.py (r3 VERDICT Next-round #6).
+# import-guarded real codec: where Pillow is absent the deterministic
+# stub below is the default; where it is installed the real decode
+# runs through the same code path, verified by the skipif test in
+# tests/test_functions.py (r3 VERDICT Next-round #6).
 try:  # pragma: no cover - not importable in this container
     from PIL import Image as _PIL_Image
 except ImportError:
     _PIL_Image = None
-
-try:  # pragma: no cover - not importable in this container
-    import soundfile as _soundfile
-except ImportError:
-    _soundfile = None
 
 
 def _decode_image(payload: bytes, fmt: str, codec: str = "auto") -> tuple[int, int, int]:
@@ -78,23 +72,6 @@ def _decode_image(payload: bytes, fmt: str, codec: str = "auto") -> tuple[int, i
             return (im.width, im.height, len(im.getbands()))
     h = int.from_bytes(payload[:8].ljust(8, b"\0"), "little")
     return (64 + h % 1024, 64 + (h >> 10) % 1024, 3)
-
-
-def _decode_audio(payload: bytes, fmt: str, codec: str = "auto") -> tuple[int, float]:
-    """(sample_rate, duration_sec) — same guard structure as
-    _decode_image: real soundfile decode when importable, else the
-    deterministic stub."""
-    if payload is None:
-        raise NotImplementedError("audio decode requires a payload")
-    if codec == "sf" and _soundfile is None:
-        raise NotImplementedError("audio decode requires soundfile (not in this container)")
-    if codec in ("auto", "sf") and _soundfile is not None:
-        import io
-
-        with _soundfile.SoundFile(io.BytesIO(payload)) as snd:
-            return (snd.samplerate, round(len(snd) / snd.samplerate, 1))
-    h = int.from_bytes(payload[:8].ljust(8, b"\0"), "little")
-    return (16000, round(0.5 + (h % 600) / 10.0, 1))
 
 
 _IMAGE_FEATURES_SCHEMA = (

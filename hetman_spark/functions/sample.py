@@ -1,11 +1,13 @@
-"""Deterministic sampling for training-data pipelines.
+"""Deterministic stratified sampling for training-data pipelines.
 
 `df.sample()` draws from a per-partition RNG: the selected set changes
 with partitioning, cluster size, and retries — unusable when a corpus
 sample must be reproducible (data mixes, eval splits, decontamination
 holdouts).  The standard fix is HASH sampling: a doc is in the sample
-iff md5(key || salt) falls under a threshold.  Properties that matter
-at 10^12 docs:
+iff md5(key || salt) falls under a threshold.  stratified_sample is
+the one sampler (entry `stratified_sample`; a single rate for every
+row is `stratified_sample(df, {}, default_frac=f)`).  Properties that
+matter at 10^12 docs:
 
 - deterministic across runs, engines, cluster sizes, and retries;
 - pure per-row expression — no shuffle, no state, prunes with the scan;
@@ -32,13 +34,6 @@ def _hash_bucket(key: Column, salt: str) -> Column:
     return F.conv(
         F.substring(F.md5(F.concat(key.cast("string"), F.lit(salt))), 1, 8), 16, 10
     ).cast("long")
-
-
-def deterministic_sample(
-    df: DataFrame, frac: float, key_col: str = "doc_id", salt: str = "s0"
-) -> DataFrame:
-    """Bernoulli(frac) hash sample, reproducible everywhere."""
-    return df.where(_hash_bucket(F.col(key_col), salt) < int(frac * _BUCKETS))
 
 
 def stratified_sample(

@@ -1,17 +1,21 @@
 """Similarity search over an embedding column (array<float>).
 
-- cosine_topk: brute-force exact top-k (the baseline; one broadcast
-  of the query batch, no shuffle of the corpus).
-- ivf_topk: IVF-style scale path — corpus is pre-assigned to
-  centroids (deterministic hyperplane code or provided centroids);
-  queries probe only the nearest cells, so the scan is a partition-
-  pruned fraction of the corpus.
-- lsh_topk: hyperplane-LSH bucketed approximate top-k (reuses
-  dedup.embedding_neardup_candidates' bucketing).
+Each search operator has one implementation, the one its entry query
+runs and the DuckDB oracle checks:
 
-Dot products are pure JVM lambdas (zip_with + aggregate); a
-vectorized pandas/NumPy variant is provided for wide batches where
-BLAS beats codegen.
+- cosine: float cosine as a JVM expression (dot/norm over zip_with +
+  aggregate) — the brute-force top-k of entry `ann_cosine_topk`.
+- ivf_topk_quantized / ivf_topk_multiprobe: IVF probe over
+  hyperplane-LSH cells (hyperplane_code_int, md5-derived integer
+  planes) ranked by quantized integer dot products — BIGINT end to
+  end, so deterministic across engines and cluster sizes.
+- ivf_topk_trained, pq_topk, ivfpq_topk, ivfpq_topk_residual, sq8_topk:
+  trained-index and compressed-code ANN.
+- semdedup (near-dups within k-means clusters) and knn_label_vote
+  (label vote over a quantized top-k).
+
+All arithmetic stays in the engine except semdedup's per-cluster gram
+matrix (one applyInPandas group per cluster).
 """
 
 from __future__ import annotations
@@ -33,112 +37,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Exact top-k neighbors for each query row.
-
-    Plan: broadcast the (small) query set, evaluate cosine per
-    (corpus row x query) pair map-side, then per-query top-k via a
-    window.  The corpus is scanned once, never shuffled in full —
-    only (query_id, neighbor_id, sim) tuples reach the top-k shuffle,
-    and AQE handles any hot query.
-    """
-    from pyspark.sql import Window
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    )
-    scored = (
-        c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", cosine(F.col("cv"), F.col("qv")).alias("sim"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
-    )
-
-
-def hyperplane_code(vec: Column, planes: int = 8, seed: int = 42) -> Column:
-    """Deterministic IVF/LSH cell id: sign pattern of pseudo-random
-    hyperplanes (components from xxhash64 — no driver randomness)."""
-    dim_idx = F.sequence(F.lit(0), F.size(vec) - 1)
-
-    def components(p: int):
-        # closure factory — NOT a default arg: pyspark's transform
-        # treats a 2-param lambda as (element, index)
-        return F.transform(
-            dim_idx,
-            lambda d: (
-                F.pmod(F.xxhash64(F.lit(seed), F.lit(p), d), F.lit(2001)).cast("double") - 1000.0
-            )
-            / 1000.0,
-        )
-
-    code = F.lit(0).cast("long")
-    for p in range(planes):
-        dot_p = F.aggregate(
-            F.zip_with(vec.cast("array<double>"), components(p), lambda a, b: a * b),
-            F.lit(0.0), lambda acc, x: acc + x,
-        )
-        code = code.bitwiseOR(
-            F.shiftleft(F.when(dot_p >= 0, F.lit(1).cast("long")).otherwise(F.lit(0)), p)
-        )
-    return code
-
-
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    planes: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Approximate top-k: corpus bucketed by hyperplane cell
-    (pre-computable and persistable as a partition column at scale —
-    the IVF index); each query probes only its own cell.
-
-    Recall/latency trade via `planes` (2^planes cells).  At 100 TB the
-    cell column is written once (partitionBy(cell)), making the probe
-    a partition-pruned scan.
-    """
-    from pyspark.sql import Window
-
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-        hyperplane_code(F.col(vec_col), planes).alias("cell"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-        hyperplane_code(F.col(vec_col), planes).alias("cell"),
-    )
-    scored = (
-        c.join(F.broadcast(q), "cell")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", cosine(F.col("cv"), F.col("qv")).alias("sim"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
-    )
-
-
 def quantize_vec(vec: Column, scale: int = 1000) -> Column:
     """array<float> -> array<long> via floor(x*scale): the int8/int16
     quantization trick of production ANN indexes, used here to make
@@ -153,8 +51,8 @@ def quantize_vec(vec: Column, scale: int = 1000) -> Column:
 
 def _md5_component(salt: str, d: Column) -> Column:
     """Deterministic pseudo-random integer in [-1000, 1000] derived
-    from md5 — computable identically in any engine with md5 (the
-    xxhash64 variant in hyperplane_code is Spark-only)."""
+    from md5 — computable identically in any engine with md5 (an
+    xxhash64 component would be Spark-only)."""
     h6 = F.substring(F.md5(F.concat(F.lit(salt), d.cast("string"))), 1, 6)
     return F.pmod(F.conv(h6, 16, 10).cast("long"), F.lit(2001)) - F.lit(1000)
 
@@ -296,12 +194,11 @@ def ivf_topk_quantized(
     dim: int | None = None,
 ) -> DataFrame:
     """IVF probe with integer-exact arithmetic end-to-end: cells from
-    hyperplane_code_int, ranking by quantized dot product.  Same plan
-    shape as ivf_topk (broadcast queries, equi-join on cell, window
-    top-k) but every number is a BIGINT, so the result is
-    deterministic across engines AND cluster sizes — this is the
-    oracle-checkable twin; ivf_topk (float cosine) stays the
-    full-precision path."""
+    hyperplane_code_int, ranking by quantized dot product.  Plan shape:
+    broadcast queries, equi-join on cell, window top-k.  Every number
+    is a BIGINT, so the result is deterministic across engines AND
+    cluster sizes, and the DuckDB oracle checks it exactly (entry
+    `ivf_topk`)."""
     from pyspark.sql import Window
 
     c = corpus.select(
@@ -591,33 +488,6 @@ def ivf_topk_trained(
         .where(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "dot_q", "rank")
     )
-
-
-def cosine_topk_pandas(
-    corpus: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """BLAS path: one Arrow-batched pandas UDF computes the cosine of
-    every corpus row against a fixed query vector with NumPy (matrix
-    multiply per batch) — wins over per-element codegen for wide
-    vectors (d >= ~256)."""
-    import numpy as np
-
-    qv = np.asarray(query_vec, dtype="float64")
-    qn = float(np.linalg.norm(qv))
-
-    @F.pandas_udf("double")
-    def cos_udf(vs: pd.Series) -> pd.Series:
-        # float64 accumulation to match the JVM double path bit-for-bit
-        mat = np.stack(vs.to_numpy()).astype("float64")
-        sims = (mat @ qv) / (np.linalg.norm(mat, axis=1) * qn)
-        return pd.Series(sims)
-
-    scored = corpus.select(F.col(id_col).alias("neighbor_id"), cos_udf(F.col(vec_col)).alias("sim"))
-    return scored.orderBy(F.col("sim").desc(), F.col("neighbor_id")).limit(k)
 
 
 # ---------------------------------------------------------------------------
@@ -1144,9 +1014,9 @@ def semdedup(
     - assignment: map-side argmin vs packed from_json constants;
     - pair generation (pandas_gram=True, default): ONE shuffle keyed
       on the cluster id, then a per-cluster NumPy gram matrix in an
-      Arrow batch (the cosine_topk_pandas BLAS precedent — a dense
-      c_i x c_i integer matmul beats 64 codegen multiply-adds per
-      pair by ~7x measured at sf0.1); task granularity = cluster,
+      Arrow batch (a dense c_i x c_i integer matmul beats 64 codegen
+      multiply-adds per pair by ~7x measured at sf0.1); task
+      granularity = cluster,
       exactly the paper's unit of work.  pandas_gram=False keeps the
       pure-Catalyst self equi-join ON THE CELL KEY (never a global
       cross join) — ANSI-checked arithmetic, pytest-pinned to produce
@@ -1398,8 +1268,8 @@ def knn_label_vote(
     Scale shape: query batch broadcast, corpus scan map-side, one
     window per query for the top-k cut, one tiny groupBy(query,label)
     partial-agg for the vote.  At 100 TB with a large query set the
-    crossJoin becomes a blocked matrix multiply (cosine_topk_pandas);
-    the vote/aggregation shape is unchanged."""
+    crossJoin becomes a blocked matrix multiply; the vote/aggregation
+    shape is unchanged."""
     from pyspark.sql import Window
 
     q = queries.select(

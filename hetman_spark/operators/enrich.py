@@ -30,7 +30,6 @@ def salted_repartition(
     df: DataFrame,
     key: str,
     buckets: int,
-    n_partitions: int | None = None,
     salt_from: str | None = None,
 ) -> DataFrame:
     """Repartition on (key, salt): bounds any one partition to
@@ -42,12 +41,10 @@ def salted_repartition(
     pipeline — unique per row, so the salt is uniform).
     """
     if buckets <= 1:
-        args = [n_partitions] if n_partitions else []
-        return df.repartition(*args, F.col(key))
+        return df.repartition(F.col(key))
     src = salt_from or df.columns[0]
     salted = df.withColumn("_salt", F.pmod(F.xxhash64(F.col(src)), F.lit(buckets)))
-    args = [n_partitions] if n_partitions else []
-    return salted.repartition(*args, F.col(key), F.col("_salt")).drop("_salt")
+    return salted.repartition(F.col(key), F.col("_salt")).drop("_salt")
 
 
 def enrich_with_lookup(

@@ -18,7 +18,6 @@ from hetman_spark.functions.multimodal import (
     synth_media,
     with_media_metadata,
 )
-from hetman_spark.functions.similarity import cosine_topk, cosine_topk_pandas, ivf_topk
 from hetman_spark.functions.text import text_stats
 
 
@@ -94,31 +93,6 @@ def vectors(spark):
     return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
 
-def test_cosine_topk_exact(spark, vectors):
-    out = cosine_topk(vectors, vectors.filter("vec_id = 0"), k=3).collect()
-    assert [r["query_id"] for r in out] == [0, 0, 0]
-    assert out[0]["neighbor_id"] == 1  # identical direction -> sim ~1
-    assert out[0]["sim"] == pytest.approx(1.0, abs=1e-6)
-    assert out[0]["rank"] == 1
-
-
-def test_cosine_topk_pandas_matches_jvm(spark, vectors):
-    qv = vectors.filter("vec_id = 0").collect()[0]["embedding"]
-    jvm = cosine_topk(vectors, vectors.filter("vec_id = 0"), k=5).collect()
-    blas = cosine_topk_pandas(vectors.filter("vec_id != 0"), list(qv), k=5).collect()
-    assert [r["neighbor_id"] for r in jvm] == [r["neighbor_id"] for r in blas]
-    for a, b in zip(jvm, blas):
-        assert a["sim"] == pytest.approx(b["sim"], abs=1e-9)
-
-
-def test_ivf_topk_probes_own_cell(spark, vectors):
-    out = ivf_topk(vectors, vectors.filter("vec_id = 0"), k=5, planes=2)
-    rows = out.collect()
-    # query 0's strongest neighbor (vec 1, identical direction) shares
-    # every hyperplane sign, so IVF must find it
-    assert rows[0]["neighbor_id"] == 1
-
-
 def test_multimodal_plumbing(spark):
     media = with_media_metadata(synth_media(spark, 30))
     assert media.filter("n_bytes != 128").count() == 0  # 4 x 32-char md5 hex
@@ -188,28 +162,27 @@ def test_shingles_short_text_empty(spark):
     assert out[2] == ["one two three"]
 
 
-def test_deterministic_sample_nested_and_stable(spark):
-    from hetman_spark.functions.sample import deterministic_sample
+def test_stratified_sample_default_frac_nested_and_stable(spark):
+    """A sample at one rate for every row is stratified_sample with no
+    strata: the same md5 bucket decides it."""
+    from hetman_spark.functions.sample import stratified_sample
 
     pop = spark.range(2000).withColumnRenamed("id", "doc_id")
-    s10 = {r["doc_id"] for r in deterministic_sample(pop, 0.1).select("doc_id").collect()}
-    s20 = {r["doc_id"] for r in deterministic_sample(pop, 0.2).select("doc_id").collect()}
+
+    def draw(df, frac, **kw):
+        sample = stratified_sample(df, {}, default_frac=frac, **kw)
+        return {r["doc_id"] for r in sample.select("doc_id").collect()}
+
+    s10 = draw(pop, 0.1)
+    s20 = draw(pop, 0.2)
     # a 10% draw of 2000 keys lands near 200; sanity the rate
     assert 120 <= len(s10) <= 280
     # nested: the 10% draw is a strict subset of the 20% draw (same salt)
     assert s10 <= s20
     # deterministic: a second evaluation (different partitioning) is identical
-    again = {
-        r["doc_id"]
-        for r in deterministic_sample(pop.repartition(7), 0.1).select("doc_id").collect()
-    }
-    assert again == s10
+    assert draw(pop.repartition(7), 0.1) == s10
     # a different salt draws a (near-certainly) different set
-    other = {
-        r["doc_id"]
-        for r in deterministic_sample(pop, 0.1, salt="s1").select("doc_id").collect()
-    }
-    assert other != s10
+    assert draw(pop, 0.1, salt="s1") != s10
 
 
 def test_stratified_sample_rates(spark, docs):

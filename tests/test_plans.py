@@ -10,7 +10,7 @@ round-1 What's-wrong #2).
 from pyspark.sql import functions as F
 
 from hetman_spark.entry_queries import q_minhash_band_pairs
-from hetman_spark.functions.dedup import embedding_neardup_candidates, minhash_lsh_candidates
+from hetman_spark.functions.dedup import minhash_lsh_candidates
 
 
 def _physical_plan(df) -> str:
@@ -39,11 +39,6 @@ def test_minhash_band_pairs_entry_is_bucketed(spark, sf_dir):
 def test_minhash_lsh_library_is_bucketed(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     _assert_equi_join_only(minhash_lsh_candidates(docs))
-
-
-def test_embedding_lsh_is_bucketed(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    _assert_equi_join_only(embedding_neardup_candidates(emb))
 
 
 def test_ivf_trained_probe_is_bucketed_and_broadcast(spark, sf_dir):

@@ -5,8 +5,6 @@ process restart; a broken file keeps the old config.
 """
 
 import os
-import threading
-import time
 
 CFG_ONE_SINK = """
 targets:
@@ -24,9 +22,10 @@ CFG_TWO_SINKS = CFG_ONE_SINK + """      - url: sink://english
 """
 
 
-def test_config_hot_reload_between_batches(spark, tmp_path):
+def test_config_hot_reload_between_batches(spark, tmp_path, monkeypatch):
     from hetman_spark.config_yaml import load_config
-    from hetman_spark.plans.pipeline import run_pipeline
+    from hetman_spark.plans import pipeline
+    from hetman_spark.plans.checkpoint import read_manifest
     from hetman_spark.sources.webtext import write_webtext
 
     inp = str(tmp_path / "webtext")
@@ -36,31 +35,34 @@ def test_config_hot_reload_between_batches(spark, tmp_path):
     _gc, specs = load_config(str(cfg))
     manifest = tmp_path / "out" / "_manifest"
 
-    # rewrite the config once the first batches have committed —
-    # emulates an operator editing the file mid-run (SIGHUP analog)
-    def rewriter():
-        while not (manifest.is_dir() and len(os.listdir(manifest)) >= 2):
-            time.sleep(0.02)
-        cfg.write_text(CFG_TWO_SINKS % inp)
+    # rewrite the config right after the 2nd batch commits — emulates
+    # an operator editing the file mid-run (SIGHUP analog) at a known
+    # point, with no thread or sleep
+    commit_batch = pipeline.commit_batch
+    commits = []
 
-    t = threading.Thread(target=rewriter, daemon=True)
-    t.start()
-    res = run_pipeline(
+    def commit_then_rewrite(manifest_dir, record):
+        commit_batch(manifest_dir, record)
+        commits.append(record)
+        if len(commits) == 2:
+            cfg.write_text(CFG_TWO_SINKS % inp)
+
+    monkeypatch.setattr(pipeline, "commit_batch", commit_then_rewrite)
+    res = pipeline.run_pipeline(
         spark, inp, str(tmp_path / "out"),
         spec=specs[0],
         splits_per_commit=1,
         config_reload_path=str(cfg),
     )
-    t.join(timeout=5)
-
-    from hetman_spark.plans.checkpoint import read_manifest
 
     records = sorted(read_manifest(str(manifest)), key=lambda r: r["committed_at"])
     assert len(records) == 8
+    n_sinks = [len(e["rows_routed"]) for r in records for e in r["splits"].values()]
+    # records 1-2 ran under the 1-sink config; every batch after the
+    # rewrite fans out to 2 sinks
+    assert n_sinks == [1, 1, 2, 2, 2, 2, 2, 2]
     (first_sinks,) = (e["rows_routed"] for e in records[0]["splits"].values())
     (last_sinks,) = (e["rows_routed"] for e in records[-1]["splits"].values())
-    # the first committed split ran under the 1-sink config; the last
-    # ran after the rewrite and fans out to 2 sinks
     assert len(first_sinks) == 1
     assert len(last_sinks) == 2
     # both sink signatures are in the totals
